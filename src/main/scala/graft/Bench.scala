@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Benchmark harness — the driver's per-round performance gate.
   *
   * Output protocol (r5, driven by the r4 driver-bench forensics): the
@@ -31,7 +33,9 @@ object Bench {
     * artifact must prove which solver ran. */
   lazy val blasBackend: String =
     try dev.ludovic.netlib.blas.BLAS.getInstance.getClass.getSimpleName
-    catch { case _: Throwable => "unavailable" }
+    catch { // a missing netlib jar surfaces as NoClassDefFoundError
+      case NonFatal(_) | _: LinkageError => "unavailable"
+    }
 
   /** Locale-pinned %.3f: the f-interpolator honors the JVM default
     * locale, and a comma-decimal locale would turn every numeric field
@@ -312,10 +316,10 @@ object Bench {
       // the full map now also lands in this file, and the path is a
       // fixed-size headline field so any tail cut that keeps the
       // headline can reach all 225 per-query values)
-      s""""queries_file":"$queriesFile",""" +
+      s""""queries_file":${Json.quote(queriesFile)},""" +
       s""""runs":$runs,"suspect_stall":$stallsJ,"blas":"$blas",""" +
       s""""n_errors":$nErrors,"n_queries":$nQueries,"unit":"sec",""" +
-      s""""sf":"$sf","metric":"total","value":${f3(totalSec)}}"""
+      s""""sf":${Json.quote(sf)},"metric":"total","value":${f3(totalSec)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -348,7 +352,7 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
       spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] warmup failed: $e") }
     // storage-memory high-water sampler: a daemon polling the status
     // tracker, reset per query — post-hoc attribution for "late queries
     // measure GC pressure, not their plan" regressions
@@ -359,7 +363,7 @@ object Bench {
           val used = spark.sparkContext.statusTracker.getExecutorInfos
             .map(i => i.usedOnHeapStorageMemory + i.usedOffHeapStorageMemory).sum
           storagePeak.getAndAccumulate(used, math.max)
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(_) => () } // best-effort poll; next tick retries
         Thread.sleep(100)
       }
     })
@@ -465,7 +469,7 @@ object Bench {
       try spark.sparkContext.statusTracker.getExecutorInfos
         .map(i => i.usedOnHeapStorageMemory + i.usedOffHeapStorageMemory)
         .sum / (1024 * 1024)
-      catch { case _: Throwable => 0L }
+      catch { case NonFatal(_) => 0L }
     for (pass <- 1 to runs) {
     // pass-start canaries: the box-noise floor measured in the SAME
     // session minutes as the heavies they normalize (see canaries)
@@ -476,7 +480,7 @@ object Bench {
       // inflate every ratio-to-canary — the exact misattribution class
       // the canaries exist to prevent. Record the error in-band instead.
       val cerr = try { run(); None } catch {
-        case e: Throwable => Some(e.getClass.getSimpleName)
+        case NonFatal(e) => Some(e.getClass.getSimpleName)
       }
       val cdt = (System.nanoTime() - c0) / 1e9
       cerr match {
@@ -498,7 +502,7 @@ object Bench {
       // column out of a map-only query, timing the scan instead of the work
       val err =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           Some((e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse(""))
             .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(160))
         }
@@ -648,7 +652,7 @@ object Bench {
     // full contract line: complete per-query map (parses when stdout is
     // kept whole; its head is what a 2 KB tail cut sacrifices)
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":${Json.quote(sfDir)}}"""
     println(fullLine)
     // ALSO persist the full contract line to a file and advertise the path
     // in the tail-surviving headline (VERDICT r16 #2): a truncated stdout
@@ -663,7 +667,10 @@ object Bench {
           java.nio.file.Paths.get(queriesFile),
           (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
         java.nio.file.Paths.get(queriesFile).toAbsolutePath.toString
-      } catch { case _: Throwable => "" }
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] cannot write $queriesFile: $e")
+        ""
+      }
     // compact summary LAST — inside any tail window: top-10 slowest plus
     // every errored query, capped attribution maps, and the headline
     // fields at the very END of the line (see summaryLine's contract)

@@ -118,8 +118,8 @@ object YouTube {
     val top = ranks
       .withColumn("influence_score", round(col("pagerank"), 6))
       .orderBy(col("influence_score").desc, col("id")).limit(k)
-    // k keys semi-prune the videos scan, then the ≤k-row pruned dim is
-    // broadcast — never the full videos table (7.7M rows at reference scale)
+    // k keys prune the videos scan and the join runs on the driver over
+    // ≤k rows — never the full videos table (7.7M rows at reference scale)
     graft.ops.Joins.enrichWithPrunedDim(top, videos.select(col("id"), col("uploader")), "id")
       // k-row input by construction — single-task global rank window is intent
       .withColumn("rank", row_number().over(

@@ -103,7 +103,7 @@ object EdgeTier {
     lock.synchronized {
       if (!readMeta(dir).contains(fp)) build(spark, sfDir, dir, fp)
     }
-    spark.read.parquet(new File(dir, part).getAbsolutePath)
+    Tables.parquet(spark, new File(dir, part).getAbsolutePath)
   }
 
   private def build(spark: SparkSession, sfDir: String,

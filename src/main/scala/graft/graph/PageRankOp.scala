@@ -391,9 +391,9 @@ object PageRankOp {
     * top K (TakeOrderedAndProject — no global sort), enrich the K-row result
     * against the dimension table (replacing K driver-side point lookups),
     * and assign dense rank numbers. Enrichment goes through
-    * [[graft.ops.Joins.enrichWithPrunedDim]]: the K keys semi-prune the dim
-    * scan, so both broadcasts stay O(K) — broadcasting the full dim here
-    * would ship an unbounded table to every executor. Output schema mirrors
+    * [[graft.ops.Joins.enrichWithPrunedDim]]: the K keys prune the dim
+    * scan and the join runs on the driver over O(K) rows — the full dim is
+    * never shipped anywhere. Output schema mirrors
     * the reference cache record `{rank, ID, influence_score, uploader}`
     * (`run_pagerank_job.py:135-140`). */
   def topInfluencers(spark: SparkSession, edges: DataFrame, dim: DataFrame,

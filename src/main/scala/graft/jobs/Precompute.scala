@@ -23,7 +23,7 @@ import graft.serve.Caches
   */
 object Precompute {
 
-  /** run_pagerank_job: rank → top-K → broadcast enrichment → cache
+  /** run_pagerank_job: rank → top-K → pruned-dim enrichment → cache
     * `{rank, ID, influence_score, uploader}` (`run_pagerank_job.py:135-140`). */
   def pagerankJob(spark: SparkSession, sfDir: String, outDir: String, k: Int = 500): DataFrame = {
     val dim = Tables.part(spark, sfDir)

@@ -13,14 +13,15 @@ import org.apache.spark.sql.types.Metadata
   * StringIndexer ×2 (string user/item keys → dense ints, frequency-ordered)
   * → ALS(maxIter 10, regParam 0.1, coldStartStrategy drop, fixed seed) →
   * recommendForUserSubset(n users, 5 items) → explode the struct-array →
-  * broadcast dim joins to restore original keys → re-nest with
+  * pruned dim joins to restore original keys → re-nest with
   * collect_list. Floating-point training output is BLAS-sensitive, so
   * correctness is structural (tested invariants: 5 recs per user, all keys
   * resolve, score ordering), not value-equality — SURVEY.md §7.4.5.
   *
   * Scale: ALS is the one genuinely iterative-ML operator; spark.ml blocks
   * the factor matrices and checkpoints lineage. The dims built for join-back
-  * are distinct-key projections (small) → broadcast.
+  * are scanned with the recommended keys pushed down and joined on the
+  * driver ([[graft.ops.Joins.enrichWithPrunedDim]]).
   */
 object Recommend {
 
@@ -208,8 +209,8 @@ object Recommend {
     // R2: explode struct-array; J2: dim join back to original keys via the
     // pruned-dim pattern (the key dictionaries are sample-cardinality —
     // unbounded at scale — while the recs side is nUsers·nRecs rows, so the
-    // nUsers·nRecs keys semi-prune the dims and only the pruned ≤k-row
-    // results broadcast); A11: re-nest, list ordered by descending score.
+    // nUsers·nRecs keys prune the dim scans and the joins run on the driver
+    // over those rows); A11: re-nest, list ordered by descending score.
     val itemDim = indexed0.select(col("itemId").cast("int").as("itemId"), col("itemKey"))
       .dropDuplicates("itemId")
     val userDim = indexed0.select(col("userId").cast("int").as("userId"), col("userKey"))

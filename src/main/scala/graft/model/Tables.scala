@@ -1,6 +1,10 @@
 package graft.model
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 
 /** Canonical table access for the engine.
   *
@@ -21,7 +25,35 @@ object Tables {
     "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Read a parquet file or directory with the schema Spark would infer,
+    * taken from one footer read on the driver: `spark.read.parquet(path)`
+    * launches a Spark job per call to infer it, a fixed cost of every
+    * serve request. Like Spark's inference (no schema merging), it reads
+    * the first data file in path order, skipping `_`- and `.`-prefixed
+    * files, and takes Spark's row-metadata schema if the writer left one,
+    * else converts the parquet schema under the session conf (so
+    * `nanosAsLong` and the NTZ inference rules hold). */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    require(fs.exists(p), s"no parquet data at $path")
+    val status = fs.getFileStatus(p)
+    val file =
+      if (status.isFile) status
+      else fs.listStatus(p)
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.toString).headOption
+        .getOrElse(throw new IllegalArgumentException(s"no parquet data files in $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Normalize a timestamp column to TimestampType at the source boundary,
     * whatever encoding the fixture generation happened to emit. Two observed

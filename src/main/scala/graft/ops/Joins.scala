@@ -1,8 +1,10 @@
 package graft.ops
 
-import graft.Tier.PinOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Join operators — SURVEY.md §2.3 (J1–J3, S9).
   *
@@ -11,8 +13,8 @@ import org.apache.spark.sql.functions._
   * scan never shuffles; only fact-to-fact joins (the co-occurrence self-join
   * in graph.Edges) shuffle, and those shuffle on their join key so AQE can
   * split skewed partitions. The reference's driver-side `find_one` loop
-  * (`run_pagerank_job.py:124-140`) — K network round-trips — becomes a single
-  * broadcast hash join here.
+  * (`run_pagerank_job.py:124-140`) — K network round-trips — becomes one
+  * pruned dim scan joined on the driver ([[enrichWithPrunedDim]]).
   */
 object Joins {
 
@@ -32,21 +34,41 @@ object Joins {
         Aggregations.dsum(col("l_extendedprice")).as("revenue"))
       .orderBy(col("p_brand"))
 
-  /** Enrich a k-row result with an unbounded dimension, with every broadcast
-    * bounded by k. A left-outer join preserving the k-row side can only
-    * broadcast the dimension (the build side must be the non-preserved
-    * side), and broadcasting an unbounded dimension is a driver OOM at
-    * scale. So: (1) broadcast the k keys as a left-semi prune into the dim
-    * scan — at any dim size this caps the dim side at ≤k rows; (2) broadcast
-    * that pruned dim into the preserved left join. Two broadcasts, both
-    * O(k); the dim table itself is only ever scanned, never collected.
-    * The k-row side is pinned (eager localCheckpoint) so its plan — often an
-    * expensive upstream like a PageRank fixpoint — runs once, not once per
-    * use. */
+  /** Enrich a k-row result with an unbounded dimension, reading at most the
+    * dim rows that match its keys. Two Spark jobs, no exchange:
+    *   1. collect `small` once — its plan, often an expensive upstream like
+    *      a PageRank fixpoint, runs exactly once;
+    *   2. push its distinct non-null keys into the dim scan as an `isin`
+    *      filter and collect the pruned dim rows;
+    *   3. left-join the two on the driver.
+    * Driver memory is O(k), the bound the broadcast joins this replaced
+    * also needed; the dim table itself is only ever scanned. The result is
+    * a local frame with the USING-join column order (key, `small`'s other
+    * columns, then the dim's, nullable) in `small`'s row order. As in SQL,
+    * null keys never match and several dim rows per key multiply the row.
+    * Key types must match exactly: there is no implicit widening. */
   def enrichWithPrunedDim(small: DataFrame, dim: DataFrame, key: String): DataFrame = {
-    val pinned = small.pinTier
-    val pruned = dim.join(broadcast(pinned.select(col(key)).distinct()), Seq(key), "left_semi")
-    pinned.join(broadcast(pruned), Seq(key), "left")
+    val (kt, dt) = (small.schema(key).dataType, dim.schema(key).dataType)
+    require(kt == dt, s"enrichment key `$key`: $kt on the k-row side, $dt on the dim")
+    // binary keys collect as arrays, whose equality is by reference
+    def norm(v: Any): Any = v match { case b: Array[Byte] => b.toSeq; case x => x }
+    val ki = small.schema.fieldIndex(key)
+    val rest = small.schema.fields.indices.filterNot(_ == ki)
+    val dimRest = dim.columns.filterNot(_ == key)
+    val rows = small.collect()
+    val keys = rows.iterator.map(_.get(ki)).filter(_ != null).toSeq.distinctBy(norm)
+    val matches: Map[Any, Seq[Seq[Any]]] =
+      if (keys.isEmpty) Map.empty
+      else dim.filter(col(key).isin(keys: _*)).select((key +: dimRest).map(col): _*)
+        .collect().toSeq.groupMap(r => norm(r.get(0)))(_.toSeq.tail)
+    val unmatched = Seq(Seq.fill(dimRest.length)(null))
+    val joined = rows.toSeq.flatMap { r =>
+      val left = r.get(ki) +: rest.map(r.get)
+      matches.getOrElse(norm(r.get(ki)), unmatched).map(d => Row.fromSeq(left ++ d))
+    }
+    val schema = StructType((small.schema(key) +: rest.map(small.schema.fields(_))) ++
+      dimRest.map(c => dim.schema(c).copy(nullable = true)))
+    small.sparkSession.createDataFrame(joined.asJava, schema)
   }
 
   /** Anti join — entities with no matching facts (customers with no order
@@ -91,17 +113,15 @@ object Joins {
     churned.unionByName(retained).orderBy(col("cohort"), col("o_custkey"))
   }
 
-  /** S9/J3 — point lookup as a broadcast join: enrich a small top-K result
-    * with dimension attributes (replaces the reference's per-row
-    * `find_one` loop, `PageRank_Spark_v5.py:148-156`). The top-K side is 20
-    * rows; [[enrichWithPrunedDim]] keeps both broadcasts at 20 rows no
-    * matter how large customer grows. */
-  def enrichTopOrders(orders: DataFrame, customer: DataFrame, k: Int): DataFrame = {
-    val top = TopK.topOrdersByPrice(orders, k)
-    enrichWithPrunedDim(top,
+  /** S9/J3 — point lookup: enrich a top-K result with dimension attributes
+    * (replaces the reference's per-row `find_one` loop,
+    * `PageRank_Spark_v5.py:148-156`). k is clamped to [1, [[TopK.MaxK]]]
+    * because it bounds a driver collect; [[enrichWithPrunedDim]] reads at
+    * most k customer rows no matter how large customer grows, and keeps the
+    * top-K order, so no sort follows. */
+  def enrichTopOrders(orders: DataFrame, customer: DataFrame, k: Int): DataFrame =
+    enrichWithPrunedDim(TopK.topOrdersByPrice(orders, k),
       customer.select(col("c_custkey").as("o_custkey"), col("c_name"), col("c_mktsegment")),
       "o_custkey")
       .select(col("o_orderkey"), col("o_totalprice"), col("c_name"), col("c_mktsegment"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-  }
 }

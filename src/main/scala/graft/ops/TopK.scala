@@ -18,14 +18,21 @@ import org.apache.spark.sql.functions._
   */
 object TopK {
 
+  /** Hard ceiling on any user-supplied k: a k-row result is collected to the
+    * driver by the serve layer and by [[Joins.enrichWithPrunedDim]]. */
+  val MaxK = 1000
+
+  def clampK(k: Int): Int = math.max(1, math.min(k, MaxK))
+
   /** A2/O1 — top-K by attribute (`guiV5.py:526-537`: $sort views desc,
-    * $limit K, $project). */
+    * $limit K, $project). The GUI takes K from the user, so k is clamped
+    * to [1, [[MaxK]]]. */
   def topOrdersByPrice(orders: DataFrame, k: Int): DataFrame =
     orders
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderpriority"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(k)
+      .limit(clampK(k))
 
   /** O2 — report ordering: sort desc + limit over an aggregate
     * (`YoutubeNetworkAgg_Final.py:176,282-284`). */

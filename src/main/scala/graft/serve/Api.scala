@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Filters
+import graft.ops.TopK.clampK
 
 /** The interactive phase-2 query surface — the reference GUI's
   * "Frequency by search condition" page (`guiV5.py:649-710`: a form whose
@@ -15,8 +16,9 @@ import graft.ops.Filters
   * Serve-layer rules the reference's Streamlit callbacks follow implicitly
   * and this API enforces explicitly:
   *
-  *   - **k is clamped** to [1, MaxK]: a user-supplied page size can never
-  *     become an unbounded driver collect.
+  *   - **k is clamped** to [1, [[graft.ops.TopK.MaxK]]]: a user-supplied
+  *     page size can never become an unbounded driver collect. The ops
+  *     top-K entry points the GUI reaches directly apply the same clamp.
   *   - **Counting is one pruned scan**, not two: the reference runs
   *     `df.count()` then `filtered.count()` (`guiV5.py:254-256`) — two full
   *     passes. [[counts]] computes both in a single aggregate whose scan is
@@ -33,11 +35,14 @@ import graft.ops.Filters
   *     clamp on page depth keeps the bound honest.
   *   - **Cache reads are schema-validated** before serving ([[Caches.read]]),
   *     so a stale or foreign cache fails fast instead of rendering nulls.
+  *   - **Cache reads resolve the schema from one footer, no Spark job**
+  *     ([[graft.model.Tables.parquet]]): Spark's own schema inference
+  *     launches a job per read, a fixed cost on every report request.
+  *   - **Enrichment is a pruned scan plus a driver-side join**
+  *     ([[graft.ops.Joins.enrichWithPrunedDim]]): two jobs, no broadcast
+  *     and no pin, for any k-row result.
   */
 object Api {
-
-  /** Hard ceiling on any page size a caller can request. */
-  val MaxK = 1000
 
   /** The GUI's fixed table size (`guiV5.py:261`: top 200 by views). */
   val DefaultK = 200
@@ -56,8 +61,6 @@ object Api {
       minViews: Option[Long] = None,
       k: Int = DefaultK,
       page: Int = 0)
-
-  def clampK(k: Int): Int = math.max(1, math.min(k, MaxK))
 
   def clampPage(p: Int): Int = math.max(0, math.min(p, MaxPage))
 

@@ -16,9 +16,11 @@ object Caches {
     result.coalesce(1).write.mode("overwrite").parquet(path)
 
   /** S8 — read back with the reference's required-column validation
-    * (`guiV5.py:72-78`): missing columns fail fast at serve time. */
+    * (`guiV5.py:72-78`): missing columns fail fast at serve time. The
+    * schema is the file's own, from one footer read on the driver
+    * ([[graft.model.Tables.parquet]]), so the read launches no Spark job. */
   def read(spark: SparkSession, path: String, requiredColumns: Seq[String]): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = graft.model.Tables.parquet(spark, path)
     requireColumns(df, path, requiredColumns)
     df
   }

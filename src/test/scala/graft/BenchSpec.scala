@@ -124,6 +124,20 @@ class BenchSpec extends AnyFunSuite {
       """"q_standing_index_gate_number_40":{"build":8.400,"recommend":0.400,"train":6.000,"probe":1.500}"""))
   }
 
+  test("a queries_file path with a quote and a backslash still parses") {
+    val hostile = "/tmp/a\"b\\c/bench_queries.json"
+    val line = Bench.summaryLine(
+      totalSec = 1.5, nQueries = 1, nErrors = 0, runs = 1, blas = "VectorBLAS",
+      gcMsTotal = 0, gcMsSweep = 0, drainMs = 0, gcSweeps = 0, gcSweepEvery = 0,
+      stalls = Nil, tierBuild = Nil, split = Nil, topGc = Nil,
+      topQueries = Seq("q_one" -> 1.5), errors = Nil,
+      sf = "/data/sf\"0.1", queriesFile = hostile)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(node.get("queries_file").asText() == hostile)
+    assert(node.get("sf").asText() == "/data/sf\"0.1")
+    assert(node.get("value").asDouble() == 1.5)
+  }
+
   test("the summary line is one valid JSON object") {
     val node = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(bloatedLine)

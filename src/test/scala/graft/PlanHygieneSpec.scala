@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftest.Listeners
+import org.apache.spark.sql.execution.{FilterExec, FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Automated plan hygiene: the properties the judge (and a 100 TB cluster)
   * cares about, asserted on the formatted physical plan so regressions break
@@ -35,14 +39,37 @@ class PlanHygieneSpec extends SparkSpec {
     assert(!readSchemas.contains("text"), s"payload column not pruned:\n$readSchemas")
   }
 
-  test("point-lookup enrichment broadcasts only k-bounded sides") {
-    val p = plan("q_point_lookup")
-    // semi-prune of the dim by the k keys, then broadcast of the pruned dim:
-    // two broadcast hash joins, no shuffle join anywhere
-    assert(p.contains("BroadcastHashJoin"), s"no broadcast join in:\n$p")
-    assert(p.contains("LeftSemi"), s"dim scan not semi-pruned by the k keys:\n$p")
-    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
-      s"unbounded shuffle join in a k-row enrichment:\n$p")
+  test("point-lookup enrichment scans only the k keys' dim rows, no shuffle join") {
+    // every plan q_point_lookup executes: the top-K collect and the
+    // key-pruned customer scan (the join itself runs on the driver)
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executed.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val k = 20
+    try {
+      assert(SparkEntry.queries("q_point_lookup")(spark, sf).collect().length == k)
+      Listeners.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = executed.asScala.toSeq
+    val texts = plans.map(_.explainString(FormattedMode))
+    assert(plans.nonEmpty, "q_point_lookup executed no plan")
+    texts.foreach { p =>
+      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
+        !p.contains("CartesianProduct"), s"unbounded join in a k-row enrichment:\n$p")
+    }
+    val dimScans = plans.zip(texts).filter(_._2.contains("customer.parquet"))
+    assert(dimScans.size == 1, s"expected one customer scan, got:\n${texts.mkString("\n")}")
+    val (dimPlan, dimText) = dimScans.head
+    val pushed = dimText.linesIterator.filter(_.contains("PushedFilters:")).mkString
+    assert(pushed.contains("In(c_custkey"), s"k keys not pushed into the dim scan:\n$dimText")
+    val dimRows = dimPlan.executedPlan.collect {
+      case f: FilterExec => f.metrics("numOutputRows").value
+    }
+    assert(dimRows.nonEmpty && dimRows.forall(n => n > 0 && n <= k),
+      s"dim rows collected: $dimRows (k = $k)")
   }
 
   test("star join broadcasts both dimension tables") {

@@ -3,6 +3,7 @@ package graft.serve
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.ops.TopK
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -52,9 +53,9 @@ class ApiSpec extends SparkSpec {
   }
 
   test("k clamps to [1, MaxK] and page depth to MaxPage") {
-    assert(Api.clampK(0) == 1)
-    assert(Api.clampK(-7) == 1)
-    assert(Api.clampK(1000000) == Api.MaxK)
+    assert(TopK.clampK(0) == 1)
+    assert(TopK.clampK(-7) == 1)
+    assert(TopK.clampK(1000000) == TopK.MaxK)
     assert(Api.clampPage(-1) == 0)
     assert(Api.clampPage(1000000) == Api.MaxPage)
     // a hostile k cannot make the page unbounded
