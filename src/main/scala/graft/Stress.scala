@@ -378,17 +378,17 @@ object Stress {
         // "broadcast":false} as proof)
         (if (want("pagerank_shuffle_branch")) Seq(
           timed("pagerank_shuffle_branch") {
-            spark.conf.set(graft.graph.StateBroadcast.ConfKey, "0")
+            spark.conf.set(graft.graph.Fixpoint.ConfKey, "0")
             try SparkEntry.queries("q_pagerank_parts")(spark, dir)
               .write.format("noop").mode("overwrite").save()
-            finally spark.conf.unset(graft.graph.StateBroadcast.ConfKey)
+            finally spark.conf.unset(graft.graph.Fixpoint.ConfKey)
           }) else Nil) ++
         (if (want("dup_clusters_shuffle_branch")) Seq(
           timed("dup_clusters_shuffle_branch") {
-            spark.conf.set(graft.graph.StateBroadcast.ConfKey, "0")
+            spark.conf.set(graft.graph.Fixpoint.ConfKey, "0")
             try SparkEntry.queries("q_dup_clusters")(spark, dir)
               .write.format("noop").mode("overwrite").save()
-            finally spark.conf.unset(graft.graph.StateBroadcast.ConfKey)
+            finally spark.conf.unset(graft.graph.Fixpoint.ConfKey)
           }) else Nil) ++
         // corpus-scale SemDeDup (nlist ≈ 4√n — the FAISS occupancy rule):
         // the n^1.5 class the production path actually runs, vs the
@@ -404,10 +404,10 @@ object Stress {
         // so the fallback branch is trend-checked, not dead code
         (if (want("boilerplate_shuffle_branch")) Seq(
           timed("boilerplate_shuffle_branch") {
-            spark.conf.set(graft.graph.StateBroadcast.ConfKey, "0")
+            spark.conf.set(graft.graph.Fixpoint.ConfKey, "0")
             try SparkEntry.queries("q_boilerplate")(spark, dir)
               .write.format("noop").mode("overwrite").save()
-            finally spark.conf.unset(graft.graph.StateBroadcast.ConfKey)
+            finally spark.conf.unset(graft.graph.Fixpoint.ConfKey)
           }) else Nil)) ++ {
           // standing-index economics (ShingleIndex scaladoc's scale claim):
           // the BUILD is ∝ corpus by design — measured as its own line so

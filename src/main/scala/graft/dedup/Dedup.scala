@@ -135,7 +135,7 @@ object Dedup {
     * passing a low threshold over a huge corpus would otherwise hand an
     * unbounded frame to `broadcast()`. The drop set is counted (one cheap
     * re-aggregate over the pinned tier) and sized against the shared
-    * [[graft.graph.StateBroadcast]] budget; past the budget the removal
+    * [[graft.graph.Fixpoint]] budget; past the budget the removal
     * falls back to a shuffled LEFT ANTI on the fingerprint — the plan a
     * billion-distinct-line threshold misuse would need — and Stress forces
     * that branch every run via the same `maxBroadcastBytes=0` switch the
@@ -149,10 +149,8 @@ object Dedup {
       .groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= maxLineDocFreq)
       .select(col("fp"))
-    val dropSide =
-      if (graft.graph.StateBroadcast.fits(dropFps, dropFps.count(),
-        "boilerplate_dropset")) broadcast(dropFps)
-      else dropFps
+    val dropSide = graft.graph.Fixpoint.broadcaster(dropFps, dropFps.count(),
+      "boilerplate_dropset")(dropFps)
     val kept = fps.join(dropSide, Seq("fp"), "left_anti")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_kept"),

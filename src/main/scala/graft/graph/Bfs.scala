@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * reached vertices join the cached (src-partitioned) edge list, so total
   * join work across all rounds is one pass over the edges reachable from
   * the seeds, not rounds × |E|. Frontier and visited-set joins broadcast
-  * under the [[StateBroadcast]] budget (same policy as every fixpoint
+  * under the [[Fixpoint]] budget (same policy as every fixpoint
   * here); past it they fall back to shuffle joins on the pre-partitioned
   * edge side. The frontier is pinned per round (it is both the next join
   * input and the early-exit probe), and the visited set accumulates as a
@@ -50,7 +50,7 @@ object Bfs {
     var h = 1
     while (h <= maxHops && frontierRows > 0) {
       def mb(df: DataFrame, rows: Long, tag: String): DataFrame =
-        if (StateBroadcast.fits(df, rows, tag)) broadcast(df) else df
+        Fixpoint.broadcaster(df, rows, tag)(df)
       val reached = e
         .join(mb(frontier.withColumnRenamed("id", "src"), frontierRows,
           s"bfs_frontier_$h"), Seq("src"))

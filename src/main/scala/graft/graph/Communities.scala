@@ -19,17 +19,18 @@ import org.apache.spark.sql.functions._
   * why the round count stays small).
   *
   * Scale shape: each round is one adjacency⋈labels equi-join (labels
-  * broadcast under the [[StateBroadcast]] budget), one
+  * broadcast under the [[Fixpoint]] budget), one
   * (vertex, label)-count hash aggregate — map-side combined — and one
   * per-vertex argmax as a max(struct) aggregate, NOT a row_number window
   * (the window would sort vertex-cardinality data per round; the struct
-  * max rides the same hash aggregate). Labels pinned every other round.
+  * max rides the same hash aggregate). Labels pinned every other round
+  * ([[Fixpoint.iterate]]; no convergence exit — LPA state can oscillate).
   */
 object Communities {
 
   /** Shared LPA internals: (final labels (id, label), pinned undirected
     * simple edge set, broadcast-or-not wrapper honoring the
-    * [[StateBroadcast]] budget) — one tier build feeding both the
+    * [[Fixpoint]] budget) — one tier build feeding both the
     * membership report ([[labelPropagation]]) and the quality score
     * ([[modularityReport]]). */
   private[graph] def lpaState(edges: DataFrame, rounds: Int)
@@ -42,12 +43,11 @@ object Communities {
     val verts = und.select(col("a").as("id"))
       .union(und.select(col("b").as("id"))).distinct().pinTier
     val nVerts = verts.count()
-    val bcast = StateBroadcast.fits(verts, nVerts, "lpa")
-    def mb(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    var labels = verts.select(col("id"), col("id").as("label"))
-    for (i <- 1 to rounds) {
-      val next = adj
-        .join(mb(labels.select(col("id").as("nbr"), col("label"))), Seq("nbr"))
+    val mb = Fixpoint.broadcaster(verts, nVerts, "lpa")
+    val labels = Fixpoint.iterate(verts.select(col("id"), col("id").as("label")),
+        rounds, 2, _.pinTier) { (l, _) =>
+      adj
+        .join(mb(l.select(col("id").as("nbr"), col("label"))), Seq("nbr"))
         .groupBy(col("id"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         // argmax with a total order: max over (cnt, −label) picks the most
@@ -55,7 +55,6 @@ object Communities {
         .groupBy(col("id"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("id"), (-col("m.nl")).as("label"))
-      labels = if (i % 2 == 0 || i == rounds) next.pinTier else next
     }
     (labels, und, mb)
   }

@@ -35,8 +35,8 @@ object Components {
     * round: a self-loop per vertex folds "min over self and neighbors" into
     * ONE join + ONE aggregate (no left-join back to the previous state, one
     * broadcast per round instead of two), rounds run two-at-a-time under a
-    * single eager checkpoint, and convergence is an order-independent
-    * `bit_xor(xxhash64(id, label))` signature — the same detector the star
+    * single eager checkpoint, and convergence is the order-independent
+    * [[Fixpoint.signature]] of (id, label) — the same detector the star
     * variant uses — checked once per two rounds. Labels only ever decrease,
     * so an unchanged signature means a fixed point (up to the same
     * negligible hash-collision odds the star variant already accepts). */
@@ -56,41 +56,20 @@ object Components {
     val edges = sym
       .unionByName(verts.select(col("id").as("src"), col("id").as("dst")))
       .repartition(col("dst")).cache()
-    // label-state partitioning sized to the vertex count, exactly as the
-    // PageRank fixpoint sizes rank state (PageRankOp.pageRank): iterating
-    // a few hundred labels across the full session fan-out is pure
-    // scheduler overhead, while real vertex counts scale it back up
-    val sc = pairs.sparkSession.sparkContext
-    val labelParts = math.max(1,
-      math.min(sc.defaultParallelism, (nVerts / 100000L).toInt + 1))
-    var labels = verts
-      .withColumn("label", col("id"))
-      .coalesce(labelParts)
-      .pinTier
-    // label state behind a localCheckpoint has unknown size statistics, so
-    // Catalyst would shuffle-join every round; we KNOW it is nVerts rows —
-    // broadcast below the safe threshold, exactly as the PageRank fixpoint
-    // does (PageRankOp.pageRank)
-    val bcast = StateBroadcast.fits(labels, nVerts, "cc_minlabel")
-    def maybeBcast(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    def round(l: DataFrame): DataFrame = edges
-      .join(maybeBcast(l.withColumnRenamed("id", "src")), Seq("src"))
-      .groupBy(col("dst").as("id"))
-      .agg(min(col("label")).as("label"))
-    def sigOf(l: DataFrame): Long =
-      l.agg(coalesce(expr("bit_xor(xxhash64(id, label))"), lit(0L)))
-        .head().getLong(0)
-    var prevSig: Option[Long] = None
-    var iter = 0
-    var done = nVerts == 0L
-    while (!done && iter < maxIter) {
-      val steps = math.min(2, maxIter - iter)
-      var next = labels
-      for (_ <- 1 to steps) next = round(next)
-      labels = next.coalesce(labelParts).pinTier
-      iter += steps
-      val s = sigOf(labels)
-      if (prevSig.contains(s)) done = true else prevSig = Some(s)
+    // label state partitioned to the vertex count and broadcast while it
+    // fits the budget: labels behind a localCheckpoint have unknown size
+    // statistics, so Catalyst alone would shuffle-join every round
+    val labelParts = Fixpoint.stateParts(sym, nVerts)
+    def pin(l: DataFrame): DataFrame = l.coalesce(labelParts).pinTier
+    val labels0 = pin(verts.withColumn("label", col("id")))
+    val maybeBcast = Fixpoint.broadcaster(labels0, nVerts, "cc_minlabel")
+    // an empty graph runs no rounds
+    val labels = Fixpoint.iterate(labels0, if (nVerts == 0L) 0 else maxIter,
+        2, pin, Seq("id", "label")) { (l, _) =>
+      edges
+        .join(maybeBcast(l.withColumnRenamed("id", "src")), Seq("src"))
+        .groupBy(col("dst").as("id"))
+        .agg(min(col("label")).as("label"))
     }
     edges.unpersist(blocking = false)
     labels.select(col("id"), col("label").as("component"))
@@ -109,38 +88,28 @@ object Components {
     *   large-star: every neighbor v > u re-points to min(N(u) ∪ {u});
     *   small-star: every neighbor v ≤ u re-points to min(N(u) ∪ {u}).
     * Fixpoint = the edge set is a union of stars centered on component
-    * minima; converged when a full round leaves the (count, hash-sum)
-    * signature unchanged. Output contract matches [[connectedComponents]]:
+    * minima; converged when a full round leaves the [[Fixpoint.signature]]
+    * of the edge set unchanged. Output contract matches [[connectedComponents]]:
     * (id, component-minimum) for every pair-touched vertex. */
   def connectedComponentsStar(pairs: DataFrame, a: String, b: String,
                               maxIter: Int = 30): DataFrame = {
-    var edges = pairs
+    val edges0 = pairs
       .select(col(a).as("u"), col(b).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
       .pinTier
-    // order-independent edge-set signature; bit_xor (not sum) because a
-    // hash sum overflows ANSI long arithmetic, and the edge set is distinct
-    // so xor cancellation of duplicates cannot occur
-    def sig(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var prev = (-1L, 0L)
-    var cur = sig(edges)
-    var iter = 0
+    val sig0 = Fixpoint.signature(edges0, "u", "v")
     // the star-minimum tables are bounded by the vertex count (≤ 2×edges);
     // while their estimated bytes fit the configured budget, broadcast
     // them into the per-round joins — the checkpointed edge set has
     // unknown stats, so Catalyst would otherwise shuffle-join every
-    // alternation (same byte-budget rule as PageRank, StateBroadcast)
-    val bcast = StateBroadcast.fits(edges, cur._1, "cc_star")
-    def maybeBcast(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    while (cur != prev && iter < maxIter) {
+    // alternation
+    val maybeBcast = Fixpoint.broadcaster(edges0, sig0._1, "cc_star")
+    val edges = Fixpoint.iterate(edges0, maxIter, 1, _.pinTier,
+        Seq("u", "v"), Some(sig0)) { (e, _) =>
       // large-star: symmetrize, find each vertex's minimum incident id,
       // re-point every LARGER neighbor at it (m ≤ u < v, so no self-loops)
-      val sym = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
+      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       val lmin = sym.groupBy(col("u"))
         .agg(min(least(col("v"), col("u"))).as("m"))
       val large = sym.join(maybeBcast(lmin), Seq("u"))
@@ -152,15 +121,11 @@ object Components {
       val dir = large.select(
         greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       val smin = dir.groupBy(col("u")).agg(min(col("v")).as("m"))
-      edges = dir.join(maybeBcast(smin), Seq("u"))
+      dir.join(maybeBcast(smin), Seq("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .unionByName(smin.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
         .distinct()
-        .pinTier
-      prev = cur
-      cur = sig(edges)
-      iter += 1
     }
     val sym = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
     sym.groupBy(col("u"))

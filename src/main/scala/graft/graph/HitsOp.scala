@@ -21,9 +21,11 @@ import org.apache.spark.sql.functions._
   * of an unnormalized double stays ≤ ~(max degree)^20 ≪ 1e308, far from
   * overflow at any plausible degree.
   *
-  * Scale shape (the [[PageRankOp.pageRank]] pattern): the edge list is
+  * Scale shape (the [[PageRankOp.pageRank]] pattern, on the shared
+  * [[Fixpoint]] helpers — HITS keeps its own loop because it carries two
+  * states and pins only one mid-run): the edge list is
   * cached and reused by all 2·numIter joins; the score state broadcasts
-  * while it fits [[StateBroadcast]]'s byte budget (state tables behind
+  * while it fits the [[Fixpoint]] byte budget (state tables behind
   * localCheckpoints have unknown stats, so Catalyst alone would shuffle
   * every round) and falls back to shuffle joins beyond it; lineage is
   * truncated every other round — per-round pinning doubles materialization
@@ -44,13 +46,9 @@ object HitsOp {
       .select(col("id"), lit(1.0).as("val"))
       .pinTier
     val nVerts = init.count()
-    val sc = init.sparkSession.sparkContext
-    val stateParts = math.max(1,
-      math.min(sc.defaultParallelism, (nVerts / 100000L).toInt + 1))
+    val stateParts = Fixpoint.stateParts(init, nVerts)
     val verts = init.select(col("id"))
-    val bcastState = StateBroadcast.fits(init, nVerts, "hits")
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (bcastState) broadcast(df) else df
+    val maybeBcast = Fixpoint.broadcaster(init, nVerts, "hits")
 
     // one half-step: scores flow across the edges from `from` to `to`
     // (auth step: from=src, to=dst; hub step: the reverse). The state a
@@ -75,17 +73,12 @@ object HitsOp {
       // only the HUB state needs truncation mid-run (auth is consumed by
       // the very next half-step inside the same lineage window); auth is
       // pinned once at the end for its two final readers (sum + join)
-      if (i % 2 == 0 || i == numIter) hub = hub.coalesce(stateParts).pinTier
+      if (Fixpoint.pinRound(i, 2, numIter)) hub = hub.coalesce(stateParts).pinTier
       if (i == numIter) auth = auth.coalesce(stateParts).pinTier
     }
     edges.unpersist(blocking = false)
-    // empty graph / all-zero state: fall back to scale 1 instead of NaN
-    def sumOr1(df: DataFrame): Double = {
-      val r = df.agg(sum(col("val"))).head()
-      if (r.isNullAt(0) || r.getDouble(0) == 0.0) 1.0 else r.getDouble(0)
-    }
-    val aSum = sumOr1(auth)
-    val hSum = sumOr1(hub)
+    val aScale = Fixpoint.sumToN(auth, "val", nVerts)
+    val hScale = Fixpoint.sumToN(hub, "val", nVerts)
     // the deferred zero-fill: vertices that dropped out of either flow
     // state read 0.0 here, exactly what the per-round completion used to
     // materialize ten times
@@ -93,10 +86,8 @@ object HitsOp {
       .join(maybeBcast(auth), Seq("id"), "left")
       .join(maybeBcast(hub.withColumnRenamed("val", "hval")), Seq("id"), "left")
       .select(col("id"),
-        round(coalesce(col("val"), lit(0.0))
-          * lit(nVerts.toDouble / aSum), 6).as("authority"),
-        round(coalesce(col("hval"), lit(0.0))
-          * lit(nVerts.toDouble / hSum), 6).as("hub_score"))
+        round(coalesce(col("val"), lit(0.0)) * lit(aScale), 6).as("authority"),
+        round(coalesce(col("hval"), lit(0.0)) * lit(hScale), 6).as("hub_score"))
       .orderBy(col("authority").desc, col("id"))
       .limit(k)
     // k-row input by construction — single-task global rank window

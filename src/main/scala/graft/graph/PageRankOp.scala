@@ -1,11 +1,9 @@
 package graft.graph
 
 import graft.Tier.PinOps
-import org.apache.spark.graphx.{Edge => GxEdge, Graph => GxGraph}
-import org.apache.spark.graphx.lib.{PageRank => GxPageRank}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** PageRank — SURVEY.md §2.8 G3 (`PageRank_Spark_v5.py:102`:
   * `g.pageRank(resetProbability=0.15, maxIter=10)`).
@@ -15,49 +13,47 @@ import org.apache.spark.storage.StorageLevel
   * removed upstream, duplicate edges kept (multi-edges weight the walk),
   * GraphFrames/GraphX normalization (scores sum ≈ vertex count, not 1.0).
   *
-  * Catalyst cannot express a 10-step iterative fixpoint, so this is the one
-  * operator that leaves the SQL layer: GraphX Pregel supersteps over the
-  * edge RDD. String vertex ids are mapped to Long via `zipWithUniqueId`
-  * (stable bijection, no collision risk — SURVEY.md §7.4.2) and joined back
-  * after the run. Everything before and after the 10 supersteps stays in
+  * Execution: a pure DataFrame fixpoint on the shared [[Fixpoint]]
+  * scaffolding — per round one join of the cached transition-weight edges
+  * against the (broadcast-while-it-fits) contribution state plus one
+  * aggregate, lineage pinned every 3rd round and the last. Ids of any type
+  * run unmapped; everything before and after the rounds stays in
   * DataFrame land so scans remain pruned/pushed.
   */
 object PageRankOp {
+
+  /** Uniform transition weight 1/outDeg(src) from ONE window count over the
+    * src-partitioned edges (r16, guide §2.4 "share the exchange"): an
+    * outDeg aggregate + equi-join + repartition(src) spent two exchanges
+    * to land in the partitioning the window's single shuffle establishes
+    * — measured 0.44 s vs 1.13 s at sf0.1 (2.4M edges). */
+  private val outShare: Column =
+    lit(1.0) / count(lit(1)).over(Window.partitionBy(col("src")))
+
+  /** Distinct endpoints of an (src, dst) edge list. */
+  private def endpoints(e: DataFrame): DataFrame =
+    e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
 
   /** Core fixpoint, pure DataFrame: rank'(v) = resetProb + (1−resetProb) ·
     * Σ_{u→v} rank(u)/outDeg(u), `numIter` rounds from rank=1.0 — exactly
     * GraphX's static `PageRank.run` semantics (no dangling redistribution,
     * un-normalized reset term, multi-edge rows each carry weight), but
     * executed as Tungsten hash joins + aggregates instead of RDD Pregel:
-    * columnar, codegen'd, AQE-planned. Benched 4–8× faster than the GraphX
-    * leg on the same graph at sf0.1 (see [[runGraphX]], kept as the
-    * cross-validation oracle).
+    * columnar, codegen'd, AQE-planned. Benched 4–8× faster than GraphX on
+    * the same graph at sf0.1; GraphSpec cross-checks the two.
     *
-    * Scale notes: rank state is truncated each round with an eager
-    * localCheckpoint — without it the 10-round join lineage makes the plan
-    * exponentially expensive to analyze (on a cluster, prefer
-    * `checkpoint()` to a reliable store for fault tolerance). The per-round
-    * join broadcasts ranks while the vertex set is small; when both sides
-    * are large it becomes a shuffle join on src — pre-partitioning the
-    * weighted edge list by src and caching keeps its side of the exchange
-    * reusable. Works for any id type (long, string — no id mapping). */
+    * Scale notes: pinning bounds the join lineage, which would otherwise
+    * make the 10-round plan exponentially expensive to analyze (on a
+    * cluster, prefer `checkpoint()` to a reliable store for fault
+    * tolerance). The per-round join broadcasts the state while it fits the
+    * [[Fixpoint]] budget; past it the join shuffles on src, the cached
+    * weighted edges' standing partitioning. Works for any id type. */
   def pageRank(vertices: DataFrame, edges: DataFrame,
                numIter: Int = 10, resetProb: Double = 0.15,
                init: Option[DataFrame] = None): DataFrame = {
     // `init` (id, rank) warm-starts the fixpoint from prior rank state
-    // (see [[resumeLongIds]]). The transition weights come from ONE
-    // window count over the src-partitioned edges (r16, guide §2.4
-    // "share the exchange"): the former outDeg aggregate + equi-join +
-    // repartition(src) spent two exchanges and a second full edge pass
-    // to land in exactly the partitioning the window's single shuffle
-    // already establishes — measured 0.44 s vs 1.13 s at sf0.1 (2.4M
-    // edges, min of 3 interleaved reps). w = 1.0/count is bit-identical
-    // to the join's value, so the rank recurrence is unchanged.
-    val ew = edges.select(col("src"), col("dst"),
-        (lit(1.0) / count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-          .as("w"))
-      .cache()
+    // (see [[resumeLongIds]])
+    val ew = edges.select(col("src"), col("dst"), outShare.as("w")).cache()
     fixpointSumToN(vertices, ew, numIter, resetProb, "pagerank", init)
   }
 
@@ -79,8 +75,7 @@ object PageRankOp {
                        numIter: Int = 10, resetProb: Double = 0.15): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
       col("weight").cast("double").as("wt")).pinTier
-    val verts = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
+    val verts = endpoints(e)
     // per-source weight mass via ONE window sum over the src-partitioned
     // edges (the r16 pageRank ew rule — the join + repartition spent two
     // exchanges to reach the window's partitioning). Weights are integer
@@ -89,9 +84,7 @@ object PageRankOp {
     // outw > 0 guard survives as a filter for the degenerate all-zero
     // source a caller could feed (the old inner join dropped it).
     val ew = e.select(col("src"), col("dst"), col("wt"),
-        sum(col("wt")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src")))
-          .as("outw"))
+        sum(col("wt")).over(Window.partitionBy(col("src"))).as("outw"))
       .filter(col("outw") > 0.0)
       .select(col("src"), col("dst"), (col("wt") / col("outw")).as("w"))
       .cache()
@@ -101,7 +94,7 @@ object PageRankOp {
   /** The shared rank fixpoint over a prepared transition-weight edge list
     * `ew` (src, dst, w with Σ_out w = 1 per non-sink source), followed by
     * the GraphX sum-to-N normalization. Runs eagerly (checkpoints + the
-    * stats action), releasing `ew`'s cache before returning. */
+    * normalization action), releasing `ew`'s cache before returning. */
   private def fixpointSumToN(vertices: DataFrame, ew: DataFrame,
                              numIter: Int, resetProb: Double,
                              tag: String,
@@ -109,105 +102,77 @@ object PageRankOp {
     // numIter == 0 is the documented graceful no-op (ADVICE r16: the r16
     // require() broke resumeLongIds(extraIter = 0) — a plausible "admit
     // edges, keep ranks" call that used to return the re-normalized init
-    // state); the contribs-carried rounds below are skipped entirely and
-    // the init state flows straight to the sum-to-N normalization,
-    // exactly the pre-r16 zero-round semantics.
+    // state): the init state flows straight to the normalization.
     require(numIter >= 0,
       s"fixpointSumToN: need numIter >= 0, got numIter=$numIter")
-    // ONE eager materialization pins the vertex set AND initializes rank
-    // state AND supplies the vertex count — the count() below reads pinned
-    // partitions, so it is near-free instead of the extra full-lineage job
-    // a separate verts.cache()+count() used to pay. A warm start (`init0`)
-    // seeds known vertices from prior rank state; vertices the prior state
-    // never saw start at the cold 1.0.
-    val init = init0 match {
-      case Some(r0) => vertices.select(col("id")).distinct()
+    // A warm start (`init0`) seeds known vertices from prior rank state;
+    // vertices the prior state never saw start at the cold 1.0.
+    val ids = vertices.select(col("id")).distinct()
+    val init = (init0 match {
+      case Some(r0) => ids
         .join(r0.select(col("id"), col("rank").as("__r0")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__r0"), lit(1.0)).as("rank")).pinTier
-      case None => vertices.select(col("id")).distinct()
-        .select(col("id"), lit(1.0).as("rank")).pinTier
+        .select(col("id"), coalesce(col("__r0"), lit(1.0)).as("rank"))
+      case None => ids.select(col("id"), lit(1.0).as("rank"))
+    }).pinTier
+    val (ranks, nVerts) = rankFixpoint(ew, init, numIter, resetProb,
+      lit(resetProb), tag) { (ranks0, mb) =>
+      ew.join(mb(ranks0.withColumnRenamed("id", "src")), Seq("src"))
+        .select(col("dst"), (col("w") * col("rank")).as("wc"))
     }
-    // Size the per-round rank-state partitioning to the vertex count, not
-    // the session shuffle fan-out: 10 rounds × several stages of 32 tasks
-    // over a few thousand rows is pure scheduler overhead (measured 45%
-    // faster at sf0.1 with this); at real vertex counts the same formula
-    // scales the parallelism back up (~100k vertices per partition).
-    val nVerts = init.count()
-    val sc = init.sparkSession.sparkContext
-    val rankParts = math.max(1,
-      math.min(sc.defaultParallelism, (nVerts / 100000L).toInt + 1))
-    val verts = init.select(col("id"))
-    var ranks = init.coalesce(rankParts)
-    // Lineage is truncated every `checkpointEvery` rounds, not every round:
-    // each eager checkpoint is a full materialize-and-pin job, and a 2–3-join
-    // plan is still cheap for Catalyst to analyze — only the unbounded
-    // 10-round nesting is not. Measured ~25% faster than per-round
-    // checkpointing at sf0.1 with identical results.
-    val checkpointEvery = 3
-    // Rank state behind a localCheckpoint has UNKNOWN size statistics, so
-    // left to itself Catalyst plans every round as a full shuffle join even
-    // when the rank table is kilobytes. We KNOW the exact row count
-    // (nVerts) and the state schema, so broadcast the rank/contribution
-    // sides explicitly while their estimated bytes fit the configured
-    // budget (StateBroadcast) — each round then runs map-side over the
-    // cached weighted edges, and the only per-round shuffle left is the
-    // contribution aggregate. At billion-vertex scale the same test keeps
-    // the shuffle join; Stress forces that branch via the config every run.
-    val bcastRankState = StateBroadcast.fits(init, nVerts, tag)
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (bcastRankState) broadcast(df) else df
-    // ONE join per round instead of two (r16): round i's rank is a pure
-    // function of round i−1's CONTRIBUTION table — rank(u) = resetProb +
-    // (1−resetProb)·contrib(u), with contrib(u) = 0 for vertices nobody
-    // points at — so carrying the contribs as the round state lets the
-    // next round's edge join apply that formula inline (LEFT join, the
-    // coalesce(0) default standing in for the never-contributed
-    // vertices) and the verts completion join runs ONCE after the last
-    // round instead of once per round. Per-row arithmetic is the
-    // identical expression composition (resetProb + c·…, then ·w), so
-    // every partial product and sum is bit-for-bit the old recurrence's
-    // (verified: final Σrank matched to the last printed ulp at sf0.1).
-    // At scale this removes a vertex-sized exchange per round on the
-    // shuffle branch, and the surviving join keys on src — the cached
-    // weighted edges' standing partitioning (guide §2.4), so only the
-    // (vertex-sized) contribs side moves. Round 1 consumes the caller's
-    // init rank state directly (warm starts keep their semantics).
-    if (numIter >= 1) {
-      var contribs = ew
-        .join(maybeBcast(ranks.withColumnRenamed("id", "src")), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("w") * col("rank")).as("contrib"))
-      for (i <- 2 to numIter) {
-        if ((i - 1) % checkpointEvery == 0)
-          contribs = contribs.coalesce(rankParts).pinTier
-        contribs = ew
-          .join(maybeBcast(contribs.withColumnRenamed("id", "src")),
-            Seq("src"), "left")
-          .select(col("dst"), (col("w") *
-            (lit(resetProb) + lit(1.0 - resetProb)
-              * coalesce(col("contrib"), lit(0.0)))).as("wc"))
-          .groupBy(col("dst").as("id"))
-          .agg(sum(col("wc")).as("contrib"))
-      }
-      contribs = contribs.coalesce(rankParts).pinTier
-      ranks = verts
-        .join(maybeBcast(contribs), Seq("id"), "left")
-        .select(col("id"),
-          (lit(resetProb) + lit(1.0 - resetProb) * coalesce(col("contrib"), lit(0.0)))
-            .as("rank"))
-    }
-    ew.unpersist(blocking = false)
     // GraphX/GraphFrames normalize final scores to sum to the vertex count
     // (dangling vertices leak rank mass otherwise — SURVEY.md §2.8: top
     // reference score 442.8 ≫ 1 comes from exactly this normalization).
-    val stats = ranks.agg(sum(col("rank")).as("s"), count(lit(1)).as("n")).head()
-    val scale = stats.getLong(1).toDouble / stats.getDouble(0)
-    // the fixpoint ran eagerly (checkpoints + the stats action); the only
-    // explicit pin left to release is the weighted edge cache — vertex/rank
-    // state lives in localCheckpoints, which the ContextCleaner reclaims
-    // once the returned frame (whose lineage bottoms out at the final rank
-    // checkpoint) is dropped.
+    // Vertex/rank state lives in localCheckpoints, which the ContextCleaner
+    // reclaims once the returned frame is dropped.
+    val scale = Fixpoint.sumToN(ranks, "rank", nVerts)
     ranks.select(col("id"), (col("rank") * scale).as("pagerank"))
+  }
+
+  /** The rank recurrence [[pageRank]] and [[personalizedPageRank]] share,
+    * over the cached transition-weight edges `ew` and the pinned vertex
+    * state `init` (id plus the columns `reset` reads):
+    * rank_i(v) = reset(v) + (1−resetProb)·contrib_i(v) with
+    * contrib_i(v) = Σ_{u→v} w_uv·rank_{i−1}(u). `round1` yields the first
+    * round's (dst, wc) flows from the init state (and the broadcast
+    * wrapper); the two callers differ only there and in `reset`.
+    * Returns (id, rank) for every vertex of `init` — `init`'s own rank
+    * column at numIter = 0 — plus the vertex count, and releases `ew`.
+    *
+    * ONE join per round: round i's rank is a pure function of round
+    * i−1's CONTRIBUTION table (contrib = 0 for vertices nobody points at),
+    * so carrying the contribs as the round state lets the next round's
+    * edge join apply the rank formula inline (LEFT join, coalesce(0)
+    * standing in for the never-contributed vertices), and the vertex
+    * completion join runs ONCE after the last round. That join keys on
+    * src — the cached edges' standing partitioning — so on the shuffle
+    * branch only the vertex-sized contribs side moves. The state
+    * broadcasts while it fits the [[Fixpoint]] budget; lineage is pinned
+    * every 3rd round and the last. */
+  private def rankFixpoint(ew: DataFrame, init: DataFrame, numIter: Int,
+                           resetProb: Double, reset: Column, tag: String)
+                          (round1: (DataFrame, DataFrame => DataFrame) => DataFrame)
+      : (DataFrame, Long) = {
+    // the count reads init's pinned partitions: near-free
+    val nVerts = init.count()
+    val parts = Fixpoint.stateParts(init, nVerts)
+    val mb = Fixpoint.broadcaster(init, nVerts, tag)
+    def rank(contrib: Column): Column =
+      reset + lit(1.0 - resetProb) * coalesce(contrib, lit(0.0))
+    val state0 = init.coalesce(parts)
+    val contribs = Fixpoint.iterate(state0, numIter, 3,
+        _.coalesce(parts).pinTier) { (state, i) =>
+      val flows =
+        if (i == 1) round1(state, mb)
+        else ew.join(mb(state.withColumnRenamed("id", "src")), Seq("src"), "left")
+          .select(col("dst"), (col("w") * rank(col("contrib"))).as("wc"))
+      flows.groupBy(col("dst").as("id")).agg(sum(col("wc")).as("contrib"))
+    }
+    ew.unpersist(blocking = false)
+    val ranks =
+      if (numIter == 0) state0
+      else init.join(mb(contribs), Seq("id"), "left")
+        .select(col("id"), rank(col("contrib")).as("rank"))
+    (ranks, nVerts)
   }
 
   /** PageRank over an edge list with numeric ids (vertex set = edge
@@ -222,8 +187,7 @@ object PageRankOp {
     // 10-round plans small
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .pinTier
-    val verts = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
+    val verts = endpoints(e)
     pageRank(verts, e, numIter, resetProb)
   }
 
@@ -244,8 +208,7 @@ object PageRankOp {
                     resetProb: Double = 0.15): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .pinTier
-    val verts = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
+    val verts = endpoints(e)
     pageRank(verts, e, extraIter, resetProb,
       init = Some(prevRanks.select(col("id"), col("pagerank").as("rank"))))
   }
@@ -256,9 +219,8 @@ object PageRankOp {
     * seed-relative relevance score ("what co-occurs with THESE parts",
     * "what does this community reach"), emitted raw (no sum-to-N
     * normalization: PPR mass legitimately decays through dangling
-    * vertices, and the raw score IS the seed-affinity). Same fixpoint
-    * scaffolding as [[pageRank]] (cached weighted edges, StateBroadcast-
-    * guarded rank joins, lineage pinned every 3 rounds); the oracle
+    * vertices, and the raw score IS the seed-affinity). The same rank
+    * recurrence as [[pageRank]] ([[rankFixpoint]]); the oracle
     * unrolls the identical recurrence with a seed-conditional reset term.
     * Returns the top-k by score with a rank column. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
@@ -269,87 +231,34 @@ object PageRankOp {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long")).pinTier
     // transition weights from the single window count (the r16 pageRank
     // ew rule), with the SOURCE's seed flag riding the cached edge row —
-    // one broadcast join at prep, so the per-round fold below needs no
-    // seed lookup at all
-    val ew = e.select(col("src"), col("dst"),
-        (lit(1.0) / count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-          .as("w"))
+    // one broadcast join at prep, so the per-round fold needs no seed
+    // lookup at all
+    val ew = e.select(col("src"), col("dst"), outShare.as("w"))
       .join(broadcast(seeds.select(col("id").as("src"), lit(1).as("s"))),
         Seq("src"), "left")
       .select(col("src"), col("dst"), col("w"),
-        coalesce(col("s"), lit(0)).cast("double").as("seed_src"))
+        coalesce(col("s"), lit(0)).cast("double").as("seed"))
       .cache()
     // seed flag rides the vertex state (one broadcast join, not per-round)
-    val init = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
+    val init = endpoints(e)
       .join(broadcast(seeds.select(col("id"), lit(1).as("s"))), Seq("id"), "left")
       .select(col("id"), coalesce(col("s"), lit(0)).cast("double").as("seed"))
       .pinTier
-    val nVerts = init.count()
-    val sc = init.sparkSession.sparkContext
-    val stateParts = math.max(1,
-      math.min(sc.defaultParallelism, (nVerts / 100000L).toInt + 1))
-    val bcastState = StateBroadcast.fits(init, nVerts, "ppr")
-    def mb(df: DataFrame): DataFrame = if (bcastState) broadcast(df) else df
-    // one join per round (the r16 fixpointSumToN rule, seed-conditional
-    // reset): round i−1's rank is resetProb·seed(u) + (1−resetProb)·
-    // contrib(u) with contrib defaulting to 0, so the CONTRIBUTION table
-    // is the round state and the vertex completion join runs once at the
-    // end. rank₀ = 1[v∈S] = seed_src, so round 1 folds straight off the
-    // cached edges with no state join at all.
-    var contribs = ew
-      .select(col("dst"), (col("w") * col("seed_src")).as("wc"))
-      .groupBy(col("dst").as("id"))
-      .agg(sum(col("wc")).as("contrib"))
-    for (i <- 2 to numIter) {
-      if ((i - 1) % 3 == 0) contribs = contribs.coalesce(stateParts).pinTier
-      contribs = ew
-        .join(mb(contribs.withColumnRenamed("id", "src")), Seq("src"), "left")
-        .select(col("dst"), (col("w") *
-          (lit(resetProb) * col("seed_src")
-            + lit(1.0 - resetProb) * coalesce(col("contrib"), lit(0.0))))
-          .as("wc"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("wc")).as("contrib"))
+    // rank₀ = 1[v∈S] = the source's seed flag, so round 1 folds straight
+    // off the cached edges with no state join at all
+    val (ranks, _) = rankFixpoint(ew, init, numIter, resetProb,
+      lit(resetProb) * col("seed"), "ppr") { (_, _) =>
+      ew.select(col("dst"), (col("w") * col("seed")).as("wc"))
     }
-    contribs = contribs.coalesce(stateParts).pinTier
-    val ranks = init
-      .join(mb(contribs), Seq("id"), "left")
-      .select(col("id"),
-        (lit(resetProb) * col("seed")
-          + lit(1.0 - resetProb) * coalesce(col("contrib"), lit(0.0)))
-          .as("rank"))
-    ew.unpersist(blocking = false)
     val top = ranks
       .select(col("id"), round(col("rank"), 6).as("ppr"))
       .filter(col("ppr") > 0.0)
       .orderBy(col("ppr").desc, col("id"))
       .limit(k)
     top.withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
+        row_number().over(Window
           .orderBy(col("ppr").desc, col("id"))).cast("bigint"))
       .select(col("rank"), col("id"), col("ppr"))
-  }
-
-  /** GraphX Pregel leg — the reference's actual engine
-    * (GraphFrames→GraphX). Kept as the independent implementation that
-    * cross-validates [[pageRank]] in tests; the DataFrame path is the one
-    * wired into queries (faster, columnar, no RDD detour). */
-  def runGraphX(spark: SparkSession, edges: DataFrame,
-                numIter: Int = 10, resetProb: Double = 0.15): DataFrame = {
-    import spark.implicits._
-    val edgeRdd = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd
-      .map { case (s, d) => GxEdge(s, d, 1.0) }
-    val graph = GxGraph.fromEdges(edgeRdd, defaultValue = 1.0,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-    val ranks = GxPageRank.run(graph, numIter, resetProb).vertices
-    val out = ranks.toDF("id", "pagerank")
-    graph.unpersist(blocking = false)
-    out
   }
 
   /** Explicit-vertex-set variant (`PageRank_Spark_v5.py:65-97`): vertices
@@ -366,9 +275,10 @@ object PageRankOp {
   def runWithVertices(vertices: DataFrame, edges: DataFrame,
                       numIter: Int = 10, resetProb: Double = 0.15): DataFrame = {
     val v = vertices.select(col("id")).distinct().pinTier
-    // pin the filtered edge list: pageRank reads it twice (degree pass +
-    // weighted-edge join), and each read would otherwise re-run both
-    // semi-joins over the upstream edge lineage
+    // pin the filtered edge list: both semi-joins run once, eagerly, and
+    // pageRank's out-degree window (its single read, cached as the
+    // weighted edges) starts from truncated lineage instead of the
+    // upstream edge pipeline
     val e = edges
       .join(v.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
       .join(v.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
@@ -412,7 +322,7 @@ object PageRankOp {
       // k-row input by construction — the unpartitioned window is a single
       // task over ≤k rows, which is the intent (a global rank number).
       .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
+        row_number().over(Window
           .orderBy(col("influence_score").desc, col("id"))).cast("bigint"))
       .drop("pagerank")
   }

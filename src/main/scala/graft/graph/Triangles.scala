@@ -58,24 +58,23 @@ object Triangles {
     // Pinned tiers have unknown stats, so Catalyst alone would shuffle the
     // edge list against the (vertex-sized) degree table and shuffle the
     // wedge stream against the (edge-sized) closure side — the exact
-    // pathology the fixpoints solve with StateBroadcast. While the
+    // pathology the fixpoints solve with Fixpoint.broadcaster. While the
     // vertex/edge tables fit the broadcast budget the whole pipeline below
     // is ONE map-side pass over the wedge stream (no exchange touches the
     // Σ outDeg²-sized intermediate — the only thing that may not be
     // shuffled at scale); past the budget it degrades to shuffle joins,
     // which is the right call when the edge list itself is executor-sized.
-    val bcastDeg = StateBroadcast.fits(deg, 2L * nEdges, "triangles.deg")
-    val bcastEdges = StateBroadcast.fits(und, nEdges, "triangles.closure")
-    def mb(df: DataFrame, b: Boolean): DataFrame = if (b) broadcast(df) else df
+    val mbDeg = Fixpoint.broadcaster(deg, 2L * nEdges, "triangles.deg")
+    val bcastEdges = Fixpoint.fits(und, nEdges, "triangles.closure")
     // shuffle-path build side: per-partition hash map instead of the
     // default sort-merge — edge-sized builds are cheap, and the probe
     // side (the wedge stream) must never be SORTED (the ×32 spill)
-    def mbh(df: DataFrame, b: Boolean): DataFrame =
-      if (b) broadcast(df) else df.hint("shuffle_hash")
+    def mbh(df: DataFrame): DataFrame =
+      if (bcastEdges) broadcast(df) else df.hint("shuffle_hash")
     // orient by (degree, id): u -> v iff (deg(u), u) < (deg(v), v)
     val oriented = und
-      .join(mb(deg.select(col("id").as("a"), col("degree").as("da")), bcastDeg), Seq("a"))
-      .join(mb(deg.select(col("id").as("b"), col("degree").as("db")), bcastDeg), Seq("b"))
+      .join(mbDeg(deg.select(col("id").as("a"), col("degree").as("da"))), Seq("a"))
+      .join(mbDeg(deg.select(col("id").as("b"), col("degree").as("db"))), Seq("b"))
       .select(
         when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")),
@@ -104,7 +103,7 @@ object Triangles {
     // sort), where the default sort-merge would SORT both legs — at ×32
     // that sort, not the join itself, was the spill.
     val wedges = oriented
-      .join(mbh(oriented.withColumnsRenamed(Map("v" -> "w")), bcastEdges),
+      .join(mbh(oriented.withColumnsRenamed(Map("v" -> "w"))),
         Seq("u"))
       .filter(col("v") < col("w"))
     // Past the broadcast budget the exact semi join must shuffle its probe
@@ -144,7 +143,7 @@ object Triangles {
     // bloom-surviving wedges stream past it — a sort-merge semi join
     // would sort the whole probe side, which is the ×32 spill.
     val tris = closureProbe.join(
-      mbh(und.select(col("a").as("v"), col("b").as("w")), bcastEdges),
+      mbh(und.select(col("a").as("v"), col("b").as("w"))),
       Seq("v", "w"), "leftsemi")
     // each triangle credits all three corners
     val perVertex = tris
@@ -153,7 +152,7 @@ object Triangles {
     deg
       // same unknown-stats story as above: both sides are vertex-sized,
       // and without the hint the planner sort-merges two tiny tables
-      .join(mb(perVertex, bcastDeg), Seq("id"), "left")
+      .join(mbDeg(perVertex), Seq("id"), "left")
       .select(col("id"), col("degree"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
       .withColumn("clustering",
@@ -205,27 +204,26 @@ object Triangles {
       .unionAll(und.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("degree"))
       .pinTier
-    val bcastDeg = StateBroadcast.fits(deg, 2L * nEdges, "linkpred.deg")
-    val bcastEdges = StateBroadcast.fits(und, nEdges, "linkpred.closure")
-    def mb(df: DataFrame, b: Boolean): DataFrame = if (b) broadcast(df) else df
+    val mbDeg = Fixpoint.broadcaster(deg, 2L * nEdges, "linkpred.deg")
+    val mbEdges = Fixpoint.broadcaster(und, nEdges, "linkpred.closure")
     val adj = und.select(col("a").as("u"), col("b").as("v"))
       .unionAll(und.select(col("b").as("u"), col("a").as("v")))
     val pivotAdj = adj
-      .join(mb(deg.filter(col("degree") <= maxPivotDeg)
-        .select(col("id").as("u")), bcastDeg), Seq("u"), "leftsemi")
+      .join(mbDeg(deg.filter(col("degree") <= maxPivotDeg)
+        .select(col("id").as("u"))), Seq("u"), "leftsemi")
       .repartition(edges.sparkSession.sparkContext.defaultParallelism, col("u"))
       .pinTier // both wedge legs
     val common = pivotAdj
-      .join(mb(pivotAdj.withColumnsRenamed(Map("v" -> "w")), bcastEdges), Seq("u"))
+      .join(mbEdges(pivotAdj.withColumnsRenamed(Map("v" -> "w"))), Seq("u"))
       .filter(col("v") < col("w"))
       .groupBy(col("v"), col("w"))
       .agg(count(lit(1)).as("n_common"))
     val unlinked = common.join(
-      mb(und.select(col("a").as("v"), col("b").as("w")), bcastEdges),
+      mbEdges(und.select(col("a").as("v"), col("b").as("w"))),
       Seq("v", "w"), "left_anti")
     unlinked
-      .join(mb(deg.select(col("id").as("v"), col("degree").as("dv")), bcastDeg), Seq("v"))
-      .join(mb(deg.select(col("id").as("w"), col("degree").as("dw")), bcastDeg), Seq("w"))
+      .join(mbDeg(deg.select(col("id").as("v"), col("degree").as("dv"))), Seq("v"))
+      .join(mbDeg(deg.select(col("id").as("w"), col("degree").as("dw"))), Seq("w"))
       .select(col("v"), col("w"), col("n_common"),
         round(col("n_common").cast("double")
           / (col("dv") + col("dw") - col("n_common")), 4).as("jaccard"))
@@ -248,7 +246,7 @@ object Triangles {
     * Scale shape: each round is one semi-join of the edge list against the
     * survivor set plus one degree aggregate — edge-cardinality work per
     * round with map-side-combined counts; survivor state broadcasts under
-    * the [[StateBroadcast]] budget and the round count is a small fixed
+    * the [[Fixpoint]] budget and the round count is a small fixed
     * constant. Lineage pinned every other round (the fixpoint rule). */
   def kCore(edges: DataFrame, k: Int = 3, rounds: Int = 10): DataFrame =
     kCoreUnd(undirect(edges), k, rounds)
@@ -260,11 +258,16 @@ object Triangles {
     val nEdges = und.count()
     val allVerts = und.select(col("a").as("id"))
       .union(und.select(col("b").as("id"))).distinct().pinTier
-    val bcast = StateBroadcast.fits(allVerts, 2L * nEdges, "kcore")
-    def mb(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    var survivors = allVerts
+    val mb = Fixpoint.broadcaster(allVerts, 2L * nEdges, "kcore")
+    // the edges whose endpoints both survive
+    def live(survivors: DataFrame): DataFrame = und
+      .join(mb(survivors.select(col("id").as("a"))), Seq("a"), "leftsemi")
+      .join(mb(survivors.select(col("id").as("b"))), Seq("b"), "leftsemi")
+    def degrees(l: DataFrame): DataFrame = l.select(col("a").as("id"))
+      .unionAll(l.select(col("b").as("id")))
+      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
     // Early exit on convergence (r16): the survivor set only ever SHRINKS,
-    // so an unchanged (count, bit_xor(xxhash64(id))) signature across a
+    // so an unchanged [[Fixpoint.signature]] of the ids across a
     // pin (two rounds) proves survivors_{i} = survivors_{i−2} ⇒ the
     // intermediate round removed nothing ⇒ fixed point — every remaining
     // round is a no-op by the peel's own monotonicity, and the fixed-round
@@ -274,36 +277,10 @@ object Triangles {
     // the two-round-interval compare sound here (an oscillating fixpoint
     // like LPA would need consecutive-state compares). At sf0.1 the gate
     // graph converges by round 6 of 10 — two of five pin jobs skipped.
-    def sigOf(s: DataFrame): (Long, Long) = {
-      val r = s.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(id))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+    val survivors = Fixpoint.iterate(allVerts, rounds, 2, _.pinTier, Seq("id")) {
+      (s, _) => degrees(live(s)).filter(col("deg") >= k).select(col("id"))
     }
-    var prevSig: Option[(Long, Long)] = None
-    var i = 1
-    var converged = false
-    while (i <= rounds && !converged) {
-      val live = und
-        .join(mb(survivors.select(col("id").as("a"))), Seq("a"), "leftsemi")
-        .join(mb(survivors.select(col("id").as("b"))), Seq("b"), "leftsemi")
-      val next = live.select(col("a").as("id"))
-        .unionAll(live.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("id"))
-      if (i % 2 == 0 || i == rounds) {
-        survivors = next.pinTier
-        val s = sigOf(survivors)
-        if (prevSig.contains(s)) converged = true else prevSig = Some(s)
-      } else survivors = next
-      i += 1
-    }
-    val live = und
-      .join(mb(survivors.select(col("id").as("a"))), Seq("a"), "leftsemi")
-      .join(mb(survivors.select(col("id").as("b"))), Seq("b"), "leftsemi")
-    val coreDeg = live.select(col("a").as("id"))
-      .unionAll(live.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("core_degree"))
+    val coreDeg = degrees(live(survivors)).withColumnRenamed("deg", "core_degree")
     // in_core is MEMBERSHIP in the final survivor set — distinct from
     // having surviving edges (an unconverged survivor can hold zero edges
     // in the final subgraph; the fixed-round contract reports it in-core

@@ -338,9 +338,9 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "line_no", "line")
     val bcast = Dedup.boilerplateRemoval(lines, maxLineDocFreq = 5)
     val shuffled = try {
-      spark.conf.set(graft.graph.StateBroadcast.ConfKey, "0")
+      spark.conf.set(graft.graph.Fixpoint.ConfKey, "0")
       Dedup.boilerplateRemoval(lines, maxLineDocFreq = 5)
-    } finally spark.conf.unset(graft.graph.StateBroadcast.ConfKey)
+    } finally spark.conf.unset(graft.graph.Fixpoint.ConfKey)
     assert(bcast.exceptAll(shuffled).isEmpty &&
       shuffled.exceptAll(bcast).isEmpty,
       "broadcast and shuffled drop branches diverged")

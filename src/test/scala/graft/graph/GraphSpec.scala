@@ -98,7 +98,7 @@ class GraphSpec extends SparkSpec {
     val edges = Edges.partCoOccurrence(graft.model.Tables.lineitem(spark, sf))
       .select(col("src"), col("dst"))
     val df = PageRankOp.runLongIds(spark, edges).as[(Long, Double)].collect().toMap
-    val gx = PageRankOp.runGraphX(spark, edges).as[(Long, Double)].collect().toMap
+    val gx = GraphXPageRank.run(spark, edges).as[(Long, Double)].collect().toMap
     assert(df.keySet == gx.keySet)
     df.foreach { case (id, r) =>
       assert(math.abs(r - gx(id)) < 1e-6, s"vertex $id: df=$r gx=${gx(id)}")

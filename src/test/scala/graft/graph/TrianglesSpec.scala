@@ -34,7 +34,7 @@ class TrianglesSpec extends SparkSpec {
     val edges = Edges.partCoOccurrence(
       graft.model.Tables.lineitem(spark, sf))
     val want = Triangles.vertexTriangles(edges).collect().toSeq
-    val key = StateBroadcast.ConfKey
+    val key = Fixpoint.ConfKey
     spark.conf.set(key, "0")
     try {
       val got = Triangles.vertexTriangles(edges).collect().toSeq
