@@ -545,7 +545,7 @@ object Stress {
       val series = rows.map { case (m, ts) => m -> ts.find(_._1 == q).get._2 }
       val ratio = series.last._2 / series.head._2
       val pts = series.map { case (m, s) => s""""x$m":${r2(s)}""" }.mkString(",")
-      println(s"""{"query":"$q",$pts,"ratio_x${series.last._1}_vs_x$m0":${r2(ratio)}}""")
+      println(s"""{"query":${Json.quote(q)},$pts,"ratio_x${series.last._1}_vs_x$m0":${r2(ratio)}}""")
     }
     spark.stop()
   }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * (north-star scope; the reference has no dedup at all, SURVEY.md §2).
   *
   * Implementation is min-label propagation as a DataFrame fixpoint — the
-  * same execution shape as [[PageRankOp.pageRank]]: per round, every vertex
+  * execution shape of [[PageRankOp.pageRank]]'s rounds past the broadcast
+  * budget: per round, every vertex
   * takes the minimum label among itself and its neighbors; converged when a
   * round changes nothing. Rounds needed = graph diameter, and near-dup
   * graphs are shallow (clusters are quasi-cliques — a handful of rounds);

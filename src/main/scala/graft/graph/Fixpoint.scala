@@ -19,11 +19,14 @@ import org.apache.spark.sql.types._
   * Broadcast policy. Fixpoint state lives behind `localCheckpoint`s, whose
   * size statistics are UNKNOWN to Catalyst — left alone, every round plans
   * a full shuffle join even when the state is kilobytes. The fixpoints
-  * therefore decide the join strategy themselves, from BYTES shipped to
-  * every executor (not a raw row count): estimated from the state's schema
-  * (fixed-width types exactly, strings conservatively) and compared against
-  * a configurable budget, so a wide-row state stops broadcasting earlier
-  * and a narrow long/long state keeps the fast path longer.
+  * therefore decide themselves, from BYTES shipped to every executor (not
+  * a raw row count): estimated from the state's schema (fixed-width types
+  * exactly, strings conservatively) and compared against a configurable
+  * budget, so a wide-row state stops broadcasting earlier and a narrow
+  * long/long state keeps the fast path longer. Within the budget, the rank
+  * family keeps its state on the driver and broadcasts it as a primitive
+  * vector each round ([[RankKernel]]); the other fixpoints broadcast the
+  * state side of their per-round joins. Past it, all of them shuffle-join.
   *
   * Config: `spark.graft.fixpoint.maxBroadcastBytes` (default 32 MB — the
   * old 1M-row cutoff × ~32 B/row, and comfortably inside a 1 GiB-executor
@@ -103,8 +106,12 @@ private[graft] object Fixpoint {
     * dividing by zero — its scores are 0 (or absent) either way. */
   def sumToN(state: DataFrame, c: String, n: Long): Double = {
     val r = state.agg(sum(col(c))).head()
-    n.toDouble / (if (r.isNullAt(0) || r.getDouble(0) == 0.0) 1.0 else r.getDouble(0))
+    scaleToN(if (r.isNullAt(0)) 0.0 else r.getDouble(0), n)
   }
+
+  /** [[sumToN]]'s scale from an already computed `total`. */
+  def scaleToN(total: Double, n: Long): Double =
+    n.toDouble / (if (total == 0.0) 1.0 else total)
 
   /** The round loop: `rounds` applications of `step(state, round)` from
     * `state0`, pinning the state at the [[pinRound]] cadence with `pin`

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * of an unnormalized double stays ≤ ~(max degree)^20 ≪ 1e308, far from
   * overflow at any plausible degree.
   *
-  * Scale shape (the [[PageRankOp.pageRank]] pattern, on the shared
-  * [[Fixpoint]] helpers — HITS keeps its own loop because it carries two
+  * Scale shape (on the shared [[Fixpoint]] helpers — HITS keeps its own
+  * loop because it carries two
   * states and pins only one mid-run): the edge list is
   * cached and reused by all 2·numIter joins; the score state broadcasts
   * while it fits the [[Fixpoint]] byte budget (state tables behind

@@ -13,12 +13,14 @@ import org.apache.spark.sql.functions._
   * removed upstream, duplicate edges kept (multi-edges weight the walk),
   * GraphFrames/GraphX normalization (scores sum ≈ vertex count, not 1.0).
   *
-  * Execution: a pure DataFrame fixpoint on the shared [[Fixpoint]]
-  * scaffolding — per round one join of the cached transition-weight edges
-  * against the (broadcast-while-it-fits) contribution state plus one
-  * aggregate, lineage pinned every 3rd round and the last. Ids of any type
-  * run unmapped; everything before and after the rounds stays in
-  * DataFrame land so scans remain pruned/pushed.
+  * Execution: edge preparation (out-degree weights, vertex sets, seed
+  * flags) is DataFrame work, so scans stay pruned/pushed; the rounds run
+  * in [[rankFixpoint]]. While the rank state fits the [[Fixpoint]]
+  * broadcast budget it stays on the driver ([[RankKernel]]): the edges are
+  * packed once and each round is one Spark job. Past the budget each round
+  * is one DataFrame join plus aggregate on the shared [[Fixpoint]]
+  * scaffolding, lineage pinned every 3rd round and the last. Ids of any
+  * type run unmapped.
   */
 object PageRankOp {
 
@@ -34,26 +36,26 @@ object PageRankOp {
   private def endpoints(e: DataFrame): DataFrame =
     e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
 
-  /** Core fixpoint, pure DataFrame: rank'(v) = resetProb + (1−resetProb) ·
+  /** Core fixpoint: rank'(v) = resetProb + (1−resetProb) ·
     * Σ_{u→v} rank(u)/outDeg(u), `numIter` rounds from rank=1.0 — exactly
     * GraphX's static `PageRank.run` semantics (no dangling redistribution,
-    * un-normalized reset term, multi-edge rows each carry weight), but
-    * executed as Tungsten hash joins + aggregates instead of RDD Pregel:
-    * columnar, codegen'd, AQE-planned. Benched 4–8× faster than GraphX on
-    * the same graph at sf0.1; GraphSpec cross-checks the two.
+    * un-normalized reset term, multi-edge rows each carry weight), without
+    * RDD Pregel's per-superstep vertex/edge joins. GraphSpec cross-checks
+    * the two.
     *
-    * Scale notes: pinning bounds the join lineage, which would otherwise
-    * make the 10-round plan exponentially expensive to analyze (on a
-    * cluster, prefer `checkpoint()` to a reliable store for fault
-    * tolerance). The per-round join broadcasts the state while it fits the
-    * [[Fixpoint]] budget; past it the join shuffles on src, the cached
-    * weighted edges' standing partitioning. Works for any id type. */
+    * Scale notes: while the state fits the [[Fixpoint]] budget it stays on
+    * the driver and a round is one job over the packed edges; past it
+    * each round is a join that shuffles on src, the cached weighted
+    * edges' standing partitioning, and pinning bounds the join lineage,
+    * which would otherwise make the 10-round plan exponentially expensive
+    * to analyze (on a cluster, prefer `checkpoint()` to a reliable store
+    * for fault tolerance). Works for any id type. */
   def pageRank(vertices: DataFrame, edges: DataFrame,
                numIter: Int = 10, resetProb: Double = 0.15,
                init: Option[DataFrame] = None): DataFrame = {
     // `init` (id, rank) warm-starts the fixpoint from prior rank state
     // (see [[resumeLongIds]])
-    val ew = edges.select(col("src"), col("dst"), outShare.as("w")).cache()
+    val ew = edges.select(col("src"), col("dst"), outShare.as("w"))
     fixpointSumToN(vertices, ew, numIter, resetProb, "pagerank", init)
   }
 
@@ -87,14 +89,12 @@ object PageRankOp {
         sum(col("wt")).over(Window.partitionBy(col("src"))).as("outw"))
       .filter(col("outw") > 0.0)
       .select(col("src"), col("dst"), (col("wt") / col("outw")).as("w"))
-      .cache()
     fixpointSumToN(verts, ew, numIter, resetProb, "wpagerank")
   }
 
   /** The shared rank fixpoint over a prepared transition-weight edge list
     * `ew` (src, dst, w with Σ_out w = 1 per non-sink source), followed by
-    * the GraphX sum-to-N normalization. Runs eagerly (checkpoints + the
-    * normalization action), releasing `ew`'s cache before returning. */
+    * the GraphX sum-to-N normalization. Runs eagerly. */
   private def fixpointSumToN(vertices: DataFrame, ew: DataFrame,
                              numIter: Int, resetProb: Double,
                              tag: String,
@@ -114,65 +114,84 @@ object PageRankOp {
         .select(col("id"), coalesce(col("__r0"), lit(1.0)).as("rank"))
       case None => ids.select(col("id"), lit(1.0).as("rank"))
     }).pinTier
-    val (ranks, nVerts) = rankFixpoint(ew, init, numIter, resetProb,
-      lit(resetProb), tag) { (ranks0, mb) =>
-      ew.join(mb(ranks0.withColumnRenamed("id", "src")), Seq("src"))
+    rankFixpoint(ew, init, numIter, resetProb, lit(resetProb), col("rank"),
+      normalize = true, tag) { (edges, ranks0) =>
+      edges.join(ranks0.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst"), (col("w") * col("rank")).as("wc"))
-    }
-    // GraphX/GraphFrames normalize final scores to sum to the vertex count
-    // (dangling vertices leak rank mass otherwise — SURVEY.md §2.8: top
-    // reference score 442.8 ≫ 1 comes from exactly this normalization).
-    // Vertex/rank state lives in localCheckpoints, which the ContextCleaner
-    // reclaims once the returned frame is dropped.
-    val scale = Fixpoint.sumToN(ranks, "rank", nVerts)
-    ranks.select(col("id"), (col("rank") * scale).as("pagerank"))
+    }.withColumnRenamed("rank", "pagerank")
   }
 
   /** The rank recurrence [[pageRank]] and [[personalizedPageRank]] share,
-    * over the cached transition-weight edges `ew` and the pinned vertex
-    * state `init` (id plus the columns `reset` reads):
+    * over the transition-weight edges `ew` and the pinned vertex state
+    * `init` (id plus the columns `reset` and `rank0` read):
     * rank_i(v) = reset(v) + (1−resetProb)·contrib_i(v) with
-    * contrib_i(v) = Σ_{u→v} w_uv·rank_{i−1}(u). `round1` yields the first
-    * round's (dst, wc) flows from the init state (and the broadcast
-    * wrapper); the two callers differ only there and in `reset`.
-    * Returns (id, rank) for every vertex of `init` — `init`'s own rank
-    * column at numIter = 0 — plus the vertex count, and releases `ew`.
+    * contrib_i(v) = Σ_{u→v} w_uv·rank_{i−1}(u) and rank_0 = `rank0`.
+    * Returns (id, rank) for every vertex of `init` — rank_0 at numIter = 0
+    * — scaled to sum to the vertex count when `normalize` is set (GraphX/
+    * GraphFrames normalize so; dangling vertices leak rank mass otherwise,
+    * SURVEY.md §2.8: the reference's top score 442.8 ≫ 1 comes from
+    * exactly this normalization).
     *
-    * ONE join per round: round i's rank is a pure function of round
-    * i−1's CONTRIBUTION table (contrib = 0 for vertices nobody points at),
-    * so carrying the contribs as the round state lets the next round's
-    * edge join apply the rank formula inline (LEFT join, coalesce(0)
-    * standing in for the never-contributed vertices), and the vertex
-    * completion join runs ONCE after the last round. That join keys on
-    * src — the cached edges' standing partitioning — so on the shuffle
-    * branch only the vertex-sized contribs side moves. The state
-    * broadcasts while it fits the [[Fixpoint]] budget; lineage is pinned
-    * every 3rd round and the last. */
+    * While `init` fits the [[Fixpoint]] budget, the state stays on the
+    * driver: [[RankKernel]] packs the edges once and runs one Spark job per
+    * round, and the result is a local frame, so top-K and enrichment
+    * downstream need no shuffle. Past the budget the rounds are DataFrame
+    * rounds, see [[shuffleRounds]]. */
   private def rankFixpoint(ew: DataFrame, init: DataFrame, numIter: Int,
-                           resetProb: Double, reset: Column, tag: String)
-                          (round1: (DataFrame, DataFrame => DataFrame) => DataFrame)
-      : (DataFrame, Long) = {
+                           resetProb: Double, reset: Column, rank0: Column,
+                           normalize: Boolean, tag: String)
+                          (round1: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     // the count reads init's pinned partitions: near-free
     val nVerts = init.count()
+    if (Fixpoint.fits(init, nVerts, tag))
+      RankKernel.run(ew, init, numIter, resetProb, reset, rank0, normalize)
+    else {
+      // a null src never matches a vertex: without the filter the rounds'
+      // LEFT join would turn its edges into flows of the reset term
+      val ranks = shuffleRounds(ew.filter(col("src").isNotNull).cache(), init,
+        nVerts, numIter, resetProb, reset, rank0)(round1)
+      // rank state lives in localCheckpoints, which the ContextCleaner
+      // reclaims once the returned frame is dropped
+      if (!normalize) ranks
+      else {
+        val scale = Fixpoint.sumToN(ranks, "rank", nVerts)
+        ranks.select(col("id"), (col("rank") * scale).as("rank"))
+      }
+    }
+  }
+
+  /** [[rankFixpoint]] past the broadcast budget: ONE shuffle join per
+    * round over the cached edges `ew`, released before returning. `round1`
+    * yields the first round's (dst, wc) flows from `ew` and the init state;
+    * PageRank and PPR differ only there and in `reset`. Round i's rank is
+    * a pure function of round i−1's CONTRIBUTION table (contrib = 0 for
+    * vertices nobody points at), so carrying the contribs as the round
+    * state lets the next round's edge join apply the rank formula inline
+    * (LEFT join, coalesce(0) standing in for the never-contributed
+    * vertices), and the vertex completion join runs ONCE after the last
+    * round. That join keys on src — the cached edges' standing
+    * partitioning — so only the vertex-sized contribs side moves. Lineage
+    * is pinned every 3rd round and the last. */
+  private def shuffleRounds(ew: DataFrame, init: DataFrame, nVerts: Long,
+                            numIter: Int, resetProb: Double, reset: Column,
+                            rank0: Column)
+                           (round1: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val parts = Fixpoint.stateParts(init, nVerts)
-    val mb = Fixpoint.broadcaster(init, nVerts, tag)
     def rank(contrib: Column): Column =
       reset + lit(1.0 - resetProb) * coalesce(contrib, lit(0.0))
     val state0 = init.coalesce(parts)
     val contribs = Fixpoint.iterate(state0, numIter, 3,
         _.coalesce(parts).pinTier) { (state, i) =>
       val flows =
-        if (i == 1) round1(state, mb)
-        else ew.join(mb(state.withColumnRenamed("id", "src")), Seq("src"), "left")
+        if (i == 1) round1(ew, state)
+        else ew.join(state.withColumnRenamed("id", "src"), Seq("src"), "left")
           .select(col("dst"), (col("w") * rank(col("contrib"))).as("wc"))
       flows.groupBy(col("dst").as("id")).agg(sum(col("wc")).as("contrib"))
     }
     ew.unpersist(blocking = false)
-    val ranks =
-      if (numIter == 0) state0
-      else init.join(mb(contribs), Seq("id"), "left")
-        .select(col("id"), rank(col("contrib")).as("rank"))
-    (ranks, nVerts)
+    if (numIter == 0) state0.select(col("id"), rank0.as("rank"))
+    else init.join(contribs, Seq("id"), "left")
+      .select(col("id"), rank(col("contrib")).as("rank"))
   }
 
   /** PageRank over an edge list with numeric ids (vertex set = edge
@@ -238,17 +257,16 @@ object PageRankOp {
         Seq("src"), "left")
       .select(col("src"), col("dst"), col("w"),
         coalesce(col("s"), lit(0)).cast("double").as("seed"))
-      .cache()
     // seed flag rides the vertex state (one broadcast join, not per-round)
     val init = endpoints(e)
       .join(broadcast(seeds.select(col("id"), lit(1).as("s"))), Seq("id"), "left")
       .select(col("id"), coalesce(col("s"), lit(0)).cast("double").as("seed"))
       .pinTier
-    // rank₀ = 1[v∈S] = the source's seed flag, so round 1 folds straight
-    // off the cached edges with no state join at all
-    val (ranks, _) = rankFixpoint(ew, init, numIter, resetProb,
-      lit(resetProb) * col("seed"), "ppr") { (_, _) =>
-      ew.select(col("dst"), (col("w") * col("seed")).as("wc"))
+    // rank₀ = 1[v∈S] = the source's seed flag, so a DataFrame round 1
+    // folds straight off the cached edges with no state join at all
+    val ranks = rankFixpoint(ew, init, numIter, resetProb,
+      lit(resetProb) * col("seed"), col("seed"), normalize = false, "ppr") { (edges, _) =>
+      edges.select(col("dst"), (col("w") * col("seed")).as("wc"))
     }
     val top = ranks
       .select(col("id"), round(col("rank"), 6).as("ppr"))

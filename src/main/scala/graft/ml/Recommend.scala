@@ -81,9 +81,12 @@ object Recommend {
     * corpus and on synthetic frequency ties. */
   private[ml] def fitIndexersSinglePass(
       sampled: DataFrame): (StringIndexerModel, StringIndexerModel) = {
+    // keys cast to string, the cast StringIndexer.fit applies itself: a
+    // numeric key column would otherwise reach getString below as a boxed
+    // number
     val counts = sampled.select(explode(array(
-        struct(lit(0).as("c"), col("userKey").as("k")),
-        struct(lit(1).as("c"), col("itemKey").as("k")))).as("e"))
+        struct(lit(0).as("c"), col("userKey").cast("string").as("k")),
+        struct(lit(1).as("c"), col("itemKey").cast("string").as("k")))).as("e"))
       .groupBy(col("e.c").as("c"), col("e.k").as("k"))
       .agg(count(lit(1)).as("n"))
       .collect()

@@ -25,6 +25,7 @@ class FixpointSpec extends SparkSpec {
   ).toDF("src", "dst", "weight")
   private lazy val plain = edges.select(col("src"), col("dst"))
   private lazy val seeds = Seq(1L, 20L).toDF("id")
+  private lazy val dim = (1L to 31L).map(i => (i, s"part$i")).toDF("id", "p_name")
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -37,6 +38,7 @@ class FixpointSpec extends SparkSpec {
     "weightedPageRank" -> (() => PageRankOp.weightedPageRank(edges)
       .select(col("id"), round(col("pagerank"), 6))),
     "personalizedPageRank" -> (() => PageRankOp.personalizedPageRank(plain, seeds)),
+    "topInfluencers" -> (() => PageRankOp.topInfluencers(spark, plain, dim, k = 10)),
     "hits" -> (() => HitsOp.hits(plain)),
     "connectedComponents" -> (() => Components.connectedComponents(plain, "src", "dst")),
     "connectedComponentsStar" -> (() => Components.connectedComponentsStar(plain, "src", "dst")),
@@ -48,11 +50,15 @@ class FixpointSpec extends SparkSpec {
   /** (jobs at the default budget, jobs at budget 0) per operator, run on
     * the fixture above including the final collect. A port of an operator
     * onto shared scaffolding must leave these unchanged: the count moves
-    * with every added pin, aggregate action, or broadcast-vs-shuffle flip. */
+    * with every added pin, aggregate action, or broadcast-vs-shuffle flip.
+    * The rank family's default-budget counts are those of the driver-
+    * resident kernel: one job per round plus the vertex and edge
+    * preparation. */
   private val expectedJobs: Map[String, (Int, Int)] = Map(
-    "pageRank" -> (38, 42),
-    "weightedPageRank" -> (38, 42),
-    "personalizedPageRank" -> (36, 39),
+    "pageRank" -> (19, 42),
+    "weightedPageRank" -> (19, 42),
+    "personalizedPageRank" -> (25, 39),
+    "topInfluencers" -> (22, 44),
     "hits" -> (65, 68),
     "connectedComponents" -> (27, 32),
     "connectedComponentsStar" -> (33, 33),
@@ -83,6 +89,45 @@ class FixpointSpec extends SparkSpec {
 
     test(s"broadcast-vs-shuffle invariance: $name publishes identical rows at budget 0") {
       val ((bcastRows, _), (shuffleRows, _)) = run(name, op)
+      assert(bcastRows.nonEmpty)
+      assert(shuffleRows == bcastRows)
+    }
+  }
+
+  // the rank family's edge inputs: a null endpoint on each side, a
+  // duplicated (multi-)edge, a sink (5), and, for the declared-vertex
+  // entry points, an isolated vertex (9) and an edge leaving the set (6)
+  private lazy val edgeCases: DataFrame = Seq[(Option[Long], Option[Long], Double)](
+    (Some(1L), Some(2L), 2.0), (Some(1L), Some(2L), 2.0), (Some(2L), Some(3L), 1.0),
+    (Some(3L), Some(1L), 3.0), (Some(3L), Some(5L), 1.0), (Some(2L), Some(4L), 1.0),
+    (Some(4L), Some(3L), 2.0), (None, Some(3L), 1.0), (Some(4L), None, 1.0),
+    (Some(4L), Some(6L), 1.0)
+  ).toDF("src", "dst", "weight")
+  private lazy val declared = Seq(1L, 2L, 3L, 4L, 5L, 9L).toDF("id")
+
+  private val edgeCaseOperators: Seq[(String, () => DataFrame)] = Seq(
+    "runLongIds" -> (() => PageRankOp.runLongIds(spark, edgeCases)
+      .select(col("id"), round(col("pagerank"), 6))),
+    "weightedPageRank" -> (() => PageRankOp.weightedPageRank(edgeCases)
+      .select(col("id"), round(col("pagerank"), 6))),
+    "resumeLongIds" -> (() => PageRankOp.resumeLongIds(spark, edgeCases,
+        Seq((1L, 2.5), (3L, 0.5)).toDF("id", "pagerank"))
+      .select(col("id"), round(col("pagerank"), 6))),
+    "personalizedPageRank" -> (() =>
+      PageRankOp.personalizedPageRank(edgeCases, Seq(1L, 4L).toDF("id"))),
+    "runStringIds" -> (() => PageRankOp.runStringIds(
+        declared.select(concat(lit("v"), col("id")).as("id")),
+        edgeCases.select(concat(lit("v"), col("src")).as("src"),
+          concat(lit("v"), col("dst")).as("dst")))
+      .select(col("id"), round(col("pagerank"), 6))),
+    "runWithVertices" -> (() => PageRankOp.runWithVertices(declared, edgeCases)
+      .select(col("id"), round(col("pagerank"), 6)))
+  )
+
+  edgeCaseOperators.foreach { case (name, op) =>
+    test(s"broadcast-vs-shuffle invariance on edge inputs: $name publishes identical rows at budget 0") {
+      val bcastRows = underBudget(None)(rows(op()))
+      val shuffleRows = underBudget(Some("0"))(rows(op()))
       assert(bcastRows.nonEmpty)
       assert(shuffleRows == bcastRows)
     }

@@ -49,6 +49,24 @@ class RecommendSpec extends SparkSpec {
     assert(um2.labels.toSeq == Seq("a", "b", "c", "z"))
   }
 
+  test("single-pass indexer labels == StringIndexer.fit labels on long user and int item keys") {
+    import org.apache.spark.ml.feature.StringIndexer
+    import spark.implicits._
+    // numeric keys index by their string form: users 10, 9 and 2 tie on
+    // count and sort as the strings "10" < "2" < "9"
+    val triples = Seq((10L, 7), (9L, 7), (10L, 300), (9L, 41), (2L, 300), (2L, 7))
+      .toDF("userKey", "itemKey").withColumn("rating", lit(1.0))
+    val (um, im) = Recommend.fitIndexersSinglePass(triples)
+    val uf = new StringIndexer().setInputCol("userKey").setOutputCol("userId")
+      .fit(triples)
+    val itf = new StringIndexer().setInputCol("itemKey").setOutputCol("itemId")
+      .fit(triples)
+    assert(um.labels.toSeq == uf.labels.toSeq)
+    assert(im.labels.toSeq == itf.labels.toSeq)
+    assert(um.labels.toSeq == Seq("10", "2", "9"))
+    assert(im.labels.toSeq == Seq("7", "300", "41"))
+  }
+
   test("frequencyDescLabels: count desc, ties by label asc (the fit sort contract)") {
     val got = Recommend.frequencyDescLabels(
       Seq("x" -> 2L, "m" -> 5L, "a" -> 2L, "q" -> 9L)).toSeq
