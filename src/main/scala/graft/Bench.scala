@@ -323,10 +323,6 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // declare the harness: measurement-only knobs (SPARK_GRAFT_ALS_BLOCKS)
-    // are consumed ONLY under this property — a Verify/oracle/gated run
-    // with such a knob set fails loud instead of drifting (ADVICE r15)
-    System.setProperty("graft.harness", "bench")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // NOTE: `spark.cleaner.referenceTracking.blocking.shuffle=true` was

@@ -64,8 +64,8 @@ object Catalog {
                        defs: Map[String, Seq[(String, Int, String)]])
       : (String, String) = {
     val call = """([A-Za-z][A-Za-z0-9]*)\.([a-z][A-Za-z0-9]*)\(""".r
-    val skip = Set("Tables", "Telemetry", "s", "col", "math", "java", "Seq",
-      "Window", "Files", "String")
+    val skip = Set("Tables", "Telemetry", "Scratch", "s", "col", "math", "java",
+      "Seq", "Window", "Files", "String")
     call.findAllMatchIn(body)
       .map(m => (m.group(1), m.group(2)))
       .find { case (obj, m) =>

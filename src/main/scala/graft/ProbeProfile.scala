@@ -3,6 +3,7 @@ package graft
 import graft.model.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Steady-state standing-index probe bench (VERDICT r15 #1/#5).
   *
@@ -61,10 +62,8 @@ object ProbeProfile {
         .write.format("noop").mode("overwrite").save()
       spark.read.parquet(s"$sfDir/documents.parquet").limit(100)
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) => System.err.println(s"[probe] warmup failed: $e") }
 
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft-probe-profile").toFile.getAbsolutePath
     val results = scala.collection.mutable.LinkedHashMap[String, String]()
 
     /** Profile one index: the Bench canary set first (the box-noise
@@ -87,7 +86,7 @@ object ProbeProfile {
         case (cname, run) =>
           val c0 = System.nanoTime()
           val ok = try { run(); true } catch {
-            case _: Throwable => canaryErrs ::= cname; false
+            case NonFatal(_) => canaryErrs ::= cname; false
           }
           if (ok) Some(cname -> (System.nanoTime() - c0) / 1e9) else None
       }
@@ -138,8 +137,8 @@ object ProbeProfile {
     val phraseTable = "graft_probe_positional_index"
     // a failed build/probe must not leak the corpus-scale staging tree,
     // the probe tables, or the session (review r16: the gate queries all
-    // wrap the identical work in try/finally; the profiler must too)
-    try {
+    // stage through the same scaffold; the profiler must too)
+    try Scratch.dir("graft-probe-profile", bm25Table, dedupTable, phraseTable) { stage =>
 
     // --- BM25 inverted index (gate: q_bm25_indexed) -------------------
     profile("q_bm25_indexed",
@@ -211,12 +210,6 @@ object ProbeProfile {
     println(s"""{"metric":"probe_profile","unit":"sec","reps":$reps,""" +
       s""""indexes":$body,"sf":"$sfDir"}""")
 
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $bm25Table")
-      spark.sql(s"DROP TABLE IF EXISTS $dedupTable")
-      spark.sql(s"DROP TABLE IF EXISTS $phraseTable")
-      new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

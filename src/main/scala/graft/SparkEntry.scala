@@ -774,20 +774,13 @@ object SparkEntry {
     // oracle verbatim (persistence must not change one score)
     "q_bm25_indexed" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-inverted-index").toFile.getAbsolutePath
       val table = "graft_gate_inverted_index"
-      try {
+      Scratch.pinned("graft-inverted-index", table) { stage =>
         Telemetry.timed("q_bm25_indexed") {
           graft.text.InvertedIndex.build(docs, table, stage)
         }
         graft.text.InvertedIndex.probe(
-            s, table, stage, Seq("join", "merge", "window"))
-          .pinTier // materialize before table+files are dropped
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
+          s, table, stage, Seq("join", "merge", "window"))
       }
     }),
     // exact phrase search (quoted-query semantics): positional-posting
@@ -799,20 +792,12 @@ object SparkEntry {
     // q_phrase_search's oracle: persistence must not change one count
     "q_phrase_indexed" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-gate-posidx").toFile.getAbsolutePath
       val table = "graft_gate_positional_index"
-      try {
+      Scratch.pinned("graft-gate-posidx", table) { stage =>
         Telemetry.timed("q_phrase_indexed") {
           graft.text.InvertedIndex.buildPositional(docs, table, stage)
         }
-        graft.text.InvertedIndex.probePhrase(
-            s, table, Seq("merge", "window"))
-          .pinTier // materialize before table+files are dropped
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
+        graft.text.InvertedIndex.probePhrase(s, table, Seq("merge", "window"))
       }
     }),
     // STREAMING maintenance of the standing inverted index: foreachBatch
@@ -830,10 +815,8 @@ object SparkEntry {
     // build — shares q_bm25's oracle verbatim
     "q_bm25_compacted" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-gate-compactidx").toFile.getAbsolutePath
       val table = "graft_gate_compacted_index"
-      try {
+      Scratch.pinned("graft-gate-compactidx", table) { stage =>
         graft.text.InvertedIndex.build(docs.limit(0), table, stage)
         (0 until 3).foreach(i => graft.text.InvertedIndex.admit(
           s, docs.filter(pmod(col("doc_id"), lit(3)) === i), table, stage))
@@ -841,12 +824,7 @@ object SparkEntry {
           graft.text.InvertedIndex.compact(s, table, stage); ()
         }
         graft.text.InvertedIndex.probe(
-            s, table, stage, Seq("join", "merge", "window"))
-          .pinTier // materialize before table+files are dropped
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
+          s, table, stage, Seq("join", "merge", "window"))
       }
     }),
     // RM3 pseudo-relevance feedback: BM25 pool → deterministic expansion
@@ -950,9 +928,7 @@ object SparkEntry {
       val base = pairs.filter(
         pmod(col("doc_a"), lit(7)) =!= 0 && pmod(col("doc_b"), lit(7)) =!= 0)
       val batch = pairs.join(base, Seq("doc_a", "doc_b"), "left_anti")
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-cc-index").toFile.getAbsolutePath
-      try {
+      Scratch.pinned("graft-cc-index") { stage =>
         Telemetry.timed("q_components_admit") {
           graft.graph.ComponentsIndex.build(base, s"$stage/cc")
         }
@@ -963,10 +939,6 @@ object SparkEntry {
             coalesce(col("component"), col("doc_id")).as("cluster_id"))
           .withColumn("keep", (col("doc_id") === col("cluster_id")).cast("int"))
           .orderBy(col("doc_id"))
-          .pinTier // materialize before the staged index is dropped
-      } finally {
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
       }
     }),
     // the min-label fixpoint against the SAME closure oracle: both
@@ -1055,19 +1027,13 @@ object SparkEntry {
     // oracle as the recompute form
     "q_incremental_dedup_indexed" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-shingle-index").toFile.getAbsolutePath
-      try {
+      Scratch.pinned("graft-shingle-index") { stage =>
         Telemetry.timed("q_incremental_dedup_indexed") {
           graft.dedup.ShingleIndex.build(
             docs.filter(pmod(col("doc_id"), lit(7)) =!= 0), s"$stage/index")
         }
         graft.dedup.ShingleIndex.admit(
-            s, docs.filter(pmod(col("doc_id"), lit(7)) === 0), s"$stage/index")
-          .pinTier // materialize before the staged index is dropped
-      } finally { // a build/admit failure must not leak staged /tmp state
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
+          s, docs.filter(pmod(col("doc_id"), lit(7)) === 0), s"$stage/index")
       }
     }),
     // the bucketed catalog-table twin (the 100 TB layout): the admission
@@ -1076,21 +1042,14 @@ object SparkEntry {
     // twin's oracle (physical layout must not change one verdict)
     "q_incremental_dedup_bucketed" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-shingle-bucketed").toFile.getAbsolutePath
       val table = "graft_gate_shingle_bucketed"
-      try {
+      Scratch.pinned("graft-shingle-bucketed", table) { stage =>
         Telemetry.timed("q_incremental_dedup_bucketed") {
           graft.dedup.ShingleIndex.buildBucketed(
             docs.filter(pmod(col("doc_id"), lit(7)) =!= 0), table, s"$stage/index")
         }
         graft.dedup.ShingleIndex.admitBucketed(
-            s, docs.filter(pmod(col("doc_id"), lit(7)) === 0), table)
-          .pinTier // materialize before table+files are dropped
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
+          s, docs.filter(pmod(col("doc_id"), lit(7)) === 0), table)
       }
     }),
     // the COMPACTED twin: same build, then BucketedTable.compact folds
@@ -1100,23 +1059,15 @@ object SparkEntry {
     // verdict; the maintenance-loop semantics are ShingleIndexSpec's)
     "q_incremental_dedup_compacted" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-shingle-compacted").toFile.getAbsolutePath
       val table = "graft_gate_shingle_compacted"
-      try {
+      Scratch.pinned("graft-shingle-compacted", table, s"${table}__compacting") { stage =>
         graft.dedup.ShingleIndex.buildBucketed(
           docs.filter(pmod(col("doc_id"), lit(7)) =!= 0), table, s"$stage/index")
         Telemetry.timed("q_incremental_dedup_compacted") {
           graft.dedup.ShingleIndex.compactBucketed(s, table, stage); ()
         }
         graft.dedup.ShingleIndex.admitBucketed(
-            s, docs.filter(pmod(col("doc_id"), lit(7)) === 0), table)
-          .pinTier // materialize before table+files are dropped
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        s.sql(s"DROP TABLE IF EXISTS ${table}__compacting")
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
+          s, docs.filter(pmod(col("doc_id"), lit(7)) === 0), table)
       }
     }),
     // rendezvous-sharded tier reshard audit (VERDICT r12 #6): the shingle
@@ -1209,9 +1160,7 @@ object SparkEntry {
     // the retrain form and the partition-pruned postings read
     "q_ann_ivf_indexed" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-ivf-index").toFile.getAbsolutePath
-      try {
+      Scratch.dir("graft-ivf-index") { stage =>
         Telemetry.timed("q_ann_ivf_indexed") {
           graft.sim.IvfIndex.build(s, emb, s"$stage/index")
         }
@@ -1223,9 +1172,6 @@ object SparkEntry {
             emb.filter(col("vec_id") < 10)
               .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
             s"$stage/index", k = 10))
-      } finally {
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
       }
     }),
     // the compressed standing form: codes-tier probe via the ADC lookup
@@ -1233,9 +1179,7 @@ object SparkEntry {
     // equality with Similarity.ivfSqTopK and both tiers' partition pruning
     "q_ann_ivf_sq_indexed" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-ivfsq-index").toFile.getAbsolutePath
-      try {
+      Scratch.dir("graft-ivfsq-index") { stage =>
         Telemetry.timed("q_ann_ivf_sq_indexed") {
           graft.sim.IvfIndex.build(s, emb, s"$stage/index")
         }
@@ -1244,9 +1188,6 @@ object SparkEntry {
             emb.filter(col("vec_id") < 10)
               .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
             s"$stage/index", k = 10))
-      } finally {
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
       }
     }),
     // exact all-pairs form: the small-sample oracle baseline (quadratic —
@@ -1307,17 +1248,11 @@ object SparkEntry {
     // score; the q_bm25_indexed rule)
     "q_ann_ivf_pq_indexed" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-gate-ivfpq").toFile.getAbsolutePath
-      try {
+      Scratch.pinned("graft-gate-ivfpq") { stage =>
         Telemetry.timed("q_ann_ivf_pq_indexed") {
           graft.sim.IvfPqIndex.build(emb, stage)
         }
         graft.sim.IvfPqIndex.probe(s, stage, emb, queryVecId = 0L, k = 10)
-          .pinTier // materialize before the staging files are dropped
-      } finally {
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
       }
     }),
     // GROWN standing IVF-PQ: quantizers frozen on the seed third, the
@@ -1327,9 +1262,7 @@ object SparkEntry {
     // ADC score and the exact re-rank
     "q_ann_ivf_pq_grown" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-gate-ivfpq-grown").toFile.getAbsolutePath
-      try {
+      Scratch.pinned("graft-gate-ivfpq-grown") { stage =>
         Telemetry.timed("q_ann_ivf_pq_grown") {
           graft.sim.IvfPqIndex.build(
             emb.filter(pmod(col("vec_id"), lit(3)) === 0), stage)
@@ -1337,10 +1270,6 @@ object SparkEntry {
             emb.filter(pmod(col("vec_id"), lit(3)) =!= 0), stage)
         }
         graft.sim.IvfPqIndex.probe(s, stage, emb, queryVecId = 0L, k = 10)
-          .pinTier // materialize before the staging files are dropped
-      } finally {
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
       }
     }),
     // STREAMING-MAINTAINED twin (VERDICT r12 #8): the same seed build,
@@ -1358,9 +1287,7 @@ object SparkEntry {
     // refresh recall)
     "q_ann_ivf_pq_rebuilt" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-gate-ivfpq-rebuilt").toFile.getAbsolutePath
-      try {
+      Scratch.pinned("graft-gate-ivfpq-rebuilt") { stage =>
         Telemetry.timed("q_ann_ivf_pq_rebuilt") {
           graft.sim.IvfPqIndex.build(
             emb.filter(pmod(col("vec_id"), lit(3)) === 0), stage)
@@ -1370,10 +1297,6 @@ object SparkEntry {
             "admitted fraction 2.0 must trigger the rebuild")
         }
         graft.sim.IvfPqIndex.probe(s, stage, emb, queryVecId = 0L, k = 10)
-          .pinTier // materialize before the staging files are dropped
-      } finally {
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
       }
     }),
     // Matryoshka truncation audit: recall@10 of prefix-dim cosine vs the
@@ -1465,42 +1388,26 @@ object SparkEntry {
     // file-count shrink; these gates pin that a relayout never changes
     // content — the same box filter / aggregate over the rewritten copy
     // must match the raw-table oracle) ----
-    "q_zorder_scan" -> ((s, d) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-zorder").toFile.getAbsolutePath
-      try {
-        graft.lake.Layout.zorderWrite(Tables.events(s, d),
-          Seq("user_id", "value"), s"$stage/z")
-        s.read.parquet(s"$stage/z")
-          .filter(col("user_id").between(20, 60) &&
-            col("value").between(50d, 150d))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            Aggregations.dsum(col("value")).as("sum_value"))
-          .orderBy(col("event_type"))
-          .pinTier
-      } finally {
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
-      }
+    "q_zorder_scan" -> ((s, d) => Scratch.pinned("graft-zorder") { stage =>
+      graft.lake.Layout.zorderWrite(Tables.events(s, d),
+        Seq("user_id", "value"), s"$stage/z")
+      s.read.parquet(s"$stage/z")
+        .filter(col("user_id").between(20, 60) &&
+          col("value").between(50d, 150d))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          Aggregations.dsum(col("value")).as("sum_value"))
+        .orderBy(col("event_type"))
     }),
-    "q_compact_roundtrip" -> ((s, d) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-compact").toFile.getAbsolutePath
-      try {
-        Tables.events(s, d).repartition(32).write.parquet(s"$stage/small")
-        graft.lake.Layout.compact(s, s"$stage/small", s"$stage/big",
-          targetBytes = 1L << 20)
-        s.read.parquet(s"$stage/big")
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            Aggregations.dsum(col("value")).as("sum_value"))
-          .orderBy(col("event_type"))
-          .pinTier
-      } finally {
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
-      }
+    "q_compact_roundtrip" -> ((s, d) => Scratch.pinned("graft-compact") { stage =>
+      Tables.events(s, d).repartition(32).write.parquet(s"$stage/small")
+      graft.lake.Layout.compact(s, s"$stage/small", s"$stage/big",
+        targetBytes = 1L << 20)
+      s.read.parquet(s"$stage/big")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          Aggregations.dsum(col("value")).as("sum_value"))
+        .orderBy(col("event_type"))
     }),
     // SCD2 dimension merge (Kimball type-2, lake/Scd.scala): current dim
     // from customer at version 1 plus planted pre-existing history rows
@@ -1538,9 +1445,7 @@ object SparkEntry {
     // layout must not change one row of the merge verdict
     "q_scd2_table" -> ((s, d) => {
       val (dim, batch) = scdFixture(s, d)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-scd-table").toFile.getAbsolutePath
-      try {
+      Scratch.pinned("graft-scd-table") { stage =>
         Telemetry.timed("q_scd2_table") {
           graft.lake.ScdTable.build(dim, s"$stage/dim", "cust_key",
             Seq("segment", "nation"), nBuckets = 16)
@@ -1548,10 +1453,6 @@ object SparkEntry {
         graft.lake.ScdTable.admit(s, batch, s"$stage/dim")
         graft.lake.ScdTable.dim(s, s"$stage/dim")
           .orderBy(col("cust_key"), col("version_from"))
-          .pinTier // materialize before the staged table is dropped
-      } finally {
-        new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-        ()
       }
     }),
     // ---- multimodal plumbing (north-star; decode is a marked stub) ----

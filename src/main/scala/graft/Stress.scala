@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Scale-trend harness: replicate the sf tables at 1×/2×/4×/8× with shifted
   * keys (so cardinalities actually grow — new orders, parts, documents,
@@ -332,7 +333,7 @@ object Stress {
         val t0 = System.nanoTime()
         val ok =
           try { body; true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[stress] $name failed at x$m: ${e.getClass.getSimpleName}")
             false
           }
@@ -418,9 +419,7 @@ object Stress {
           // originals, so the batch's candidate matches also grow ~m× —
           // admission staying well under the build's ratio even so is the
           // "∝ batch, not corpus" evidence.
-          val stage = java.nio.file.Files
-            .createTempDirectory("graft-stress-shindex").toFile.getAbsolutePath
-          try {
+          Scratch.dir("graft-stress-shindex") { stage =>
             val corpus = graft.model.Tables.documents(spark, dir)
               .filter(pmod(col("doc_id"), lit(7)) =!= 0)
             val fixedBatch = graft.model.Tables.documents(spark, sfDir)
@@ -529,9 +528,6 @@ object Stress {
                     col("c_nationkey").cast("bigint").as("nation"))
                 graft.lake.ScdTable.admit(spark, batch, s"$stage/scd"); ()
               }) else Nil)
-          } finally {
-            new scala.reflect.io.Directory(new java.io.File(stage))
-              .deleteRecursively(); ()
           }
         }
       m -> times

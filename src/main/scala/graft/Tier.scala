@@ -8,33 +8,20 @@ import org.apache.spark.storage.StorageLevel
   * tables, fixpoint state), so Spark never re-runs the producing pipeline
   * per consumer — at 100 TB the difference between 1× and 3× scan cost.
   *
-  * Storage level: DESERIALIZED `MEMORY_AND_DISK` (the `localCheckpoint`
-  * default). The r9 A/B over the full 126-query sf0.1 bench
-  * (`GRAFT_TIER_STORAGE` flips the level) measured: suite GC is
-  * IDENTICAL under both levels (60.7 s serialized vs 60.3 s
-  * deserialized) while serialized blocks cost ~7% wall (247.1 s vs
-  * 230.6 s) — every consumer re-pays row decoding on read, and the
-  * hypothesis that pinned-tier row objects dominate old-gen pressure is
-  * refuted: the engine's tiers are reduction outputs (shingle/sketch/
-  * stratum scale), small relative to the shuffle and codegen churn that
-  * actually drives the ~60 s suite GC total. Serialized storage remains
-  * one env var away for deployments whose tiers are corpus-scale.
+  * Storage level: always DESERIALIZED `MEMORY_AND_DISK` (the
+  * `localCheckpoint` default): the r9 A/B over the 126-query sf0.1 bench
+  * measured `MEMORY_AND_DISK_SER` ~7% slower (247.1 s vs 230.6 s) with
+  * identical suite GC (60.7 s vs 60.3 s).
   *
-  * Eagerness is semantic, not an optimization hint: several callers delete
-  * a staging directory (or advance streaming state) immediately after the
-  * pin, relying on the blocks being materialized before the source
-  * disappears — keep `pin` eager.
+  * Eagerness is semantic, not an optimization hint: [[Scratch.pinned]]
+  * deletes its staging directory (and streaming callers advance state)
+  * immediately after the pin, relying on the blocks being materialized
+  * before the source disappears — keep `pin` eager.
   */
 object Tier {
 
-  private lazy val level: StorageLevel =
-    sys.env.get("GRAFT_TIER_STORAGE") match {
-      case Some("ser") => StorageLevel.MEMORY_AND_DISK_SER
-      case _           => StorageLevel.MEMORY_AND_DISK
-    }
-
   def pin(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true, storageLevel = level)
+    df.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
 
   /** Scale-adaptive parallelism floor for compute-heavy map stages (r16,
     * guide §2.5 "input skew: one huge file"): a small parquet fixture

@@ -420,10 +420,8 @@ object ShingleIndex {
   def rendezvousReshardReport(spark: SparkSession, documents: DataFrame,
                               fromShards: Int = 8, toShards: Int = 9,
                               k: Int = 3,
-                              buckets: Int = DefaultBuckets): DataFrame = {
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft-sharded-tier").toFile.getAbsolutePath
-    try {
+                              buckets: Int = DefaultBuckets): DataFrame =
+    graft.Scratch.pinned("graft-sharded-tier") { stage =>
       buildSharded(documents, s"$stage/tier", fromShards, k, buckets)
       reshard(spark, s"$stage/tier", toShards, buckets)
       readSharded(spark, s"$stage/tier")
@@ -437,10 +435,5 @@ object ShingleIndex {
         .agg(count(lit(1)).as("n_buckets"), sum(col("n_rows")).as("n_rows"),
           sum(col("arrived")).as("n_buckets_arrived"))
         .orderBy(col("shard"))
-        .pinTier // materialize before the staged tier is dropped
-    } finally {
-      new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-      ()
     }
-  }
 }

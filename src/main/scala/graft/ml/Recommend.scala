@@ -6,6 +6,7 @@ import org.apache.spark.ml.recommendation.ALS
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.Metadata
+import scala.util.control.NonFatal
 
 /** ALS recommendation pipeline — SURVEY.md §2.9 (M1–M3) + R2/J2/A11.
   *
@@ -35,7 +36,7 @@ object Recommend {
   private lazy val logBlasOnce: Unit = {
     val backend =
       try dev.ludovic.netlib.blas.BLAS.getInstance.getClass.getSimpleName
-      catch { case _: Throwable => "unavailable" }
+      catch { case NonFatal(_) | _: LinkageError => "unavailable" }
     println(s"""{"graft_netlib_blas":"$backend"}""")
   }
 
@@ -108,29 +109,6 @@ object Recommend {
                         sampleFraction: Double = 0.10, seed: Long = 42L): DataFrame =
     trainAndRecommend(spark, triples, nUsers, nRecs, sampleFraction, seed)._1
 
-  /** The SPARK_GRAFT_ALS_BLOCKS measurement-only contract, ENFORCED
-    * (ADVICE r15): blocking changes summation order in the least-squares
-    * assembly, so factor values drift with the knob while the structural
-    * audit still passes — a gated Verify/oracle run with the var set
-    * would publish silently config-dependent outputs. Only a harness
-    * that declares itself via the `graft.harness=bench` JVM property
-    * ([[graft.Bench.main]]) may consume it; anywhere else the knob is a
-    * loud failure, never a silent drift. A non-numeric value fails with
-    * a named message instead of a bare NumberFormatException. Pure over
-    * (env value, harness property) so RecommendSpec pins every branch. */
-  def alsBlocksOverride(envValue: Option[String],
-                        harness: Option[String]): Option[Int] =
-    envValue.map { raw =>
-      require(harness.contains("bench"),
-        "SPARK_GRAFT_ALS_BLOCKS is a bench-only measurement knob: unset " +
-          "it for Verify/oracle/gated runs (factor values are " +
-          "blocking-sensitive; outputs would drift across configs)")
-      try raw.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_ALS_BLOCKS must be an integer block count, got '$raw'")
-      }
-    }
-
   /** Record `f`'s wall seconds as a named bench sub-stage when a stage
     * prefix is set — [[graft.Bench]] folds `<prefix>.<stage>` keys into
     * the query's `index_split` entry (VERDICT r13 #5: at sf1 the ALS gate
@@ -177,28 +155,13 @@ object Recommend {
     // stage boundaries mirror the reference job's phases
     // (`run_alsrecs_job.py:84-104`): fit() is eager; recommendForUserSubset
     // is lazy, so its stage pins the (tiny — nUsers·nRecs rows) result to
-    // take an honest timing and spare the resolve leg a recompute
-    //
-    // Block-layout experiment knob (VERDICT r14 #8): the reference binds
-    // the HYPERPARAMETERS (maxIter 10, regParam 0.1, seed), not how
-    // spark.ml partitions the factor matrices — numBlocks defaults to 10,
-    // which under-slices a 32-core box during the normal-equation sweeps.
-    // SPARK_GRAFT_ALS_BLOCKS overrides numUser/numItemBlocks for
-    // measurement passes ONLY; unset (every gated path) keeps the library
-    // default, so oracle/audit outputs are byte-identical to r14. The
-    // factor values change with the blocking (summation order in the
-    // least-squares assembly), which is why the knob cannot default on:
-    // the gate's structural audit would still pass, but cached recs would
-    // drift across configs — the campaign records both timings instead.
-    val alsBase = new ALS()
+    // take an honest timing and spare the resolve leg a recompute.
+    // numBlocks stays at the library default: 32 blocks trained ~13%
+    // slower at sf1 (BENCH_SF1_r15.json `als_blocks_experiment`)
+    val als = new ALS()
       .setMaxIter(10).setRegParam(0.1).setSeed(seed)
       .setUserCol("userId").setItemCol("itemId").setRatingCol("rating")
       .setColdStartStrategy("drop")
-    val als = alsBlocksOverride(sys.env.get("SPARK_GRAFT_ALS_BLOCKS"),
-        sys.props.get("graft.harness")) match {
-      case Some(n) => alsBase.setNumBlocks(n)
-      case None    => alsBase
-    }
     val model = stageTimed(stagePrefix, "train")(als.fit(indexed))
 
     val users = indexed.select(col("userId")).distinct()

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.Tier.PinOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the events table (north-star scope — the
@@ -30,50 +29,6 @@ object Streams {
     * incremental, memory-bounded, schema asserted at the boundary. */
   def readEventsStream(spark: SparkSession, pathGlob: String): DataFrame =
     spark.readStream.schema(eventsSchema).parquet(pathGlob)
-
-  /** Bench-only state-store provider override (r17, VERDICT r16 #7 — the
-    * SPARK_GRAFT_ALS_BLOCKS treatment for the streaming gates): the state
-    * store backend is semantics-neutral (every gate's drained result is
-    * byte-identical under either provider — the store only persists
-    * operator state between micro-batches), but it is a config-class
-    * change, so it may be consumed ONLY by a harness that declares itself
-    * via the `graft.harness=bench` JVM property; anywhere else a set knob
-    * fails loud instead of letting a measurement config drift into a
-    * gated run. Values: `rocksdb` | `hdfs` (the default backend). Pure
-    * over (env value, harness property) so StreamsSpec pins the branches. */
-  def stateStoreOverride(envValue: Option[String],
-                         harness: Option[String]): Option[String] =
-    envValue.map { raw =>
-      require(harness.contains("bench"),
-        "SPARK_GRAFT_STATE_STORE is a bench-only measurement knob: unset " +
-          "it for Verify/oracle/gated runs (config-class change; the A/B " +
-          "discipline requires it never ride along silently)")
-      raw.trim match {
-        case "rocksdb" =>
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        case "hdfs" =>
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        case other => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STATE_STORE must be 'rocksdb' or 'hdfs', got '$other'")
-      }
-    }
-
-  /** Apply the override (if any) around a drained gate, restoring the
-    * prior provider after: the two stateful drain helpers call this so an
-    * A/B run flips every gate with one env var. */
-  private def withStateStore[T](spark: SparkSession)(body: => T): T =
-    stateStoreOverride(sys.env.get("SPARK_GRAFT_STATE_STORE"),
-        sys.props.get("graft.harness")) match {
-      case None => body
-      case Some(cls) =>
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prior = spark.conf.getOption(key)
-        spark.conf.set(key, cls)
-        try body finally prior match {
-          case Some(p) => spark.conf.set(key, p)
-          case None    => spark.conf.unset(key)
-        }
-    }
 
   /** Tumbling-window counts per event type with a 10-minute watermark.
     * Works identically on a batch DataFrame (the oracle path). */
@@ -207,61 +162,88 @@ object Streams {
       .orderBy(col("window_start"), col("rnk"))
   }
 
-  /** Shared gate plumbing for the streaming twins: stage the events fixture
-    * as two "arriving" chunks with the trigger capped at one file, so the
-    * query runs >= 2 micro-batches and windows/sessions MUST merge across
-    * batch boundaries — the stateful behavior a single-batch drain would
-    * never exercise (even/odd event ids interleave every window). The
-    * aggregation is drained to a complete-mode memory sink and handed back
-    * detached, as the batch DataFrame the driver's oracle compares.
+  /** The staged-stream drain every streaming gate runs: write `chunks`
+    * under `stage` as "arriving" files (`oneFilePerChunk` coalesces a
+    * chunk to one file when arrival order must BE the chunk order), read
+    * them back with the trigger capped at one file, so the query runs one
+    * micro-batch per file and state MUST carry across batch boundaries —
+    * the stateful behavior a single-batch drain would never exercise —
+    * then `start` the caller's sink and drain it to completion.
     *
-    * Complete output mode, deliberately: in append mode windowed results are
-    * only emitted once the watermark passes them, and a drained finite
-    * stream never advances the watermark past its last event, so trailing
-    * windows would be withheld and the twin could never equal the batch
-    * result. Complete mode emits the full aggregate table each trigger. The
-    * memory sink holds one row per WINDOW/SESSION (not per event) — bounded
-    * at gate scale; a production deployment writes [[exactlyOnceSink]]-style
-    * to a lake instead. */
-  private def drainEventsStreamGate(spark: SparkSession, sfDir: String)(
-      agg: DataFrame => DataFrame)(finish: DataFrame => DataFrame): DataFrame = {
+    * FileStreamSource orders files by modification time; on coarse-mtime
+    * filesystems consecutive chunk writes can tie and drain out of order,
+    * vaulting the watermark past earlier chunks, so each chunk's files are
+    * stamped with explicit strictly increasing mtimes.
+    *
+    * `shufflePartitions` is a gate-scoped fan-in: every stateful operator
+    * materializes one state store PER shuffle partition PER micro-batch,
+    * and at the session's partition count the fixed store init/commit
+    * overhead dwarfs fixture-sized data. Correctness is partition-count-
+    * independent. The prior value is restored in a `finally` that covers
+    * chunk writing, sink building, `start()` and the drain, so whatever
+    * the caller runs afterwards plans at the session's fan-out. */
+  private def drainStaged(spark: SparkSession, stage: String,
+      chunks: Seq[DataFrame], oneFilePerChunk: Boolean = false,
+      shufflePartitions: Option[Int] = None)(
+      start: DataFrame => StreamingQuery): Unit = {
+    val key = "spark.sql.shuffle.partitions"
+    val priorParts = shufflePartitions.map(_ => spark.conf.get(key))
+    try {
+      val mtimeBase = System.currentTimeMillis()
+      chunks.zipWithIndex.foreach { case (c, i) =>
+        (if (oneFilePerChunk) c.coalesce(1) else c)
+          .write.mode("overwrite").parquet(s"$stage/chunk=$i")
+        java.nio.file.Files.list(java.nio.file.Paths.get(stage, s"chunk=$i"))
+          .forEach { f =>
+            if (f.getFileName.toString.endsWith(".parquet"))
+              java.nio.file.Files.setLastModifiedTime(f,
+                java.nio.file.attribute.FileTime.fromMillis(mtimeBase + 10000L * i))
+          }
+      }
+      shufflePartitions.foreach(n => spark.conf.set(key, n.toString))
+      val q = start(spark.readStream.schema(chunks.head.schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$stage/chunk=*"))
+      try q.processAllAvailable() finally q.stop()
+    } finally priorParts.foreach(spark.conf.set(key, _))
+  }
+
+  /** `df` split into `n` chunks by `idCol` mod `n` — interleaves every
+    * window, session and user across the chunks. */
+  private def splitBy(df: DataFrame, idCol: String, n: Int): Seq[DataFrame] =
+    (0 until n).map(i => df.filter(pmod(col(idCol), lit(n)) === i))
+
+  /** Gate plumbing for the events-stream twins: [[drainStaged]] the
+    * caller's chunk split of the events fixture (default: two chunks by
+    * event-id parity) at 8 shuffle partitions through a memory sink, and
+    * hand `finish(drained)` back pinned, as the batch DataFrame the
+    * driver's oracle compares. The `finish` aggregation plans after the
+    * fan-in override is restored.
+    *
+    * Complete output mode for the windowed/session accumulations: in
+    * append mode windowed results are only emitted once the watermark
+    * passes them, and a drained finite stream never advances the
+    * watermark past its last event, so trailing windows would be withheld
+    * and the twin could never equal the batch result. Append mode for the
+    * stateful operators that have no complete mode (joins, dedup,
+    * arbitrary state) and for the late-data contract. The memory sink's
+    * temp view is dropped on every exit: each sink table pins its result
+    * in driver memory for the session lifetime, outside Bench's
+    * clearCache/unpersist sweep, so repeated gate runs would otherwise
+    * accumulate one pinned copy per invocation under a fresh UUID name. */
+  private def drainToMemory(spark: SparkSession, sfDir: String,
+      outputMode: String = "append",
+      chunksOf: DataFrame => Seq[DataFrame] = splitBy(_, "event_id", 2),
+      oneFilePerChunk: Boolean = false)(
+      xform: DataFrame => DataFrame)(finish: DataFrame => DataFrame): DataFrame = {
     val name = "graft_stream_gate_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft-stream-gate").toFile.getAbsolutePath
-    // Tables.events normalizes the fixture's nanosecond timestamps to
-    // Spark TimestampType, so the staged chunks match eventsSchema
-    val events = graft.model.Tables.events(spark, sfDir)
-    events.filter(pmod(col("event_id"), lit(2)) === 0)
-      .write.mode("overwrite").parquet(s"$stage/chunk=0")
-    events.filter(pmod(col("event_id"), lit(2)) === 1)
-      .write.mode("overwrite").parquet(s"$stage/chunk=1")
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$stage/chunk=*")
-    // gate-scoped shuffle fan-in — see drainAppendStreamGate: state store
-    // count ∝ shuffle partitions, and the fixed per-store per-batch cost
-    // dominates at gate scale
-    val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    withStateStore(spark) {
-      val q = agg(stream).writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally {
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", priorParts)
-        // the memory sink owns the result now; drop the staged copies
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(stage)).deleteRecursively()
-      }
-    }
-    // detach from the memory sink eagerly and DROP its temp view: each
-    // sink table pins the full complete-mode result in driver memory for
-    // the session lifetime, outside Bench's clearCache/unpersist sweep —
-    // repeated gate runs would otherwise accumulate one pinned copy per
-    // invocation under a fresh UUID name
-    val out = finish(spark.table(name)).pinTier
-    spark.catalog.dropTempView(name)
-    out
+    try graft.Scratch.pinned("graft-stream-gate") { stage =>
+      drainStaged(spark, stage, chunksOf(graft.model.Tables.events(spark, sfDir)),
+          oneFilePerChunk, shufflePartitions = Some(8))(stream =>
+        xform(stream).writeStream.format("memory").queryName(name)
+          .outputMode(outputMode).start())
+      finish(spark.table(name))
+    } finally { spark.catalog.dropTempView(name); () }
   }
 
   /** Driver-gated streaming twin of [[userSessionsBatch]]: the SAME
@@ -274,7 +256,7 @@ object Streams {
     * perturb the float result. */
   def userSessionsStreamGate(spark: SparkSession, sfDir: String,
                              gap: String = "5 minutes"): DataFrame =
-    drainEventsStreamGate(spark, sfDir)(stream => stream
+    drainToMemory(spark, sfDir, "complete")(stream => stream
       .withWatermark("ts", "10 minutes")
       .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
       .agg(count(lit(1)).as("n_events"),
@@ -282,63 +264,6 @@ object Streams {
       .select(col("user_id"), col("w.start").as("session_start"),
         col("n_events"), col("sum_value"))
       .orderBy(col("user_id"), col("session_start")))
-
-  /** Append-mode sibling of [[drainEventsStreamGate]] for the stateful
-    * operators that have no complete mode (joins, dedup): stages the
-    * caller's chunk split of the events fixture (coalesce(1) when arrival
-    * order must BE the chunk order — chunk i is written, hence
-    * modification-stamped, before chunk i+1, which is the order the file
-    * source replays), drains `xform(stream)` through an append-mode memory
-    * sink, and hands `finish(drained)` back detached with the sink view
-    * dropped (same driver-memory rationale as the complete-mode helper). */
-  private def drainAppendStreamGate(spark: SparkSession, sfDir: String,
-      chunksOf: DataFrame => Seq[DataFrame], oneFilePerChunk: Boolean)(
-      xform: DataFrame => DataFrame)(finish: DataFrame => DataFrame): DataFrame = {
-    val name = "graft_append_stream_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft-append-gate").toFile.getAbsolutePath
-    val mtimeBase = System.currentTimeMillis()
-    chunksOf(graft.model.Tables.events(spark, sfDir)).zipWithIndex
-      .foreach { case (c, i) =>
-        (if (oneFilePerChunk) c.coalesce(1) else c)
-          .write.mode("overwrite").parquet(s"$stage/chunk=$i")
-        // FileStreamSource orders files by modification time; on coarse-
-        // mtime filesystems consecutive chunk writes can tie and drain out
-        // of order, vaulting the watermark past earlier chunks. Stamp each
-        // chunk's files with explicit strictly increasing mtimes.
-        val dir = java.nio.file.Paths.get(stage, s"chunk=$i")
-        java.nio.file.Files.list(dir).forEach { f =>
-          if (f.getFileName.toString.endsWith(".parquet"))
-            java.nio.file.Files.setLastModifiedTime(f,
-              java.nio.file.attribute.FileTime
-                .fromMillis(mtimeBase + 10000L * i))
-        }
-      }
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$stage/chunk=*")
-    // gate-scoped shuffle fan-in: every stateful operator materializes one
-    // state store PER shuffle partition PER micro-batch — at the session's
-    // 32 partitions the fixed store init/commit overhead dwarfs the
-    // fixture-sized data. 8 partitions quarters it; correctness is
-    // partition-count-independent, and the batch aggregation over the
-    // drained sink runs after the conf is restored.
-    val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    withStateStore(spark) {
-      val q = xform(stream).writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally {
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", priorParts)
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(stage)).deleteRecursively()
-      }
-    }
-    val out = finish(spark.table(name)).pinTier
-    spark.catalog.dropTempView(name)
-    out
-  }
 
   /** Driver-gated streaming twin of the band join (q_band_join): the
     * stream-stream interval join run as a real readStream self-join whose
@@ -356,7 +281,7 @@ object Streams {
     * exact. This is the eviction-correctness check the windowed gates
     * cannot express. */
   def clickErrorPairsStreamGate(spark: SparkSession, sfDir: String): DataFrame =
-    drainAppendStreamGate(spark, sfDir, events => {
+    drainToMemory(spark, sfDir, chunksOf = events => {
       val midUs = events
         .agg(((min(unix_micros(col("ts"))) + max(unix_micros(col("ts")))) / 2)
           .cast("long")).head().getLong(0)
@@ -394,10 +319,7 @@ object Streams {
     * [[streamingDedup]], where the watermark delay is the re-admission
     * window. */
   def dedupStreamGate(spark: SparkSession, sfDir: String): DataFrame =
-    drainAppendStreamGate(spark, sfDir, events =>
-      Seq(events.filter(pmod(col("event_id"), lit(2)) === 0),
-        events.filter(pmod(col("event_id"), lit(2)) === 1)),
-      oneFilePerChunk = false)(stream => stream
+    drainToMemory(spark, sfDir)(stream => stream
       .withColumn("fp", xxhash64(col("event_type"), col("props"), col("value")))
       .dropDuplicates("fp"))(survivors => survivors
       .groupBy(col("event_type"))
@@ -420,10 +342,7 @@ object Streams {
     * the plain batch aggregate the DuckDB oracle computes; max_value is
     * rounded at the gate boundary per the float-agg oracle rule. */
   def runningProfileStreamGate(spark: SparkSession, sfDir: String): DataFrame =
-    drainAppendStreamGate(spark, sfDir, events =>
-      Seq(events.filter(pmod(col("event_id"), lit(2)) === 0),
-        events.filter(pmod(col("event_id"), lit(2)) === 1)),
-      oneFilePerChunk = false)(stream => {
+    drainToMemory(spark, sfDir)(stream => {
       import spark.implicits._
       runningUserProfile(spark, stream.as[Event]).toDF()
     })(profiles => profiles
@@ -440,7 +359,7 @@ object Streams {
     * hour').start IS date_trunc('hour', ts)). Session merge and tumbling
     * accumulation are different state operators; this gates the second. */
   def hourlyCountsStreamGate(spark: SparkSession, sfDir: String): DataFrame =
-    drainEventsStreamGate(spark, sfDir)(stream => stream
+    drainToMemory(spark, sfDir, "complete")(stream => stream
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -476,7 +395,7 @@ object Streams {
     * watermark (W0 = max(chunk-0 ts)ms − delay); batch 1's rows all merge
     * (lagged filter still 0) and windows ≤ W0 finalize; batch 2's rows
     * are dropped exactly when their window end ≤ W0 and merge otherwise;
-    * the trailing no-data batches (processAllAvailable waits for them —
+    * the trailing no-data batches (the drain waits for them —
     * constructNextBatch keeps running while the advancing watermark
     * requires another batch) finalize everything up to
     * `Wall = max(all ts)ms − delay`, withholding later windows in state.
@@ -487,8 +406,7 @@ object Streams {
     * the last ~10 days' merge, the last ~10 days' windows are withheld. */
   def lateDataWindowStreamGate(spark: SparkSession, sfDir: String,
                                delay: String = "10 days"): DataFrame =
-    drainAppendStreamGate(spark, sfDir, events =>
-      (0 until 3).map(i => events.filter(pmod(col("event_id"), lit(3)) === i)),
+    drainToMemory(spark, sfDir, chunksOf = splitBy(_, "event_id", 3),
       oneFilePerChunk = true)(stream => stream
       .withWatermark("ts", delay)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
@@ -509,7 +427,7 @@ object Streams {
     * batch form's zero fill. */
   def dailyPivotStreamGate(spark: SparkSession, sfDir: String,
                            types: Seq[String]): DataFrame =
-    drainEventsStreamGate(spark, sfDir)(stream => {
+    drainToMemory(spark, sfDir, "complete")(stream => {
       val counts = types.map(t =>
         count(when(col("event_type") === t, 1)).as(s"n_$t"))
       stream
@@ -536,33 +454,22 @@ object Streams {
   def indexMaintenanceStreamGate(spark: SparkSession, sfDir: String,
                                  queryTerms: Seq[String]): DataFrame = {
     import graft.text.InvertedIndex
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft-stream-invidx").toFile.getAbsolutePath
     val table = "graft_gate_stream_invidx"
     val docs = graft.model.Tables.documents(spark, sfDir)
-    (0 until 3).foreach(i =>
-      docs.filter(pmod(col("doc_id"), lit(3)) === i)
-        .write.mode("overwrite").parquet(s"$stage/chunk=$i"))
-    try {
-      InvertedIndex.build(docs.limit(0), table, s"$stage/idx")
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$stage/chunk=*")
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          InvertedIndex.admit(spark, batch, table, s"$stage/idx"); ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+    graft.Scratch.pinned("graft-stream-invidx", table) { stage =>
+      drainStaged(spark, stage, splitBy(docs, "doc_id", 3)) { stream =>
+        InvertedIndex.build(docs.limit(0), table, s"$stage/idx")
+        stream.writeStream
+          .option("checkpointLocation", s"$stage/ckpt")
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            InvertedIndex.admit(spark, batch, table, s"$stage/idx"); ()
+          }.start()
+      }
       // foreachBatch runs in a CLONED SparkSession: its appends invalidate
       // the clone's cached table relation, not this session's — without
       // the refresh the probe reads the pre-stream (empty) file listing
       spark.catalog.refreshTable(table)
       InvertedIndex.probe(spark, table, s"$stage/idx", queryTerms)
-        .pinTier // materialize before table+files drop
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-      ()
     }
   }
 
@@ -579,16 +486,9 @@ object Streams {
     * q_heavy_hitters_cms's oracle verbatim. */
   def cmsMaintenanceStreamGate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.CountMin
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft-stream-cms").toFile.getAbsolutePath
     val docs = graft.model.Tables.documents(spark, sfDir)
-    (0 until 3).foreach(i =>
-      docs.filter(pmod(col("doc_id"), lit(3)) === i)
-        .write.mode("overwrite").parquet(s"$stage/chunk=$i"))
-    try {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$stage/chunk=*")
-      val q = stream.writeStream
+    graft.Scratch.pinned("graft-stream-cms") { stage =>
+      drainStaged(spark, stage, splitBy(docs, "doc_id", 3))(_.writeStream
         .option("checkpointLocation", s"$stage/ckpt")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           CountMin.admit(spark,
@@ -596,8 +496,7 @@ object Streams {
               .as("term")),
             "term", s"$stage/cms", batchId)
           ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+        }.start())
       val toks = docs
         .select(explode(graft.text.TextAnalysis.tokens(col("text"))).as("term"))
       val exact = toks.groupBy(col("term")).agg(count(lit(1)).as("exact_cnt"))
@@ -607,10 +506,6 @@ object Streams {
         .select(col("term"), col("exact_cnt"), col("cms_estimate"),
           (col("cms_estimate") >= col("exact_cnt")).as("never_under"))
         .orderBy(col("exact_cnt").desc, col("term"))
-        .pinTier // materialize before the staging files drop
-    } finally {
-      new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-      ()
     }
   }
 
@@ -628,28 +523,18 @@ object Streams {
     * the ledger may change one score. */
   def annMaintenanceStreamGate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sim.IvfPqIndex
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft-stream-ivfpq").toFile.getAbsolutePath
     val emb = graft.model.Tables.embeddings(spark, sfDir)
-    (1 to 2).foreach(i =>
-      emb.filter(pmod(col("vec_id"), lit(3)) === i)
-        .write.mode("overwrite").parquet(s"$stage/chunk=$i"))
-    try {
-      IvfPqIndex.build(emb.filter(pmod(col("vec_id"), lit(3)) === 0),
-        s"$stage/idx")
-      val stream = spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$stage/chunk=*")
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          IvfPqIndex.admitBatch(spark, batch, s"$stage/idx", batchId); ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+    val thirds = splitBy(emb, "vec_id", 3)
+    graft.Scratch.pinned("graft-stream-ivfpq") { stage =>
+      drainStaged(spark, stage, thirds.tail) { stream =>
+        IvfPqIndex.build(thirds.head, s"$stage/idx")
+        stream.writeStream
+          .option("checkpointLocation", s"$stage/ckpt")
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            IvfPqIndex.admitBatch(spark, batch, s"$stage/idx", batchId); ()
+          }.start()
+      }
       IvfPqIndex.probe(spark, s"$stage/idx", emb, queryVecId = 0L, k = 10)
-        .pinTier // materialize before the staging files drop
-    } finally {
-      new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
-      ()
     }
   }
 

@@ -82,27 +82,4 @@ class RecommendSpec extends SparkSpec {
       .as[(String, String, Double)].collect().toSet
     assert(got == Set(("7", "100", 5.0), ("7", "200", 1.0)))
   }
-
-  test("ALS blocks knob is bench-only and parses loudly (ADVICE r15)") {
-    // unset: no override, any harness
-    assert(Recommend.alsBlocksOverride(None, None).isEmpty)
-    assert(Recommend.alsBlocksOverride(None, Some("bench")).isEmpty)
-    // set under the bench harness: consumed
-    assert(Recommend.alsBlocksOverride(Some("32"), Some("bench"))
-      .contains(32))
-    // set OUTSIDE the bench harness: loud failure, never silent drift
-    val e1 = intercept[IllegalArgumentException] {
-      Recommend.alsBlocksOverride(Some("32"), None)
-    }
-    assert(e1.getMessage.contains("bench-only"))
-    val e2 = intercept[IllegalArgumentException] {
-      Recommend.alsBlocksOverride(Some("32"), Some("verify"))
-    }
-    assert(e2.getMessage.contains("bench-only"))
-    // non-numeric value: named message, not a bare NumberFormatException
-    val e3 = intercept[IllegalArgumentException] {
-      Recommend.alsBlocksOverride(Some("lots"), Some("bench"))
-    }
-    assert(e3.getMessage.contains("integer block count"))
-  }
 }

@@ -19,28 +19,6 @@ class StreamsSpec extends SparkSpec {
     ev(4, "2024-01-01 01:30:00", 1, "click", 4.0),
     ev(5, "2024-01-01 02:05:00", 2, "error", 5.0))
 
-  test("state-store knob is bench-only and parses loudly (the ALS-blocks treatment)") {
-    // unset: no override regardless of harness
-    assert(Streams.stateStoreOverride(None, None).isEmpty)
-    assert(Streams.stateStoreOverride(None, Some("bench")).isEmpty)
-    // set under the declared bench harness: resolves to the provider class
-    assert(Streams.stateStoreOverride(Some("rocksdb"), Some("bench"))
-      .contains("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-    assert(Streams.stateStoreOverride(Some("hdfs"), Some("bench"))
-      .contains("org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
-    // set anywhere else: loud failure, never silent config drift
-    intercept[IllegalArgumentException] {
-      Streams.stateStoreOverride(Some("rocksdb"), None)
-    }
-    intercept[IllegalArgumentException] {
-      Streams.stateStoreOverride(Some("rocksdb"), Some("verify"))
-    }
-    // a typo'd value fails with a named message
-    intercept[IllegalArgumentException] {
-      Streams.stateStoreOverride(Some("rocksdbx"), Some("bench"))
-    }
-  }
-
   test("streaming tumblingCounts over two batches equals the batch twin") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Streams.Event]
@@ -96,6 +74,25 @@ class StreamsSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
+  test("a streaming gate that fails before the drain restores the fan-in and leaks no stage dir") {
+    // an empty type list makes the transform throw after the gate-scoped
+    // shuffle override is set, before start(): the override, the stage
+    // dir and the sink view must all be released on that path too
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def stageDirs(): Set[String] =
+      Option(tmp.list()).toSet.flatten.filter(_.startsWith("graft-"))
+    val before = stageDirs()
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(prior == "4")
+    intercept[NoSuchElementException] {
+      Streams.dailyPivotStreamGate(spark, sf, Nil)
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == prior)
+    assert(stageDirs() -- before == Set.empty[String])
+    assert(!spark.catalog.listTables().collect()
+      .exists(_.name.startsWith("graft_stream_gate_")))
+  }
+
   test("stream-stream join gate equals the batch band join on the fixture") {
     // append mode + live eviction: cross-chunk pairs near the time split
     // must survive the watermark for this to hold
@@ -131,7 +128,7 @@ class StreamsSpec extends SparkSpec {
     assert(streamed.nonEmpty)
     assert(streamed.toSeq == batch.toSeq)
     assert(!spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("graft_append_stream_")),
+      .exists(_.name.startsWith("graft_stream_gate_")),
       "gate must drop its memory-sink temp view")
   }
 

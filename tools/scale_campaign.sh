@@ -143,15 +143,6 @@ if [[ "$STAGE" == all || "$STAGE" == sf1 ]]; then
       sbt -batch "runMain graft.Bench $FLAGGED" 2>&1 \
       | tee "$OUT/sf1_flagged_runs3.bench.log" | tail -2
   fi
-  # ALS block-layout experiment (VERDICT r14 #8, stretch): same gate, same
-  # corpus, numUser/numItemBlocks 32 instead of spark.ml's default 10 —
-  # measurement-only knob, never set on a gated path (factor values are
-  # blocking-sensitive). Compare train stage vs the default-run's split.
-  SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 SPARK_GRAFT_CPUS=32 \
-    SPARK_GRAFT_SHUFFLE_PARTITIONS=320 SPARK_DRIVER_MEM=48g \
-    SPARK_GRAFT_ALS_BLOCKS=32 \
-    sbt -batch "runMain graft.Bench q_als_recommend" 2>&1 \
-    | tee "$OUT/sf1_als_blocks32.bench.log" | tail -2
 fi
 
 if [[ "$STAGE" == all || "$STAGE" == sf32 ]]; then
