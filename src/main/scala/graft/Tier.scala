@@ -26,7 +26,7 @@ object Tier {
   /** Scale-adaptive parallelism floor for compute-heavy map stages (r16,
     * guide §2.5 "input skew: one huge file"): a small parquet fixture
     * reads as ONE split, and every downstream map-side pass — k-means
-    * assignment cosines, PQ encode argmins, brute-force pair cosines
+    * assignment cosines, PQ encode argmins, brute-force top-k cosines
     * behind a BroadcastNestedLoopJoin — inherits that single partition
     * and runs on one core however many the session has (AQE coalesces by
     * BYTES and never widens; the Triangles wedge repartition documents

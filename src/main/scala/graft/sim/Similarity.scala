@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (north-star scope).
   *
-  * The embedding is an `array<float>` column; all math is built-in
-  * `zip_with`/`aggregate` expressions in double precision — codegen'd, no
-  * UDF. Two paths:
+  * The embedding is an `array<float>` column; the math runs in double
+  * precision on the native codegen'd [[dot]] expression, no UDF (the
+  * exact all-pairs [[cosineNearDups]] runs the same arithmetic in its own
+  * pair kernel, [[CosinePairs]]). Two top-k paths:
   *   - [[bruteForceTopK]]: exact top-k by cosine — the correctness baseline.
   *     O(|Q|·|C|) pairs, fine when either side is small (it's a broadcast
   *     nested-loop join: the query side broadcasts, the corpus streams).
@@ -875,7 +876,7 @@ object Similarity {
     * the within-cell compare quadratic the moment the corpus outgrows
     * its cells (measured 39.9x at x32 — Σ|cell|² ≈ n²/nlist). This form
     * scales the cell count by the FAISS occupancy rule `nlist ≈ 4·√n`
-    * (one column-pruned count, the requireExactScale precedent), putting
+    * (one column-pruned count), putting
     * both cost legs in the n^1.5 class — assignment n·nlist map-side
     * flops against broadcast centroids, within-cell pairs n²/nlist —
     * with shuffle volume linear in n throughout. The quantizer is
@@ -976,62 +977,30 @@ object Similarity {
   }
 
   /** Row cap for the exact quadratic baselines ([[cosineNearDups]], an
-    * unfiltered [[bruteForceTopK]]): at this size the theta self-join is
-    * ~2×10⁸ pairs — seconds on one box, and the largest probe any audit
+    * unfiltered [[bruteForceTopK]]): at this size the all-pairs triangle
+    * is ~2×10⁸ pairs — seconds on one box, and the largest probe any audit
     * needs. Beyond it the caller is pointing an O(n²) oracle at a corpus;
     * the guard makes the documented design intent ("small-sample baseline
     * only; [[cosineNearDupsLSH]]/[[ivfTopK]] are the corpus paths")
     * enforceable instead of advisory. */
   val MaxExactRows: Long = 20000L
 
-  private def requireExactScale(embeddings: DataFrame, op: String,
-                                scalePath: String, maxExactRows: Long): Unit = {
-    // a cheap count (column-pruned scan) vs an unbounded n² join — the one
-    // extra job is the price of the guard and is ~free at baseline sizes
-    val n = embeddings.select(col("vec_id")).count()
-    require(n <= maxExactRows,
-      s"$op: $n input rows exceeds maxExactRows=$maxExactRows — this is the " +
-        s"exact O(n²) small-sample baseline; run $scalePath on a corpus, or " +
-        "confine the probe (filter vec_id) the way recallAudit does")
-  }
-
-  /** Embedding-cosine near-dup pairs: all (a < b) with cosine ≥ threshold.
-    * O(n²) in corpus size — this is the small-sample ORACLE BASELINE only
-    * (sf0.01-scale correctness checks and the recall denominator in
-    * SimilaritySpec); the corpus-scale path is [[cosineNearDupsLSH]].
-    * Fail-fast row guard: refuses more than `maxExactRows` input rows
-    * rather than silently launching a quadratic plan at corpus scale. */
+  /** Embedding-cosine near-dup pairs: all (a < b) with cosine ≥ threshold,
+    * `cos_sim` rounded to 4 places. O(n²) in corpus size — this is the
+    * small-sample ORACLE BASELINE only (sf0.01-scale correctness checks and
+    * the recall denominator in SimilaritySpec); the corpus-scale path is
+    * [[cosineNearDupsLSH]]. Runs as the packed pair kernel [[CosinePairs]]:
+    * one bounded collect (which is also the fail-fast row guard: more than
+    * `maxExactRows` input rows, null ids included, are refused rather than
+    * launching a quadratic job at corpus scale), one Spark job over the
+    * pairs, and the rounding and threshold filter on the candidates only.
+    * Rows with a null `vec_id` or a null embedding pair with nothing. A zero
+    * or empty vector hits Catalyst's division by zero: DIVIDE_BY_ZERO under
+    * ANSI mode, else null pairs that the filter drops. A NaN element
+    * gives NaN pairs, which Spark's `NaN >= t` keeps. */
   def cosineNearDups(embeddings: DataFrame, threshold: Double,
-                     maxExactRows: Long = MaxExactRows): DataFrame = {
-    requireExactScale(embeddings, "cosineNearDups", "cosineNearDupsLSH", maxExactRows)
-    // r16, two no-result-change fixes to the deliberate O(n²) baseline:
-    //   - the non-equi pair join is a BroadcastNestedLoopJoin whose
-    //     parallelism is the STREAMED side's partitioning, and the
-    //     embeddings fixture reads as ONE file → one task computed every
-    //     pair (guide §2.5 input skew); repartitioning the streamed side
-    //     spreads the n²/2 cosines across the session's cores.
-    //   - each side's norm is a per-ROW constant: hoisting
-    //     sqrt(dot(e,e)) into the map stage evaluates it n times instead
-    //     of n²/2 times — the same expression tree on the same rows, so
-    //     every published cos_sim is bit-identical (dot/(na·nb) in the
-    //     exact IEEE order cosine() already used).
-    val par = embeddings.sparkSession.sparkContext.defaultParallelism
-    val a = embeddings.select(col("vec_id").as("id_a"),
-        col("embedding").as("emb_a"), norm(col("embedding")).as("na"))
-      .repartition(par)
-    val b = embeddings.select(col("vec_id").as("id_b"),
-      col("embedding").as("emb_b"), norm(col("embedding")).as("nb"))
-    // the broadcast hint pins the BNLJ roles (ADVICE r16): without it the
-    // planner picks the broadcast side from size estimates over two
-    // projections of the same table — if it broadcast `a`, the repartition
-    // above would buy nothing and just add a shuffle
-    a.join(b.hint("broadcast"), col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(dot(col("emb_a"), col("emb_b")) / (col("na") * col("nb")), 4)
-          .as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-      .orderBy(col("id_a"), col("id_b"))
-  }
+                     maxExactRows: Long = MaxExactRows): DataFrame =
+    CosinePairs.nearDups(embeddings, threshold, maxExactRows)
 
   /** Driver-gated recall audit for the three approximate similarity paths
     * — each measured against the property it actually promises:

@@ -19,9 +19,10 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * Excluded: queries whose construction runs driver work (PageRank/ALS/IVF
   * training, k-means, star-contraction loops, streaming gates) — their
-  * shape is asserted in their own specs — and the two guarded quadratic
-  * baselines (q_ann_brute, q_cosine_near_dups), which are documented
-  * small-sample oracles.
+  * shape is asserted in their own specs — and the guarded quadratic
+  * baseline q_ann_brute, a documented small-sample oracle.
+  * q_cosine_near_dups is pinned although its construction runs its pair
+  * kernel: at fixture scale that is one small collect and one pair job.
   */
 class GoldenPlanSpec extends SparkSpec {
 
@@ -236,6 +237,15 @@ class GoldenPlanSpec extends SparkSpec {
     // with NO join below it (a join reappearing here means the optimizer
     // pulled the DP back into the candidate join, the exact regression
     // the pin exists to prevent)
+    // exact cosine near-dups: the pair kernel scores the triangle in its
+    // own Spark job and pins only the candidates; the returned plan
+    // rounds, filters and orders that ExistingRDD scan with one exchange
+    // (the ordering). A nested loop or cartesian here means the n²/2
+    // pairs went back through a join.
+    "q_cosine_near_dups" -> Golden(
+      required = Seq("Scan ExistingRDD"),
+      forbidden = Seq("CartesianProduct", "BroadcastNestedLoopJoin"),
+      maxExchanges = Some(1)),
     "q_edit_neardups" -> Golden(
       required = Seq("levenshtein", "Scan ExistingRDD"),
       forbidden = Seq("Join", "CartesianProduct")),

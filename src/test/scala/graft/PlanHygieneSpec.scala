@@ -12,9 +12,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * Scope notes: queries whose CONSTRUCTION is expensive (PageRank fixpoint,
   * ALS training, IVF k-means — they run driver actions while building the
-  * plan) are exercised by their own specs; the two intentionally non-equi
-  * quadratic baselines (q_ann_brute, q_cosine_near_dups) are documented
-  * small-sample oracles and excluded from the cartesian sweep.
+  * plan) are exercised by their own specs; the intentionally non-equi
+  * quadratic baseline q_ann_brute is a documented small-sample oracle and
+  * excluded from the cartesian sweep.
   */
 class PlanHygieneSpec extends SparkSpec {
 
@@ -208,7 +208,7 @@ class PlanHygieneSpec extends SparkSpec {
 
   test("no CartesianProduct in any equi-expressible query plan") {
     val excluded = Set(
-      "q_ann_brute", "q_cosine_near_dups", // documented non-equi oracles
+      "q_ann_brute",                       // documented non-equi oracle
       "q_als_recommend", "q_ann_ivf",      // ML training at construction
       "q_pagerank_parts", "q_pagerank_filtered",
       "q_hits_parts")                            // fixpoint at construction
