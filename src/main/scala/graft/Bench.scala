@@ -44,6 +44,9 @@ object Bench {
   private def f3(d: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
 
+  private def jmap(entries: Seq[(String, String)]): String =
+    entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
   private def gcMillis: Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -66,133 +69,13 @@ object Bench {
         ts.max > minSec && ts.max / ts.min > ratio => name
     }.sorted
 
-  /** Inter-query hygiene-sweep decision (VERDICT r13 #6). A sweep fires
-    * when ANY of:
-    *   - the amortized cadence is due (`sinceSweep >= sweepEvery`);
-    *   - residual storage AFTER the cache clear still exceeds the
-    *     residency budget (multi-query accumulation runaway);
-    *   - the query that JUST ran drove storage past the peak budget — at
-    *     ×32 a 7.7 GB q_triangles predecessor bled GC/storage pressure
-    *     into q_kcore for up to K−1 queries under the cadence-only policy
-    *     (118.6 s in-sequence vs 54.9 s solo, BENCH_SF32_r13); a
-    *     high-water query now pays for its own cleanup immediately
-    *     instead of taxing its successors.
-    * Pure over the sampled numbers so BenchSpec pins the boundaries. */
-  def sweepAfter(sinceSweep: Int, sweepEvery: Int,
-                 residentMb: Long, residentBudgetMb: Long,
-                 peakMb: Long, peakBudgetMb: Long): Boolean =
-    sinceSweep >= sweepEvery || residentMb >= residentBudgetMb ||
-      peakMb >= peakBudgetMb
+  /** The inter-query `System.gc()` hygiene sweep runs every
+    * [[GcSweepEvery]] queries: r11's A/B cut the per-query sweep's 93.5 s
+    * of a 342 s suite to this cadence (BASELINE.md §5, which also records
+    * why no other sweep trigger is kept). */
+  val GcSweepEvery: Int = 4
 
-  /** Bounded post-sweep drain-wait (round 14). The sweep's
-    * `unpersist(blocking = false)` + `System.gc()` only ENQUEUE the
-    * release: a multi-GB tier then drains (block eviction, cleaner I/O,
-    * shuffle-file deletion) CONCURRENTLY with the next query under the
-    * fire-and-forget policy. Measured at ×32: q_kcore read 131.6 s
-    * in-sequence behind q_triangles' 11.7 GB residue vs 52.2 s solo —
-    * with only +2.8 s of GC delta, so the tax was eviction/cleaner
-    * contention, not collection (BENCH_SF32_r14; the r13 cadence-only
-    * policy had the same signature at 118.6 vs 54.9). Polling resident
-    * storage until it falls under the residency budget (or the deadline)
-    * makes the release synchronous, so the next query measures its own
-    * plan. Takes the reader and sleeper as functions so BenchSpec pins
-    * the three behaviors: immediate return under budget, poll-until-
-    * drained, bounded give-up at the deadline. Returns ms waited. */
-  def drainWait(deadlineMs: Long, budgetMb: Long, pollMs: Long = 200L,
-                readResidentMb: () => Long,
-                sleep: Long => Unit = Thread.sleep): Long = {
-    var waited = 0L
-    while (waited < deadlineMs && readResidentMb() >= budgetMb) {
-      val step = math.min(pollMs, deadlineMs - waited)
-      sleep(step)
-      waited += step
-    }
-    waited
-  }
-
-  /** Give-up back-off for the drain-wait (ADVICE r14): when a drain hit
-    * its deadline with residency still above budget (an undrainable
-    * residue — e.g. a leak, or state the cleaner cannot release), every
-    * later sweep would re-fire the full wait on the same reading and pay
-    * up to deadline×nQueries of unattributed wall time. A drain is
-    * re-attempted only when residency has FALLEN below the level the
-    * give-up recorded (something released since — the wait can make
-    * progress again); at or above it, the wait is skipped and counted
-    * (`drain_skips`). Pure so BenchSpec pins both branches. */
-  def shouldAttemptDrain(lastGiveUpMb: Option[Long], residentMb: Long): Boolean =
-    lastGiveUpMb.forall(residentMb < _)
-
-  /** Did a drain-wait GIVE UP (hit its deadline with residency still
-    * over budget)? Distinct from merely reaching the deadline: a ZERO
-    * deadline is the documented A/B disable knob
-    * (`SPARK_GRAFT_DRAIN_WAIT_MS=0`), and a disabled wait is neither a
-    * timeout nor a give-up — counting it as one would poison exactly
-    * the drain-attribution comparison the knob exists for (every heavy
-    * sweep of an A/B run would report a 'timeout' though no wait ever
-    * ran, then engage the back-off). Pure so BenchSpec pins the
-    * disabled case alongside the genuine-timeout one. */
-  def drainTimedOut(deadlineMs: Long, waitedMs: Long,
-                    afterMb: Long, budgetMb: Long): Boolean =
-    deadlineMs > 0 && waitedMs >= deadlineMs && afterMb >= budgetMb
-
-  /** Bounded cleaner quiesce (VERDICT r14 #4). The storage drain-wait
-    * above proves RESIDENT MEMORY is released, but shuffle-file deletion
-    * runs in the ContextCleaner thread and keeps taxing the next query's
-    * disk I/O after residency is back under budget — measured ~1.7× on
-    * ×32 heavies behind a big-shuffle predecessor (139.7 s in-sequence
-    * vs 82.0 s same-window solo, BENCH_SF32_r14
-    * `kcore_sequence_attribution`). This waits until a monotone
-    * progress counter has been QUIET for `quietMs`, bounded by
-    * `deadlineMs`. The harness runs it TWICE after a heavy sweep, with
-    * two different counters: first the cleanup-event count
-    * ([[org.apache.spark.graft.CleanerBridge]] — quiet means the
-    * cleaner's reference queue drained, i.e. every removal was
-    * INITIATED), then the on-disk block-manager file count
-    * ([[localBlockFiles]] — stable means the asynchronous deletions
-    * themselves finished; with the cleaner's default non-blocking
-    * shuffle policy the event alone fires before the files are gone,
-    * and making it blocking was measured to starve broadcast cleanup —
-    * see the session-construction note in [[main]]). Floor cost when
-    * there is nothing to clean is one quiet window per phase, so the
-    * harness only invokes it on peak-/residency-triggered sweeps (the
-    * heavy-predecessor case), never on cadence sweeps. Returns ms
-    * waited; a zero deadline disables (A/B knob). Pure over the
-    * injected reader/sleeper. */
-  def quiesce(deadlineMs: Long, quietMs: Long, pollMs: Long = 100L,
-              readCount: () => Long,
-              sleep: Long => Unit = Thread.sleep): Long = {
-    if (deadlineMs <= 0 || quietMs <= 0) return 0L
-    var waited = 0L
-    var last = readCount()
-    var quiet = 0L
-    while (waited < deadlineMs && quiet < quietMs) {
-      val step = math.min(pollMs, deadlineMs - waited)
-      sleep(step)
-      waited += step
-      val now = readCount()
-      if (now != last) { last = now; quiet = 0L } else quiet += step
-    }
-    waited
-  }
-
-  /** File count under the JVM's live block-manager directories — the
-    * deletion-progress signal for [[quiesce]]'s second phase: shuffle
-    * files are removed by an async executor pool AFTER the cleaner
-    * event fires (non-blocking policy), and a STABLE count is the
-    * filesystem's own statement that the predecessor's deletion I/O is
-    * done. Counts only `blockmgr-*` trees under the session's local
-    * dirs; stale trees from dead JVMs inflate the absolute value but
-    * not its stability, which is all quiesce reads. Metadata-only walk,
-    * invoked only after heavy sweeps. */
-  def localBlockFiles(localDirs: Seq[String]): Long = {
-    def countRec(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(countRec).sum
-      else 1L
-    localDirs.map(new java.io.File(_)).filter(_.isDirectory)
-      .flatMap(d => Option(d.listFiles()).toSeq.flatten)
-      .filter(f => f.getName.startsWith("blockmgr-") && f.isDirectory)
-      .map(countRec).sum
-  }
+  def sweepAfter(sinceSweep: Int): Boolean = sinceSweep >= GcSweepEvery
 
   /** The same-session canary set (VERDICT r14 #3): three tiny fixed
     * plan-invariant probes — pure codegen CPU, one small shuffle, one
@@ -246,19 +129,15 @@ object Bench {
     * order and the tail-survival budget. */
   def summaryLine(totalSec: Double, nQueries: Int, nErrors: Int, runs: Int,
                   blas: String, gcMsTotal: Long, gcMsSweep: Long,
-                  drainMs: Long, drainTimeouts: Int = 0, drainSkips: Int = 0,
-                  cleanerMs: Long = 0L, cleanerEvents: Long = 0L,
                   canary: Seq[(String, Double)] = Nil,
                   canaryErrors: Seq[(String, Long)] = Nil,
                   stageMin: Seq[(String, Double)] = Nil,
-                  gcSweeps: Long, gcSweepEvery: Int, stalls: Seq[String],
+                  gcSweeps: Long, stalls: Seq[String],
                   tierBuild: Seq[(String, (String, Double))],
                   split: Seq[(String, Double, Seq[(String, Double)], Double)],
                   topGc: Seq[(String, Long)], topQueries: Seq[(String, Double)],
                   errors: Seq[(String, String)], sf: String,
                   queriesFile: String = ""): String = {
-    def jmap(entries: Seq[(String, String)]): String =
-      entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val gcJ = jmap(topGc.map { case (k, v) => k -> v.toString })
     val tiersTop = tierBuild.sortBy(-_._2._2).take(10)
     val tiersJ = jmap(tiersTop.sortBy(_._1).map { case (k, (q, sec)) =>
@@ -272,7 +151,7 @@ object Bench {
     })
     val stallsJ = stalls.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qsJ = jmap(topQueries.map { case (k, v) => k -> f3(v) })
-    val errsJ = jmap(errors.map { case (k, m) => k -> ("\"" + m + "\"") })
+    val errsJ = jmap(errors.map { case (k, m) => k -> Json.quote(m) })
     val canaryJ = jmap(canary.map { case (k, v) => k -> f3(v) })
     val canarySum = canary.map(_._2).sum
     // name tiebreak: stageMin arrives from an unordered map, and a
@@ -294,10 +173,7 @@ object Bench {
       s""""stage_min_dropped":${stageMin.size - stageTop.size},""" +
       s""""queries":$qsJ,"errors":$errsJ,""" +
       s""""gc_ms_total":$gcMsTotal,"gc_ms_sweep":$gcMsSweep,""" +
-      s""""drain_ms":$drainMs,"drain_timeouts":$drainTimeouts,""" +
-      s""""drain_skips":$drainSkips,""" +
-      s""""cleaner_drain_ms":$cleanerMs,"cleaner_events":$cleanerEvents,""" +
-      s""""gc_sweeps":$gcSweeps,"gc_sweep_every":$gcSweepEvery,""" +
+      s""""gc_sweeps":$gcSweeps,"gc_sweep_every":$GcSweepEvery,""" +
       // `canaries` is FIXED-cardinality (the three probes), so it may
       // live in the truncation-surviving headline zone: heavies-as-
       // ratio-to-canary = queries[q] / canary_sum, derivable from any
@@ -322,21 +198,19 @@ object Bench {
       s""""sf":${Json.quote(sf)},"metric":"total","value":${f3(totalSec)}}"""
   }
 
+  /** The full contract line: the complete per-query map (a failed query
+    * at its negative elapsed) and every error message. Parses when stdout
+    * is kept whole; its head is what a 2 KB tail cut sacrifices. */
+  def contractLine(total: Double, results: Seq[(String, Double, Option[String])],
+                   sf: String): String = {
+    val qs = jmap(results.map { case (k, v, _) => k -> v.toString })
+    val errs = jmap(results.collect { case (k, _, Some(m)) => k -> Json.quote(m) })
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":${Json.quote(sf)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // NOTE: `spark.cleaner.referenceTracking.blocking.shuffle=true` was
-    // tried here first (it makes `shuffleCleaned` fire only after the
-    // files are gone — the ideal quiesce signal) and reverted the same
-    // round. The slowdown that first implicated it (sf1 ALS 63→220 s
-    // with 55–126 s GC) turned out to be SHARED-BOX drift, not the
-    // conf: the unchanged r14 binary read 56.8 s and 281.6 s in the
-    // same hour on the same corpus (host load 19+ from outside the VM)
-    // — exactly the drift class the pass canaries now quantify. The
-    // revert stands anyway: the default non-blocking policy never
-    // serializes the cleaner thread on deletion I/O, and the quiesce
-    // observes deletion completion directly on disk instead
-    // ([[localBlockFiles]]), which needs no cleaner-policy change.
     val spark = GraftSession.local(cpus.toInt, appName = "graft-bench")
     // warmup outside the timed region: without it the first measured query
     // absorbs several seconds of classloader + codegen-compiler startup and
@@ -402,55 +276,12 @@ object Bench {
     val tierBuilds = scala.collection.mutable.Map[String, (String, Double)]()
     // the inter-query System.gc() hygiene sweep is a FORCED full collection
     // — its cost is harness protocol, not query GC, and must be separable
-    // in the artifact (VERDICT r9 "what's wrong" #2). r10 measured the
-    // per-query-per-pass policy at 93.5 s of a 342 s suite (89% of all GC
-    // time), so r11 amortizes it: sweep every K queries (default 4) OR
-    // immediately when post-clearCache storage residency exceeds a budget
-    // — broadcast blocks are reclaimed only by the ContextCleaner on GC,
-    // and the residency trigger is what keeps a broadcast-heavy stretch
-    // from accumulating for K queries. Both knobs are env-tunable and the
-    // artifact records the policy (gc_sweep_every) plus the sweep count
-    // (gc_sweeps), so the A/B vs the old per-query policy stays auditable.
-    val gcSweepEvery = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_GC_SWEEP_EVERY", "4").toInt)
-    // the residency budget is a SAFETY VALVE, not the cadence: unpersist
-    // above is non-blocking, so the post-clear reading still counts
-    // blocks whose release is in flight — a tight budget (A/B'd at 512 MB)
-    // degenerates back to near-per-query sweeping on that phantom signal
-    // (255/348 sweeps fired). 2 GiB only catches genuine multi-query
-    // accumulation runaway.
-    val gcSweepMb =
-      sys.env.getOrElse("SPARK_GRAFT_GC_SWEEP_MB", "2048").toLong
-    // the peak budget (VERDICT r13 #6, see sweepAfter): a query whose own
-    // storage high-water crossed this sweeps IMMEDIATELY after itself —
-    // sized above every sf0.1 peak (broadcast+pin residency there stays
-    // well under 1 GiB) so it only fires on the ×-scale heavies it exists
-    // for (q_triangles read 7.7 GB at ×32)
-    val gcSweepPeakMb =
-      sys.env.getOrElse("SPARK_GRAFT_GC_SWEEP_PEAK_MB", "4096").toLong
+    // in the artifact (VERDICT r9 "what's wrong" #2): the artifact records
+    // the cadence (gc_sweep_every), the sweep count (gc_sweeps) and their
+    // GC time (gc_ms_sweep)
     var sinceSweep = 0
     var gcSweeps = 0L
     var gcSweepMs = 0L
-    // post-sweep drain-wait deadline (see drainWait); 0 disables
-    val drainDeadlineMs =
-      sys.env.getOrElse("SPARK_GRAFT_DRAIN_WAIT_MS", "15000").toLong
-    var drainMsTotal = 0L
-    var drainTimeouts = 0
-    var drainSkips = 0
-    // give-up back-off state (ADVICE r14, see shouldAttemptDrain)
-    var drainGiveUpMb: Option[Long] = None
-    // cleaner quiesce (VERDICT r14 #4): event counter + budget knobs;
-    // only invoked on peak-/residency-triggered sweeps (the heavy-
-    // predecessor case) so the quiet-window floor cost never taxes the
-    // cadence sweeps of a small-query suite
-    val cleanerCount =
-      org.apache.spark.graft.CleanerBridge.attachCounter(spark.sparkContext)
-    val cleanerDeadlineMs =
-      sys.env.getOrElse("SPARK_GRAFT_CLEANER_DRAIN_MS", "20000").toLong
-    val cleanerQuietMs =
-      sys.env.getOrElse("SPARK_GRAFT_CLEANER_QUIET_MS", "500").toLong
-    var cleanerMsTotal = 0L
-    val cleanerEvents0 = cleanerCount.map(_.apply()).getOrElse(0L)
     // canary floors (VERDICT r14 #3): min across passes per canary; and
     // per-canary error counts (ADVICE r15 — an always-failing canary
     // must be VISIBLE in the headline, not silently absent)
@@ -461,11 +292,6 @@ object Bench {
     val stageMins = scala.collection.mutable.Map[String, Double]()
     val gcTotal0 = gcMillis
     Telemetry.drain() // discard warmup-era recordings
-    def readResidentMb(): Long =
-      try spark.sparkContext.statusTracker.getExecutorInfos
-        .map(i => i.usedOnHeapStorageMemory + i.usedOffHeapStorageMemory)
-        .sum / (1024 * 1024)
-      catch { case NonFatal(_) => 0L }
     for (pass <- 1 to runs) {
     // pass-start canaries: the box-noise floor measured in the SAME
     // session minutes as the heavies they normalize (see canaries)
@@ -500,7 +326,7 @@ object Bench {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
         catch { case NonFatal(e) =>
           Some((e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse(""))
-            .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(160))
+            .take(160))
         }
       val dt = (System.nanoTime() - t0) / 1e9
       val drained = Telemetry.drain()
@@ -554,7 +380,7 @@ object Bench {
         buildSec.map(b => s""","build_sec":${f3(b)}""").getOrElse("") +
         (drained - name).toSeq.sortBy(_._1)
           .map { case (k, v) => s""","$k":${f3(v)}""" }.mkString +
-        err.map(m => s""","err":"$m"""").getOrElse("") + "}")
+        err.map(m => ",\"err\":" + Json.quote(m)).getOrElse("") + "}")
       // release the query's pinned state before the next query:
       // localCheckpoint blocks stay in the block manager until their RDD is
       // GC'd, so a 90-query suite otherwise accumulates every pinned
@@ -568,66 +394,15 @@ object Bench {
       spark.catalog.clearCache()
       // broadcast blocks are only reclaimed by the ContextCleaner on GC —
       // nudge it so broadcast-heavy fixpoints don't accumulate residency
-      // across the suite (VERDICT r4 "what's wrong" #3), but amortized:
-      // every K queries, or sooner when residual storage (pinned blocks
-      // whose unpersist hasn't landed, broadcasts awaiting the cleaner)
-      // stays above the budget after the cache clear
+      // across the suite (VERDICT r4 "what's wrong" #3), amortized to
+      // every GcSweepEvery queries
       sinceSweep += 1
-      val residentMb = readResidentMb()
-      val peakNowMb = storagePeak.get() / (1024 * 1024)
-      // a peak-/residency-triggered sweep is the heavy-predecessor case
-      // the cleaner quiesce exists for; a cadence sweep is hygiene only
-      val heavySweep = residentMb >= gcSweepMb || peakNowMb >= gcSweepPeakMb
-      if (sweepAfter(sinceSweep, gcSweepEvery, residentMb, gcSweepMb,
-            peakNowMb, gcSweepPeakMb)) {
+      if (sweepAfter(sinceSweep)) {
         val gcSweep0 = gcMillis
         System.gc()
         gcSweepMs += gcMillis - gcSweep0
         gcSweeps += 1
         sinceSweep = 0
-        // the sweep only ENQUEUES the release (see drainWait): hold the
-        // suite until resident storage actually falls under the residency
-        // budget so the next query never measures its predecessor's
-        // eviction I/O. Bounded; env-tunable; 0 disables (A/B knob).
-        // After a deadline give-up the wait is SKIPPED until residency
-        // falls below the give-up level (ADVICE r14: an undrainable
-        // residue would otherwise pay deadline×nQueries), and give-ups
-        // are counted separately from productive waits.
-        // the back-off decision must see POST-GC residency: the pre-GC
-        // reading includes fresh not-yet-collected blocks, so comparing
-        // it against a post-GC give-up level would skip drains that
-        // could now succeed (and never reset the back-off)
-        val residentAfterGc = readResidentMb()
-        if (shouldAttemptDrain(drainGiveUpMb, residentAfterGc)) {
-          val waited = drainWait(
-            deadlineMs = drainDeadlineMs, budgetMb = gcSweepMb,
-            readResidentMb = readResidentMb _)
-          drainMsTotal += waited
-          val after = readResidentMb()
-          if (drainTimedOut(drainDeadlineMs, waited, after, gcSweepMb)) {
-            drainTimeouts += 1
-            drainGiveUpMb = Some(after)
-          } else drainGiveUpMb = None
-        } else drainSkips += 1
-        // storage is drained; now make the predecessor's SHUFFLE-FILE
-        // deletion synchronous too (VERDICT r14 #4, see quiesce) — only
-        // after heavy sweeps, where the deletion I/O is the measured
-        // ~1.7× successor tax. Phase 1: cleaner queue drained (every
-        // removal initiated); phase 2: on-disk block file count stable
-        // (the async deletions themselves finished).
-        if (heavySweep) {
-          cleanerCount.foreach { read =>
-            cleanerMsTotal += quiesce(deadlineMs = cleanerDeadlineMs,
-              quietMs = cleanerQuietMs, readCount = read)
-          }
-          val localDirs = sys.env.get("SPARK_LOCAL_DIRS")
-            .orElse(spark.sparkContext.getConf.getOption("spark.local.dir"))
-            .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
-            .split(",").toSeq
-          cleanerMsTotal += quiesce(deadlineMs = cleanerDeadlineMs,
-            quietMs = cleanerQuietMs, pollMs = 250L,
-            readCount = () => localBlockFiles(localDirs))
-        }
       }
     }
     }
@@ -640,15 +415,8 @@ object Bench {
               else best.getOrElse(n, Double.NaN)
       (n, v, errors.get(n))
     }
-    def jmap(entries: Seq[(String, String)]): String =
-      entries.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = jmap(results.map { case (k, v, _) => k -> v.toString })
-    val errs = jmap(results.collect { case (k, _, Some(m)) => k -> ("\"" + m + "\"") })
     val total = results.collect { case (_, v, None) => v }.sum
-    // full contract line: complete per-query map (parses when stdout is
-    // kept whole; its head is what a 2 KB tail cut sacrifices)
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":${Json.quote(sfDir)}}"""
+    val fullLine = contractLine(total, results, sfDir)
     println(fullLine)
     // ALSO persist the full contract line to a file and advertise the path
     // in the tail-surviving headline (VERDICT r16 #2): a truncated stdout
@@ -678,14 +446,11 @@ object Bench {
     println(summaryLine(
       totalSec = total, nQueries = names.size, nErrors = errors.size,
       runs = runs, blas = blasBackend, gcMsTotal = gcMillis - gcTotal0,
-      gcMsSweep = gcSweepMs, drainMs = drainMsTotal,
-      drainTimeouts = drainTimeouts, drainSkips = drainSkips,
-      cleanerMs = cleanerMsTotal,
-      cleanerEvents = cleanerCount.map(_.apply() - cleanerEvents0).getOrElse(0L),
+      gcMsSweep = gcSweepMs,
       canary = canaryBest.toSeq.sortBy(_._1),
       canaryErrors = canaryErrs.toSeq.sortBy(_._1),
       stageMin = stageMins.toSeq,
-      gcSweeps = gcSweeps, gcSweepEvery = gcSweepEvery,
+      gcSweeps = gcSweeps,
       stalls = suspectStalls(passTimes.toMap),
       tierBuild = tierBuilds.toSeq,
       split = split,

@@ -147,16 +147,6 @@ object SparkEntry {
       col("c_mktsegment").as("watches"),
       split(col("c_name"), "#").getItem(1).as("friends"))
 
-  /** Writes the deterministic XML twin of the customer table (attributes via
-    * the `_` prefix, `related` as repeated child elements — the reference
-    * crawl shape, `YoutubeDataset_loader_final.py:75-108`) into the JVM temp
-    * dir and returns the path. Exercises both sentinel paths on read-back:
-    * `_length` carries a non-numeric segment name (→ -1) and `_ratings` is
-    * omitted for every 10th row (missing attribute → -1). */
-  /** JSONL round-trip fixture: the documents corpus written as
-    * line-delimited JSON (the LLM-corpus interchange format), re-read by
-    * the schema'd jsonl source — equality against the parquet original
-    * proves the write→scan→type boundary faithful. */
   /** Shared SCD2 fixture (q_scd2 / q_scd2_table, oracle-mirrored): the
     * customer dimension at version 1 plus planted pre-existing history
     * (custkey%10==0), and a batch of changes (%7==0 → segment MOVED),
@@ -189,6 +179,10 @@ object SparkEntry {
     (cur.unionByName(hist), batch)
   }
 
+  /** JSONL round-trip fixture: the documents corpus written as
+    * line-delimited JSON (the LLM-corpus interchange format), re-read by
+    * the schema'd jsonl source — equality against the parquet original
+    * proves the write→scan→type boundary faithful. */
   private def jsonlDocFixture(s: SparkSession, d: String): String = {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_docs_jsonl_" +
       Integer.toHexString(d.hashCode)
@@ -196,6 +190,12 @@ object SparkEntry {
     path
   }
 
+  /** Writes the deterministic XML twin of the customer table (attributes via
+    * the `_` prefix, `related` as repeated child elements — the reference
+    * crawl shape, `YoutubeDataset_loader_final.py:75-108`) into the JVM temp
+    * dir and returns the path. Exercises both sentinel paths on read-back:
+    * `_length` carries a non-numeric segment name (→ -1) and `_ratings` is
+    * omitted for every 10th row (missing attribute → -1). */
   private def xmlVideoFixture(s: SparkSession, d: String): String = {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_videos_xml_" +
       Integer.toHexString(d.hashCode)

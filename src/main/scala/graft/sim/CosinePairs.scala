@@ -27,11 +27,11 @@ import org.apache.spark.sql.types._
   * codegen: each float widened to double, summed over min(len_a, len_b) in
   * index order with one accumulator. No unrolling, no FMA, so every
   * published `cos_sim` is bit-identical to the nested-loop formulation.
-  * The division stays Catalyst's so that a zero or empty vector (norm 0)
-  * keeps Spark's semantics: its pairs are candidates (r is NaN), and
-  * Catalyst's divide raises DIVIDE_BY_ZERO under ANSI mode, else yields
-  * null, which the threshold filter drops. A vector holding a NaN pairs at
-  * NaN with everything, kept: Spark orders NaN above every number. */
+  * The division stays Catalyst's, a `try_divide` as in
+  * [[Similarity.cosine]]: a zero or empty vector's pairs are candidates (r
+  * is NaN), divide to null with ANSI mode on or off, and the threshold
+  * filter drops them. A vector holding a NaN pairs at NaN with everything,
+  * kept: Spark orders NaN above every number. */
 private[sim] object CosinePairs {
 
   /** How far below the threshold a raw cosine stays a candidate. Safe:
@@ -45,8 +45,8 @@ private[sim] object CosinePairs {
     * t − 1e-4 lies below t − 5e-5 − 2.3e-16 by far more than its own
     * rounding. For t > 2 no cosine rounds to t, and for t < −2 every cosine
     * clears the floor. NaN is kept explicitly, so a zero divisor reaches
-    * Catalyst's divide and a NaN cosine reaches its `NaN >= t`, which
-    * holds. */
+    * Catalyst's null-guarded divide and a NaN cosine reaches its
+    * `NaN >= t`, which holds. */
   val Margin: Double = 1e-4
 
   /** Rows sorted by id; row i's vector is `data(off(i) until off(i + 1))`. */
@@ -136,7 +136,7 @@ private[sim] object CosinePairs {
     b.destroy()
     candidates
       .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"),
-        round(col("dot") / col("nn"), 4).as("cos_sim"))
+        round(try_divide(col("dot"), col("nn")), 4).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
       .orderBy(col("id_a"), col("id_b"))
   }

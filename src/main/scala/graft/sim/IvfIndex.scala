@@ -156,6 +156,7 @@ object IvfIndex {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(Similarity.cosine(col("q_emb"), col("c_emb")), 4).as("cos_sim"))
+      .filter(col("cos_sim").isNotNull)
       .withColumn("rnk", row_number().over(w).cast("bigint"))
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos_sim"))
@@ -210,6 +211,7 @@ object IvfIndex {
     candidates.join(exact, Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(Similarity.cosine(col("q_emb"), col("c_emb")), 4).as("cos_sim"))
+      .filter(col("cos_sim").isNotNull)
       .withColumn("rnk", row_number().over(w).cast("bigint"))
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos_sim"))

@@ -217,6 +217,7 @@ object Pq {
         col("embedding").as("c_emb")), Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("adc_score"),
         round(Similarity.cosine(col("q_emb"), col("c_emb")), 4).as("cos_sim"))
+      .filter(col("cos_sim").isNotNull)
       .withColumn("rnk", row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("cos_sim").desc, col("neighbor_id"))).cast("bigint"))
       .filter(col("rnk") <= k)
@@ -327,6 +328,7 @@ object Pq {
       .select(col("query_id"), col("neighbor_id"), col("cell"),
         col("adc_score"),
         round(Similarity.cosine(col("q_emb"), col("c_emb")), 4).as("cos_sim"))
+      .filter(col("cos_sim").isNotNull)
       .withColumn("rnk", row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("cos_sim").desc, col("neighbor_id"))).cast("bigint"))
       .filter(col("rnk") <= k)

@@ -33,7 +33,13 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** Null when either norm is zero (a zero or empty vector), with ANSI mode
+    * on or off, and the ranked pools drop null rows. `try_divide` is
+    * Catalyst's divide with null for a zero divisor; `nullif(‖a‖·‖b‖, 0)`
+    * would do the same but, inlined into a join condition, evaluates the
+    * norm product twice per pair. */
+  def cosine(a: Column, b: Column): Column =
+    try_divide(dot(a, b), norm(a) * norm(b))
 
   /** Per-vector norm/moment report — the embedding-hygiene pass before any
     * similarity work (zero vectors break cosine; wild norms flag a broken
@@ -92,6 +98,7 @@ object Similarity {
         col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("q_emb"), col("c_emb")), 4).as("cos_sim"))
+      .filter(col("cos_sim").isNotNull)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
     pairs.withColumn("rnk", row_number().over(w).cast("bigint"))
@@ -133,6 +140,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("q_emb"), col("c_emb")), 4).as("cos_sim"))
+      .filter(col("cos_sim").isNotNull)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
     pairs.withColumn("rnk", row_number().over(w))
@@ -184,6 +192,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("q_emb"), col("c_emb")), 4).as("cos_sim"))
+      .filter(col("cos_sim").isNotNull)
       .withColumn("rnk", row_number().over(w).cast("bigint"))
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos_sim"))
@@ -261,8 +270,8 @@ object Similarity {
       .join(postings, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("approx_cos",
-        (col("q_const") + dot(col("w"), col("codes"))) /
-          (col("q_norm") * col("code_norm")))
+        try_divide(col("q_const") + dot(col("w"), col("codes")),
+          col("q_norm") * col("code_norm")))
       .withColumn("cr", row_number().over(wCand))
       .filter(col("cr") <= k * rerankFactor)
       .select(col("query_id"), col("q_emb"), col("neighbor_id"))
@@ -274,6 +283,7 @@ object Similarity {
         col("embedding").as("c_emb")), Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("q_emb"), col("c_emb")), 4).as("cos_sim"))
+      .filter(col("cos_sim").isNotNull)
       .withColumn("rnk", row_number().over(w).cast("bigint"))
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos_sim"))
@@ -682,6 +692,7 @@ object Similarity {
         .join(corpus, col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
           round(cosine(qe, ce), 4).as("cs"))
+        .filter(col("cs").isNotNull)
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= k)
         .select(col("query_id"), col("neighbor_id"))
@@ -927,6 +938,7 @@ object Similarity {
     val sem = embeddings.crossJoin(broadcast(q))
       .select(col("vec_id").as("doc_id"),
         round(cosine(col("embedding"), col("q_emb")), 4).as("cs"))
+      .filter(col("cs").isNotNull)
       .orderBy(col("cs").desc, col("doc_id")).limit(poolK)
       .select(col("doc_id"), row_number().over(
         Window.orderBy(col("cs").desc, col("doc_id"))).as("sem_rank"))
@@ -969,6 +981,7 @@ object Similarity {
       .crossJoin(broadcast(q))
       .select(col("vec_id").as("doc_id"),
         round(cosine(col("embedding"), col("q_emb")), 4).as("cs"))
+      .filter(col("cs").isNotNull)
       .orderBy(col("cs").desc, col("doc_id")).limit(poolK)
       .select(col("doc_id"))
     lex.join(sem, Seq("doc_id"), "left_anti")
@@ -995,9 +1008,9 @@ object Similarity {
     * launching a quadratic job at corpus scale), one Spark job over the
     * pairs, and the rounding and threshold filter on the candidates only.
     * Rows with a null `vec_id` or a null embedding pair with nothing. A zero
-    * or empty vector hits Catalyst's division by zero: DIVIDE_BY_ZERO under
-    * ANSI mode, else null pairs that the filter drops. A NaN element
-    * gives NaN pairs, which Spark's `NaN >= t` keeps. */
+    * or empty vector pairs with nothing either, with ANSI mode on or off:
+    * its cosine is a `try_divide` by ‖a‖·‖b‖, and the filter drops the
+    * null. A NaN element gives NaN pairs, which Spark's `NaN >= t` keeps. */
   def cosineNearDups(embeddings: DataFrame, threshold: Double,
                      maxExactRows: Long = MaxExactRows): DataFrame =
     CosinePairs.nearDups(embeddings, threshold, maxExactRows)
@@ -1286,6 +1299,7 @@ object Similarity {
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("embedding"),
         round(cosine(col("embedding"), col("q_emb")), 4).as("rel"))
+      .filter(col("rel").isNotNull)
       .orderBy(col("rel").desc, col("vec_id")).limit(poolK)
       .pinTier
     val a = pool.select(col("vec_id").as("i"), col("embedding").as("ea"))
@@ -1299,7 +1313,7 @@ object Similarity {
     pool.unpersist(blocking = false)
     val oneMinus = 1.0 - lambda
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Double)]
-    val remaining = scala.collection.mutable.LinkedHashMap(cand: _*)
+    val remaining = scala.collection.mutable.LinkedHashMap.from(cand)
     for (r <- 1 to math.min(k, cand.length)) {
       val best = remaining.toSeq.map { case (id, rel) =>
         val penalty =

@@ -18,8 +18,8 @@ object NestedLoopCosine {
       col("embedding").as("emb_b"), Similarity.norm(col("embedding")).as("nb"))
     a.join(b.hint("broadcast"), col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(Similarity.dot(col("emb_a"), col("emb_b")) / (col("na") * col("nb")), 4)
-          .as("cos_sim"))
+        round(try_divide(Similarity.dot(col("emb_a"), col("emb_b")),
+          col("na") * col("nb")), 4).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
       .orderBy(col("id_a"), col("id_b"))
   }

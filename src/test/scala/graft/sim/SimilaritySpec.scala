@@ -34,6 +34,38 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  /** Two identical vectors, a third, and a zero (id 4) and an empty (id 5)
+    * vector: the zero-norm rows divide by zero under a bare cosine. */
+  private def withZeroNorm = Seq(
+      1L -> Array(1f, 0f, 0f), 2L -> Array(1f, 0f, 0f), 3L -> Array(0.6f, 0.8f, 0f),
+      4L -> Array(0f, 0f, 0f), 5L -> Array.empty[Float])
+    .toDF("vec_id", "embedding")
+
+  private def underAnsi[T](body: => T): Seq[T] = Seq("true", "false").map { v =>
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, v)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("bruteForceTopK: zero and empty vectors rank nowhere, under ANSI and without") {
+    val byMode = underAnsi(Similarity.bruteForceTopK(withZeroNorm, Seq(1L, 4L, 5L), k = 5)
+      .as[(Long, Long, Long, Double)].collect().toSeq)
+    assert(byMode.distinct.size == 1, s"rows depend on ANSI mode: $byMode")
+    // query 1 ranks its two nonzero neighbors; queries 4 and 5 rank none
+    assert(byMode.head == Seq((1L, 1L, 2L, 1.0), (1L, 2L, 3L, 0.6)))
+  }
+
+  test("mmrTopK: zero and empty vectors stay out of the pool, under ANSI and without") {
+    val byMode = underAnsi(Similarity.mmrTopK(withZeroNorm, 1L, k = 4, poolK = 4)
+      .select("rnk", "vec_id").as[(Long, Long)].collect().toSeq)
+    assert(byMode.distinct.size == 1, s"rows depend on ANSI mode: $byMode")
+    assert(byMode.head == Seq((1L, 2L), (2L, 3L)))
+    // a zero-norm query has an empty pool
+    underAnsi(Similarity.mmrTopK(withZeroNorm, 4L, k = 4, poolK = 4).count())
+      .foreach(n => assert(n == 0L))
+  }
+
   test("exact quadratic baselines fail fast beyond their scale guards") {
     // cosineNearDups: refuses a corpus-sized input (the design intent —
     // "small-sample oracle baseline only" — enforced, not advisory)

@@ -91,9 +91,10 @@ EOF
 )"
 
 # x32 solo controls (VERDICT r14 #2/#4): same-window single-query runs
-# for the two heavies whose in-sequence numbers carried the predecessor
-# disk-I/O tax — with the round-15 cleaner quiesce live, in-sequence
-# should read ≈ solo, and the artifact records BOTH either way.
+# for the two heavies whose in-sequence numbers carry a predecessor tax.
+# In-sequence and solo still differ (r16 q_kcore: 99.0 s in sequence vs
+# 71.5 s solo, with the since-removed cleaner wait live), so the artifact
+# records both and the solo number is the one to compare across rounds.
 # r16 (VERDICT r15 #2): q_triangles joins — the closest heavy to the
 # wall-linear bound (25.3 of 32 in r15, on a noisy-comparator caveat)
 # gets the q_kcore treatment: same-window solo + canary normalization
