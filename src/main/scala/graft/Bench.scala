@@ -2,6 +2,8 @@ package graft
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.graftbridge.Bridge
+
 /** Benchmark harness — the driver's per-round performance gate.
   *
   * Output protocol (r5, driven by the r4 driver-bench forensics): the
@@ -68,6 +70,29 @@ object Bench {
       case (name, ts) if ts.size >= 2 && ts.min > 0 &&
         ts.max > minSec && ts.max / ts.min > ratio => name
     }.sorted
+
+  /** The standing-tier builds in a query's drained telemetry: every key
+    * but the query's own (its build) and its `<query>.<stage>` legs. These
+    * are the entries that feed `tier_build`. */
+  def tierBuilds(name: String, drained: Map[String, Double]): Map[String, Double] =
+    drained.filter { case (k, _) => k != name && !k.startsWith(name + ".") }
+
+  /** A pass's time as [[suspectStalls]] sees it: its total less the tier
+    * builds drained during that pass. A one-time build is paid by the
+    * first pass only, and is no stall. */
+  def stallTime(name: String, sec: Double, drained: Map[String, Double]): Double =
+    sec - tierBuilds(name, drained).values.sum
+
+  /** Releases every persistent RDD's blocks, pins included, and the SQL
+    * cache: the inter-query release of Bench, Verify, Stress and
+    * ProbeProfile. `SparkContext.unpersistRDD` drops the blocks directly;
+    * `RDD.unpersist` would log a lineage-truncation WARN for every
+    * locally checkpointed pin. */
+  def releasePinned(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val sc = spark.sparkContext
+    sc.getPersistentRDDs.keys.foreach(Bridge.unpersistRDD(sc, _))
+    spark.catalog.clearCache()
+  }
 
   /** The inter-query `System.gc()` hygiene sweep runs every
     * [[GcSweepEvery]] queries: r11's A/B cut the per-query sweep's 93.5 s
@@ -267,7 +292,8 @@ object Bench {
     val bestStages = scala.collection.mutable.Map[String, Seq[(String, Double)]]()
     val failedAt = scala.collection.mutable.Map[String, Double]()
     val errors = scala.collection.mutable.Map[String, String]()
-    // every successful pass time per query — feeds the suspect_stall flag
+    // every successful pass time per query, net of the tier builds it
+    // drained — feeds the suspect_stall flag
     val passTimes =
       scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
     // one-time standing-tier builds (EdgeTier etc.) drained under their own
@@ -336,9 +362,8 @@ object Bench {
         case (k, sec) if k.startsWith(name + ".") =>
           k.stripPrefix(name + ".") -> sec
       }.toSeq.sortBy(_._1)
-      (drained - name).foreach { case (k, sec) =>
-        if (!k.startsWith(name + ".") && !tierBuilds.contains(k))
-          tierBuilds(k) = (name, sec)
+      Bench.tierBuilds(name, drained).foreach { case (k, sec) =>
+        if (!tierBuilds.contains(k)) tierBuilds(k) = (name, sec)
       }
       // every pass feeds the per-stage floors, not just the best-total
       // pass (VERDICT r15 #7); only successful passes count — a failed
@@ -353,7 +378,7 @@ object Bench {
           if (v < stageMins.getOrElse(k, Double.MaxValue)) stageMins(k) = v
         }
       }
-      if (err.isEmpty) passTimes(name) = dt :: passTimes(name)
+      if (err.isEmpty) passTimes(name) = stallTime(name, dt, drained) :: passTimes(name)
       if (err.isEmpty && dt < best.getOrElse(name, Double.MaxValue)) {
         best(name) = dt
         bestGc(name) = gcMillis - gc0
@@ -389,9 +414,7 @@ object Bench {
       // 22 s solo vs 78 s at the end of a full run). Invariant this sweep
       // relies on: no cross-query persistent state — queries build their
       // own plans from the parquet sources each time (ContractSpec).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      releasePinned(spark)
       // broadcast blocks are only reclaimed by the ContextCleaner on GC —
       // nudge it so broadcast-heavy fixpoints don't accumulate residency
       // across the suite (VERDICT r4 "what's wrong" #3), amortized to

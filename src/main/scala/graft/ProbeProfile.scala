@@ -116,9 +116,7 @@ object ProbeProfile {
         // only the standing index may persist between reps — a pinned
         // batch tier or cached intermediate would make rep 2+ measure a
         // cache, not the probe
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
+        Bench.releasePinned(spark)
       }
       val secs = times.reverse
       results(name) =

@@ -340,9 +340,7 @@ object Stress {
         val dt = (System.nanoTime() - t0) / 1e9
         // same inter-query state release as Bench: pinned checkpoint blocks
         // must not accumulate across the suite (see Bench on why)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
+        Bench.releasePinned(spark)
         name -> (if (ok) dt else -dt)
       }
       val times = (selectedQueries.map { q =>

@@ -32,9 +32,7 @@ object Verify {
       }
       // inter-query state release (see Bench): pinned checkpoint blocks
       // otherwise accumulate across the 90-query dump
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      Bench.releasePinned(spark)
     }
     import Json.{quote => q}
     val json = SparkEntry.oracleSql

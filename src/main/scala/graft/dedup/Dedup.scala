@@ -20,9 +20,10 @@ import graft.text.TextAnalysis
   * verifier you run on the candidate pairs the sketches surface — which is
   * exactly how [[minhashNearDups]] composes them.
   *
-  * Everything is built-in array/hash expressions (no UDFs): signatures are
-  * computed map-side inside codegen, and the only shuffles are the
-  * candidate-key group-bys.
+  * Everything is built-in array/hash expressions (no UDFs) except the
+  * MinHash signatures: those come from one per-document kernel
+  * ([[MinHashKernel]]) after a single doc_id shuffle, and the band join and
+  * Jaccard verify stay in Catalyst.
   */
 object Dedup {
 
@@ -57,15 +58,19 @@ object Dedup {
     * stay inside whole-stage codegen, while the array-HOF form
     * ([[shingles]]) is interpreted per slice. Semantics match [[shingles]]
     * exactly, including the shorter-than-k document case (concat_ws skips
-    * the null leads, mirroring slice's truncation). One shuffle (window by
-    * doc_id). */
+    * the null leads, mirroring slice's truncation). Shingles never span
+    * input rows: the window runs per row (doc_id plus a row id), so two
+    * rows sharing a doc_id contribute their own shingles, as the oracle's
+    * per-row `list_transform` does. One shuffle (the window). */
   def shingleRows(documents: DataFrame, k: Int = 3): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos"))
+      .partitionBy(col("doc_id"), col("row")).orderBy(col("pos"))
     val leads = (1 until k).map(i => lead(col("tok"), i).over(w))
     documents
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .select(col("doc_id"), size(col("toks")).as("n"), posexplode(col("toks")))
+      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"),
+        monotonically_increasing_id().as("row"))
+      .select(col("doc_id"), col("row"), size(col("toks")).as("n"),
+        posexplode(col("toks")))
       .withColumnsRenamed(Map("col" -> "tok"))
       .select(col("doc_id"), col("n"), col("pos"),
         concat_ws(" ", (col("tok") +: leads): _*).as("shingle"))
@@ -632,48 +637,22 @@ object Dedup {
   }
 
   /** Tier 3a — MinHash signatures: numPerm universal-family permutations
-    * over the shingle's polynomial base hash; signature[j] = min over
-    * shingles. Computed as numPerm `min` aggregates over exploded shingle
-    * rows — fully codegen'd partial+final hash aggregation — rather than a
-    * nested array HOF (interpreted; it made this the slowest query in the
-    * engine by 5× before the rewrite). The base hash is computed ONCE per
-    * shingle row (the 64 permutations are pure integer arithmetic on it),
-    * where the previous xxhash64-per-seed form re-read the string 64
-    * times. One shuffle, 8·numPerm bytes per doc out. */
+    * over the shingle's polynomial base hash; signature[j] = min over the
+    * document's distinct shingles. Computed by the per-document kernel
+    * [[MinHashKernel]]: one pass over the doc_id-partitioned token rows
+    * hashes each distinct shingle once (the numPerm permutations are pure
+    * integer arithmetic on that base value) and folds the minimums, 8·numPerm
+    * bytes per doc out. `wide` switches the base hash and the permutation
+    * family to the 61-bit Mersenne prime ([[graft.functions.PolyHash61]]):
+    * 2³⁰ fewer birthday collisions in the candidate tier at large corpus
+    * size, identical verified pair sets (A/B-asserted in PolyHash61Spec),
+    * still exactly oracle-replicable (DuckDB HUGEINT). Default stays 31-bit
+    * — the cheaper arithmetic, and collisions only cost verify work. The
+    * doc_id must be integral. */
   def minhashSignatures(documents: DataFrame, k: Int = 3, numPerm: Int = 64,
                         wide: Boolean = false): DataFrame =
-    minhashSignaturesFromRows(shingleRows(documents, k), numPerm, wide)
-
-  /** [[minhashSignatures]] over a pre-built (doc_id, shingle) tier — lets
-    * [[minhashNearDups]] share one pinned shingle pass between the
-    * signature aggregation and the exact-Jaccard verify sets. `wide`
-    * switches the base hash and the permutation family to the 61-bit
-    * Mersenne prime ([[graft.functions.PolyHash61]]): 2³⁰ fewer birthday
-    * collisions in the candidate tier at large corpus size, identical
-    * verified pair sets (A/B-asserted in PolyHash61Spec), still exactly
-    * oracle-replicable (DuckDB HUGEINT). Default stays 31-bit — the
-    * cheaper arithmetic, and collisions only cost verify work. */
-  def minhashSignaturesFromRows(rows: DataFrame, numPerm: Int = 64,
-                                wide: Boolean = false): DataFrame = {
-    val aggs = (0 until numPerm).map { j =>
-      if (wide) {
-        val (a, b) = minhashPerm61(j)
-        min(graft.functions.PolyHash61.affine_mod61(col("__ph"), a, b)).as(s"h$j")
-      } else {
-        val (a, b) = minhashPerm(j)
-        min((lit(a) * col("__ph") + lit(b)) % lit(graft.functions.PolyHash.Mod))
-          .as(s"h$j")
-      }
-    }
-    val baseHash =
-      if (wide) graft.functions.PolyHash61.poly_hash61(col("shingle"))
-      else graft.functions.PolyHash.poly_hash(col("shingle"))
-    rows
-      .select(col("doc_id"), baseHash.as("__ph"))
-      .groupBy(col("doc_id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"), array((0 until numPerm).map(j => col(s"h$j")): _*).as("signature"))
-  }
+    MinHashKernel.signatures(documents, k, numPerm, wide)
+      .select(col("doc_id"), col("signature"))
 
   /** Tier 3b — LSH banding: split the signature into bands of r rows; docs
     * sharing any band hash are candidates. Probability a pair with Jaccard s
@@ -703,20 +682,15 @@ object Dedup {
 
   /** Tier 3 composed — MinHash/LSH candidates verified with exact Jaccard
     * (the candidate set is tiny, so the exact verify is cheap even at
-    * corpus scale). */
+    * corpus scale). One pinned [[MinHashKernel]] pass feeds both the
+    * signatures of the band join and the shingle sets of the verify; both
+    * stay in Catalyst. The doc_id must be integral. */
   def minhashNearDups(documents: DataFrame, k: Int = 3, numPerm: Int = 64,
                       bands: Int = 16, threshold: Double = 0.5,
                       wide: Boolean = false): DataFrame = {
-    // one pinned shingle pass feeds BOTH the signatures and the verify sets
-    // (see ngramJaccardPairs — unpinned, the tier would compute twice)
-    val rows = shingleRows(documents, k).pinTier
-    val cands = lshCandidates(minhashSignaturesFromRows(rows, numPerm, wide), bands, numPerm)
-    // shingle sets re-collected from the codegen'd row form — the array-HOF
-    // shingles() would re-tokenize per lambda element (see
-    // TextAnalysis.winnowFingerprintRows on why staging can't fix that)
-    val docs = rows
-      .groupBy(col("doc_id"))
-      .agg(collect_set(col("shingle")).as("sh"))
+    val sigs = MinHashKernel.signatures(documents, k, numPerm, wide)
+    val cands = lshCandidates(sigs.select(col("doc_id"), col("signature")), bands, numPerm)
+    val docs = sigs.select(col("doc_id"), col("sh"))
     cands
       .join(docs.withColumnsRenamed(Map("doc_id" -> "doc_a", "sh" -> "sh_a")), Seq("doc_a"))
       .join(docs.withColumnsRenamed(Map("doc_id" -> "doc_b", "sh" -> "sh_b")), Seq("doc_b"))

@@ -9,17 +9,20 @@ import org.apache.spark.sql.functions._
   * SURVEY.md §7.2.8; no reference counterpart, the reference's only text
   * handling is typed XML ingest `YoutubeDataset_loader_final.py:16-53`).
   *
-  * Everything here is pure Catalyst expressions over the `documents` table —
-  * no UDFs, so the whole stage stays inside whole-stage codegen and runs
-  * map-side with zero shuffles: exactly what you want when the input is
-  * 100 TB of raw text and the output feeds a tokenizer fleet.
+  * Everything here is Catalyst expressions over the `documents` table —
+  * built-ins plus the native codegen'd [[graft.functions.Tokens]] behind
+  * [[tokens]], no UDFs — so the whole stage stays inside whole-stage
+  * codegen and runs map-side with zero shuffles: exactly what you want
+  * when the input is 100 TB of raw text and the output feeds a tokenizer
+  * fleet.
   */
 object TextAnalysis {
 
   /** Whitespace tokens of lowercased text (empty tokens dropped, so leading/
-    * trailing whitespace can't produce phantom tokens). */
-  def tokens(text: Column): Column =
-    filter(split(lower(text), "\\s+"), t => t =!= "")
+    * trailing whitespace can't produce phantom tokens): the function
+    * `filter(split(lower(text), "\\s+"), t -> t <> "")` as one native
+    * expression ([[graft.functions.Tokens]]). */
+  def tokens(text: Column): Column = graft.functions.Tokens.tokens(text)
 
   /** BPE-ish pre-tokenization: letter runs, digit runs, or single
     * non-alphanumeric marks — the usual byte-pair pre-split shape. */

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -11,8 +12,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `org.apache.spark.sql.classic` and are `private[sql]`. Custom native
   * expressions (graft.functions.*) need exactly this seam, so we expose it
   * from inside the sql package namespace — the same technique third-party
-  * Spark extension libraries use. Nothing here touches internals beyond the
-  * two stable converter calls.
+  * Spark extension libraries use. Beyond the two stable converter calls,
+  * internals are touched only by the helpers below that say so.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -24,6 +25,11 @@ object Bridge {
   def aggregateColumn(
       f: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction): Column =
     ExpressionUtils.column(f.toAggregateExpression())
+
+  /** Drop an RDD's cached blocks without `RDD.unpersist`'s per-RDD
+    * lineage WARN for locally checkpointed RDDs (`private[spark]`). */
+  def unpersistRDD(sc: SparkContext, rddId: Int): Unit =
+    sc.unpersistRDD(rddId, blocking = false)
 
   /** Register a builder so the expression is callable from SQL too. */
   def registerFunction(spark: SparkSession, name: String,

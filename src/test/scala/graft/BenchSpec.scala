@@ -1,14 +1,16 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.Tier.PinOps
 
 /** Pins the bench harness's cross-pass stall detector (VERDICT r12 #7):
   * a query is flagged `suspect_stall` exactly when its slowest pass both
   * exceeds the absolute floor AND diverges >ratio× from its fastest —
   * the signature of a shared-VM stall the min-of-passes protocol
   * rejected, which previously cost a verdict cycle to attribute by hand
-  * (q_pagerank_filtered r10, q_als_recommend r11). */
-class BenchSpec extends AnyFunSuite {
+  * (q_pagerank_filtered r10, q_als_recommend r11). A one-time tier build
+  * drained in a pass is taken off that pass first. Also pins the summary
+  * line's contract and the inter-query release of pinned blocks. */
+class BenchSpec extends SparkSpec {
 
   test("flags a >3x divergent query whose slow pass exceeds 5 s") {
     val got = Bench.suspectStalls(Map(
@@ -39,6 +41,36 @@ class BenchSpec extends AnyFunSuite {
     val got = Bench.suspectStalls(Map(
       "q_b" -> Seq(20.0, 2.0), "q_a" -> Seq(30.0, 3.0)))
     assert(got == Seq("q_a", "q_b"))
+  }
+
+  test("a first pass that paid a one-time tier build is not a stall") {
+    // q_bfs_dist at sf0.1: pass 1 24.1 s, of which edge_tier_build 14.7 s
+    val q = "q_bfs_dist"
+    val first = Bench.stallTime(q, 24.1,
+      Map("edge_tier_build" -> 14.7, q -> 1.0, s"$q.probe" -> 2.0))
+    // only the tier build is taken off: the query's own build and legs stay
+    assert(math.abs(first - (24.1 - 14.7)) < 1e-9)
+    assert(Bench.suspectStalls(Map(q -> Seq(first, Bench.stallTime(q, 4.9, Map.empty)))).isEmpty)
+    // the raw pass totals would have been flagged
+    assert(Bench.suspectStalls(Map(q -> Seq(24.1, 4.9))) == Seq(q))
+  }
+
+  test("a genuine stall is still flagged with the tier builds taken off") {
+    val q = "q_stalled"
+    val passes = Seq(Bench.stallTime(q, 24.1, Map("edge_tier_build" -> 2.0)),
+      Bench.stallTime(q, 4.9, Map(q -> 0.5)))
+    assert(Bench.suspectStalls(Map(q -> passes)) == Seq(q))
+  }
+
+  test("releasePinned drops every pinned and cached frame's blocks") {
+    val sc = spark.sparkContext
+    val pinned = spark.range(1000).toDF("x").pinTier
+    val cached = spark.range(10).toDF("y").cache()
+    assert(cached.count() == 10L && pinned.count() == 1000L)
+    assert(sc.getPersistentRDDs.size >= 2)
+    Bench.releasePinned(spark)
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(sc.getRDDStorageInfo.isEmpty)
   }
 
   // ---- summaryLine: the r14 headline-last contract (VERDICT r13 #1) ----

@@ -23,6 +23,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * baseline q_ann_brute, a documented small-sample oracle.
   * q_cosine_near_dups is pinned although its construction runs its pair
   * kernel: at fixture scale that is one small collect and one pair job.
+  * q_minhash_neardups(_wide) likewise: construction runs the MinHash
+  * kernel's pin, one doc_id shuffle and one pass.
   */
 class GoldenPlanSpec extends SparkSpec {
 
@@ -59,17 +61,19 @@ class GoldenPlanSpec extends SparkSpec {
     "q_source_overlap" -> Golden(
       required = Seq("partial_sum"),
       forbidden = Seq("CartesianProduct")),
-    // minhash (r10, graduated to a full pair-set gate): map-side-combined
-    // signature mins over the poly-hash tier, band candidates via an EQUI
-    // join on the (band, band_key-array) key — never a nested loop
+    // minhash (r10, graduated to a full pair-set gate): the signatures and
+    // shingle sets come from the pinned per-document kernel (an ExistingRDD
+    // scan), band candidates via an EQUI join on the (band, band_key-array)
+    // key — never a nested loop. A partial_min here would mean the
+    // signature aggregate came back into the plan.
     "q_minhash_neardups" -> Golden(
-      required = Seq("partial_min"),
-      forbidden = Seq("CartesianProduct", "BroadcastNestedLoopJoin")),
+      required = Seq("Scan ExistingRDD"),
+      forbidden = Seq("partial_min", "CartesianProduct", "BroadcastNestedLoopJoin")),
     // the wide (61-bit) family shares the exact pipeline shape — only the
-    // hash expressions differ, so the same pins must hold
+    // hash arithmetic differs, so the same pins must hold
     "q_minhash_neardups_wide" -> Golden(
-      required = Seq("partial_min"),
-      forbidden = Seq("CartesianProduct", "BroadcastNestedLoopJoin")),
+      required = Seq("Scan ExistingRDD"),
+      forbidden = Seq("partial_min", "CartesianProduct", "BroadcastNestedLoopJoin")),
     // Count-Min heavy hitters: sketch cells map-side combine into a
     // bounded d·w aggregate; the estimate side joins ≤20 keys — nothing
     // corpus-sized may cross a nested loop

@@ -131,6 +131,12 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.ngramJaccardPairs(d, threshold = 0.1).count() == 0)
   }
 
+  test("shingleRows builds a repeated doc_id's shingles per row, never across rows") {
+    val d = Seq((1L, "a b c"), (1L, "x y z")).toDF("doc_id", "text")
+    val got = Dedup.shingleRows(d).as[(Long, String)].collect().toSet
+    assert(got == Set((1L, "a b c"), (1L, "x y z")))
+  }
+
   test("lshCandidates bands follow the signature width, not a hardcoded 64") {
     val sigs = Dedup.minhashSignatures(docs, numPerm = 32)
     // numPerm=32 with 16 bands -> r=2; must not slice past the signature end

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, MinHashReference}
 import graft.model.Tables
 import org.apache.spark.sql.functions._
 
@@ -71,9 +71,9 @@ class PolyHash61Spec extends SparkSpec {
     // the collision must survive the pipeline's lowercase+tokenize
     val rows = Dedup.shingleRows(docs, 3)
     val narrow = Dedup.lshCandidates(
-      Dedup.minhashSignaturesFromRows(rows, wide = false))
+      MinHashReference.minhashSignaturesFromRows(rows, wide = false))
     val wide = Dedup.lshCandidates(
-      Dedup.minhashSignaturesFromRows(rows, wide = true))
+      MinHashReference.minhashSignaturesFromRows(rows, wide = true))
     assert(narrow.count() == 1L,
       "the planted base-hash collision did not produce a 31-bit candidate")
     assert(wide.count() == 0L,
@@ -97,9 +97,9 @@ class PolyHash61Spec extends SparkSpec {
     // future fixture change that introduces collisions surfaces here
     val rows = Dedup.shingleRows(docs, 3)
     val nNarrow = Dedup.lshCandidates(
-      Dedup.minhashSignaturesFromRows(rows, wide = false)).count()
+      MinHashReference.minhashSignaturesFromRows(rows, wide = false)).count()
     val nWide = Dedup.lshCandidates(
-      Dedup.minhashSignaturesFromRows(rows, wide = true)).count()
+      MinHashReference.minhashSignaturesFromRows(rows, wide = true)).count()
     assert(nWide <= nNarrow, s"widening GREW the candidate tier: $nNarrow -> $nWide")
     info(s"candidates: narrow=$nNarrow wide=$nWide (verified=${narrow.size} both)")
   }
