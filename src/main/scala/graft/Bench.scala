@@ -87,7 +87,10 @@ object Bench {
     * cache: the inter-query release of Bench, Verify, Stress and
     * ProbeProfile. `SparkContext.unpersistRDD` drops the blocks directly;
     * `RDD.unpersist` would log a lineage-truncation WARN for every
-    * locally checkpointed pin. */
+    * locally checkpointed pin. Unlike `RDD.unpersist` it leaves each RDD's
+    * storage level set, so a released RDD that is computed again caches
+    * blocks no later release sees: only query-local RDDs, dropped with
+    * their finished query, may be released this way. */
   def releasePinned(spark: org.apache.spark.sql.SparkSession): Unit = {
     val sc = spark.sparkContext
     sc.getPersistentRDDs.keys.foreach(Bridge.unpersistRDD(sc, _))
@@ -389,7 +392,7 @@ object Bench {
         // NEGATIVE probe (observed: q_pagerank_incremental at sf1,
         // build 28.3 vs total 11.4). A best pass without its own build
         // telemetry gets no split entry — the one-time build stays
-        // visible in the per-pass lines and the suspect_stall flag.
+        // visible in the per-pass lines and in `tier_build`.
         buildSec match {
           case Some(b) => bestBuild(name) = b
           case None    => bestBuild.remove(name)

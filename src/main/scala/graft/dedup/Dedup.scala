@@ -59,13 +59,16 @@ object Dedup {
     * ([[shingles]]) is interpreted per slice. Semantics match [[shingles]]
     * exactly, including the shorter-than-k document case (concat_ws skips
     * the null leads, mirroring slice's truncation). Shingles never span
-    * input rows: the window runs per row (doc_id plus a row id), so two
-    * rows sharing a doc_id contribute their own shingles, as the oracle's
-    * per-row `list_transform` does. One shuffle (the window). */
+    * input rows: the window orders each doc_id's tokens by (row id, pos)
+    * and a lead past its row's last token is null, so two rows sharing a
+    * doc_id contribute their own shingles, as the oracle's per-row
+    * `list_transform` does. One shuffle (the window, on doc_id alone,
+    * which the distinct and downstream doc_id windows reuse). */
   def shingleRows(documents: DataFrame, k: Int = 3): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"), col("row")).orderBy(col("pos"))
-    val leads = (1 until k).map(i => lead(col("tok"), i).over(w))
+      .partitionBy(col("doc_id")).orderBy(col("row"), col("pos"))
+    val leads = (1 until k).map(i =>
+      when(col("pos") + i < col("n"), lead(col("tok"), i).over(w)))
     documents
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"),
         monotonically_increasing_id().as("row"))

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.util.regex.Pattern
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
@@ -29,10 +27,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Splitting is Java's `\s+` with limit −1, empty pieces dropped: the
   * maximal runs of characters outside ` \t\n\u000B\f\r`. Those six are
-  * ASCII bytes that never occur inside a multi-byte UTF-8 sequence, so
-  * ASCII text splits on its bytes; other text takes `split`'s own
-  * `String.split` route. The child must be a UTF8_BINARY string: other
-  * collations change `lower` and are rejected at analysis. */
+  * ASCII bytes that never occur inside a multi-byte UTF-8 sequence, and
+  * both lowercasings return valid UTF-8, so one byte splitter serves all
+  * text. The child must be a UTF8_BINARY string: other collations change
+  * `lower` and are rejected at analysis. */
 case class Tokens(child: Expression) extends UnaryExpression {
 
   override def nullIntolerant: Boolean = true
@@ -61,22 +59,17 @@ case class Tokens(child: Expression) extends UnaryExpression {
 
 object Tokens {
 
-  private val Whitespace = Pattern.compile("\\s+")
-
   /** Shared by eval and codegen. */
   def tokens(s: UTF8String, useICU: Boolean): ArrayData =
-    if (s.isFullAscii) asciiTokens(s.toLowerCaseAscii.getBytes)
-    else {
-      val lowered = CollationSupport.Lower.exec(
-        s, CollationFactory.UTF8_BINARY_COLLATION_ID, useICU)
-      new GenericArrayData(Whitespace.split(lowered.toString, -1)
-        .collect { case t if t.nonEmpty => UTF8String.fromString(t): Any })
-    }
+    splitTokens((if (s.isFullAscii) s.toLowerCaseAscii
+      else CollationSupport.Lower.exec(
+        s, CollationFactory.UTF8_BINARY_COLLATION_ID, useICU)).getBytes)
 
   private def isSpace(c: Byte): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
 
-  /** Tokens of lowercased ASCII bytes, sharing `b` (a fresh array). */
-  private def asciiTokens(b: Array[Byte]): ArrayData = {
+  /** Tokens of lowercased UTF-8 bytes, sharing `b`: both lowercasings
+    * return a fresh string, so nothing else writes to it. */
+  private def splitTokens(b: Array[Byte]): ArrayData = {
     val out = ArrayBuffer.empty[Any]
     var i = 0
     while (i < b.length) {

@@ -135,6 +135,24 @@ class DedupSpec extends SparkSpec {
     val d = Seq((1L, "a b c"), (1L, "x y z")).toDF("doc_id", "text")
     val got = Dedup.shingleRows(d).as[(Long, String)].collect().toSet
     assert(got == Set((1L, "a b c"), (1L, "x y z")))
+    // a row shorter than k keeps its truncated shingle, whatever row follows
+    val short = Seq((2L, "p q"), (2L, "r s t u")).toDF("doc_id", "text")
+    assert(Dedup.shingleRows(short).as[(Long, String)].collect().toSet ==
+      Set((2L, "p q"), (2L, "r s t"), (2L, "s t u")))
+  }
+
+  test("shingleRows and ShingleIndex.tier shuffle once, on doc_id alone") {
+    // the window's doc_id exchange must also serve the distinct and the
+    // tier's per-doc count: a per-row shuffle key costs one more exchange
+    // for shingleRows and two more for the tier
+    import org.apache.spark.sql.execution.FormattedMode
+    for ((name, df) <- Seq("shingleRows" -> Dedup.shingleRows(docs),
+                           "tier" -> ShingleIndex.tier(docs))) {
+      val p = df.queryExecution.explainString(FormattedMode)
+      val ids = """\((\d+)\) Exchange""".r.findAllMatchIn(p).map(_.group(1)).toSet
+      assert(ids.size == 1, s"$name: ${ids.size} shuffles:\n$p")
+      assert(p.contains("hashpartitioning(doc_id#"), s"$name:\n$p")
+    }
   }
 
   test("lshCandidates bands follow the signature width, not a hardcoded 64") {
