@@ -111,23 +111,12 @@ object SparkEntry {
     * them per invocation would bill every admission for a full
     * recompute it never pays. */
   private def prevRanksFixture(s: SparkSession, d: String): DataFrame = {
-    // key = sfDir path + a CONTENT fingerprint of the lineitem parquet
-    // files (name/size/mtime) — regenerating the fixture data at a reused
-    // path invalidates the cache instead of silently serving stale ranks
-    // (ADVICE r12)
-    val fingerprint = {
-      val src = new java.io.File(d, "lineitem.parquet")
-      val parts = // single-file fixture or a directory of part files
-        if (src.isFile) Array(src)
-        else Option(src.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isFile && !f.getName.startsWith("."))
-      val files = parts.sortBy(_.getName)
-        .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-        .mkString(",")
-      Integer.toHexString((d + "|" + files).hashCode)
-    }
+    // key = sfDir path + the edge tier's CONTENT fingerprint of the
+    // lineitem parquet files (name/size/mtime, listed through Hadoop) —
+    // regenerating the fixture data at a reused path invalidates the
+    // cache instead of silently serving stale ranks (ADVICE r12)
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_prev_ranks_" +
-      fingerprint
+      Integer.toHexString((d + "|" + EdgeTier.fingerprint(s, d)).hashCode)
     if (!new java.io.File(path, "_SUCCESS").isFile)
       Telemetry.timed("q_pagerank_incremental") {
         val oldEdges = Edges.partCoOccurrence(
@@ -2895,7 +2884,7 @@ object SparkEntry {
       s"SELECT doc_id, $bnd AS band, [$ks] AS key FROM ${pfx}sig"
     }.mkString("\n  UNION ALL ")
     s"""${pfx}sh AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
+      |  SELECT DISTINCT doc_id, unnest(list_distinct(list_transform(
       |    range(1, greatest(len(toks) - 2, 1) + 1),
       |    i -> array_to_string(toks[i:i+2], ' ')))) AS shingle
       |  FROM (SELECT doc_id,

@@ -234,6 +234,7 @@ object ShingleIndex {
   // Verdicts are placement-blind by construction (classify never reads
   // shard/bucket), pinned by the q_rendezvous_tier gate + spec.
 
+  import graft.lake.Commit
   import org.apache.hadoop.fs.Path
 
   /** Physical buckets per tier — fixed at build; shard growth never
@@ -269,21 +270,24 @@ object ShingleIndex {
       .withColumn("shard",
         graft.ops.Sampling.rendezvousShard(col("bucket"), nShards))
       .write.mode("overwrite").partitionBy("shard", "bucket").parquet(base)
-    val f = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = Commit.fs(spark, new Path(base))
     val present = f.globStatus(new Path(base, "shard=*/bucket=*"))
       .map(_.getPath.getName.stripPrefix("bucket=").toInt).sorted
-    graft.lake.Commit.atomicWrite(spark, new Path(base, "_buckets"),
+    Commit.atomicWrite(spark, new Path(base, "_buckets"),
       present.mkString(","))
-    graft.lake.Commit.atomicWrite(spark, new Path(base, "_shards"),
+    Commit.atomicWrite(spark, new Path(base, "_shards"),
       nShards.toString)
   }
 
+  /** The body of a sharded tier's commit file; a tier without one fails
+    * loudly rather than reading as empty. */
+  private def committed(spark: SparkSession, base: String, name: String): String =
+    Commit.read(spark, new Path(base, name)).getOrElse(
+      throw new java.io.FileNotFoundException(s"$base/$name: no sharded tier"))
+
   /** The committed present-bucket set of a sharded tier. */
   def committedBuckets(spark: SparkSession, base: String): Set[Int] = {
-    val p = new Path(base, "_buckets")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = f.open(p)
-    val body = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+    val body = committed(spark, base, "_buckets")
     if (body.isEmpty) Set.empty else body.split(",").map(_.toInt).toSet
   }
 
@@ -295,12 +299,8 @@ object ShingleIndex {
     }.toSet
 
   /** The committed shard count of a sharded tier. */
-  def currentShards(spark: SparkSession, base: String): Int = {
-    val p = new Path(base, "_shards")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = f.open(p)
-    try new String(in.readAllBytes(), "UTF-8").trim.toInt finally in.close()
-  }
+  def currentShards(spark: SparkSession, base: String): Int =
+    committed(spark, base, "_shards").toInt
 
   /** Grow (or shrink) the shard count: re-derive both assignments over
     * the B bucket ids, RENAME only the bucket directories whose argmax
@@ -323,7 +323,7 @@ object ShingleIndex {
     val fromShards = currentShards(spark, base)
     val from = bucketAssignments(spark, buckets, fromShards)
     val to = bucketAssignments(spark, buckets, toShards)
-    val f = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = Commit.fs(spark, new Path(base))
     var moved = 0L
     var present = 0L
     (0 until buckets).foreach { b =>
@@ -339,7 +339,7 @@ object ShingleIndex {
         }
       }
     }
-    graft.lake.Commit.atomicWrite(spark, new Path(base, "_shards"),
+    Commit.atomicWrite(spark, new Path(base, "_shards"),
       toShards.toString)
     (moved, present)
   }

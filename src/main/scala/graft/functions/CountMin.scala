@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.lake.Commit
 
 /** Count–Min sketch (Cormode & Muthukrishnan 2005) over a keyed stream —
   * the MERGEABLE heavy-hitter counter a 100 TB pipeline tracks hot terms
@@ -88,32 +91,22 @@ object CountMin {
   // exactly-once contract here. Versions follow the ComponentsIndex
   // crash rule (write v=N+1, readers take the highest _SUCCESS-complete
   // version): a crashed admission is invisible and the replay that
-  // follows finds version b, admits, and commits b+1. Single writer,
+  // follows finds version b, admits, and commits b+1. Each commit then
+  // deletes the complete versions before its predecessor, so the
+  // directory holds two versions however long the stream. Single writer,
   // like every standing tier. Bootstrap: the standing sketch starts
   // EMPTY (no version — reads as zero cells), the
   // indexMaintenanceStreamGate rule.
 
-  private def hfs(spark: org.apache.spark.sql.SparkSession,
-                  p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def complete(spark: SparkSession, path: String)(v: Long) =
+    Commit.fs(spark, new Path(path)).exists(new Path(path, s"v=$v/_SUCCESS"))
 
   /** Highest `_SUCCESS`-complete version (0 = empty sketch). */
-  def currentVersion(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = hfs(spark, p)
-    if (!f.exists(p)) 0L
-    else f.listStatus(p)
-      .filter(s => s.isDirectory &&
-        f.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .flatMap(s => "^v=(\\d+)$".r.findFirstMatchIn(s.getPath.getName)
-        .map(_.group(1).toLong))
-      .sorted.lastOption.getOrElse(0L)
-  }
+  def currentVersion(spark: SparkSession, path: String): Long =
+    Commit.versions(spark, path, complete(spark, path)).lastOption.getOrElse(0L)
 
   /** The standing sketch's current cells (empty frame at version 0). */
-  def readStanding(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame = {
+  def readStanding(spark: SparkSession, path: String): DataFrame = {
     val v = currentVersion(spark, path)
     if (v == 0L) {
       import spark.implicits._
@@ -125,7 +118,7 @@ object CountMin {
     * contract): merge its sketch into the standing one and commit
     * version batchId+1. A replayed batch (version already committed)
     * is a no-op. Returns true when the batch was admitted. */
-  def admit(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
+  def admit(spark: SparkSession, batch: DataFrame,
             keyCol: String, path: String, batchId: Long,
             d: Int = 4, w: Int = 1024): Boolean = {
     val cur = currentVersion(spark, path)
@@ -134,6 +127,7 @@ object CountMin {
       merge(readStanding(spark, path), sketch(batch, keyCol, d, w))
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$path/v=${batchId + 1}")
+      Commit.retire(spark, path, complete(spark, path))
       true
     }
   }

@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.Tier.PinOps
+import graft.lake.Commit
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,22 +59,11 @@ object ComponentsIndex {
       .select(least(col(a), col(b)).as("a"), greatest(col(a), col(b)).as("b"))
       .distinct()
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The committed version, or 0 when nothing has committed yet. Version
     * directories become visible only through the atomic pointer flip, so
     * a missing `_current` means an empty (or never-built) index. */
-  def currentVersion(spark: SparkSession, path: String): Long = {
-    val cur = new Path(path, "_current")
-    val f = fs(spark, cur)
-    if (!f.exists(cur)) 0L
-    else {
-      val in = f.open(cur)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-  }
+  def currentVersion(spark: SparkSession, path: String): Long =
+    Commit.pointer(spark, path).getOrElse(0L)
 
   /** Write both commit artifacts under version `toV`, then flip the
     * pointer. Deleting stale `> current` leftovers from a crashed attempt
@@ -81,9 +71,8 @@ object ComponentsIndex {
   private def commit(spark: SparkSession, path: String,
                      newEdges: DataFrame, labels: DataFrame,
                      toV: Long): Unit = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    f.mkdirs(root)
+    val f = Commit.fs(spark, new Path(path))
+    f.mkdirs(new Path(path))
     // clear orphans from any crashed prior attempt (invisible to readers,
     // but mode("overwrite") below must not merge with half-written files)
     val edgeDir = new Path(path, s"edges/part_v=$toV")
@@ -92,8 +81,7 @@ object ComponentsIndex {
     f.delete(labelDir, true)
     newEdges.write.mode("overwrite").parquet(edgeDir.toString)
     labels.write.mode("overwrite").parquet(labelDir.toString)
-    graft.lake.Commit.atomicWrite(spark, new Path(path, "_current"),
-      toV.toString)
+    Commit.flip(spark, path, toV)
     // retire the superseded label snapshot (edges are append-only; labels
     // keep only the committed version plus its predecessor for readers
     // that resolved the pointer just before the flip)

@@ -65,7 +65,7 @@ object EdgeTier {
 
   /** Source identity: (version, per-file name/length/mtime) over the
     * lineitem parquet directory — listing only, nothing read. */
-  private def fingerprint(spark: SparkSession, sfDir: String): String = {
+  private[graft] def fingerprint(spark: SparkSession, sfDir: String): String = {
     val p = new Path(s"$sfDir/lineitem.parquet")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tier.PinOps
-import graft.lake.Layout
+import graft.lake.{Commit, Layout}
 
 /** Day-partitioned event-log maintenance (VERDICT r9 "next" #7) — the
   * 100 TB form of [[EventLogMaintenance]]. The versioned-table cycle
@@ -56,9 +56,6 @@ object PartitionedEventLog {
       droppedDays: Seq[String],   // days expired via manifest edit only
       untouchedDays: Seq[String]) // days whose entries carried forward
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def dayOf(entry: String): String =
     entry.substring("day=".length, entry.indexOf('/'))
 
@@ -66,56 +63,30 @@ object PartitionedEventLog {
     * atomically, so a missing pointer with manifests present means the
     * delete/rename gap — recover from the highest manifest, which only
     * ever exists fully written (write-temp + rename). */
-  def currentVersion(spark: SparkSession, root: String): Long = {
-    val cur = new Path(root, "_current")
-    val f = fs(spark, cur)
-    if (f.exists(cur)) {
-      val in = f.open(cur)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    } else {
-      val mdir = new Path(root, "manifest")
-      if (!f.exists(mdir)) 0L
-      else f.listStatus(mdir).toSeq
-        .map(_.getPath.getName).filter(_.matches("v=\\d+"))
-        .map(_.stripPrefix("v=").toLong).sorted.lastOption.getOrElse(0L)
-    }
-  }
+  def currentVersion(spark: SparkSession, root: String): Long =
+    Commit.pointer(spark, root).getOrElse(
+      Commit.versions(spark, s"$root/manifest").lastOption.getOrElse(0L))
+
+  private def lines(spark: SparkSession, p: Path): Option[Seq[String]] =
+    Commit.read(spark, p).map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
 
   /** The file entries (pool-relative `day=D/name.parquet` paths) of
     * manifest `v`. */
-  def manifest(spark: SparkSession, root: String, v: Long): Seq[String] = {
-    val p = new Path(root, s"manifest/v=$v")
-    val f = fs(spark, p)
-    if (!f.exists(p)) Seq.empty
-    else {
-      val in = f.open(p)
-      try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
-        .map(_.trim).filter(_.nonEmpty)
-      finally in.close()
-    }
-  }
+  def manifest(spark: SparkSession, root: String, v: Long): Seq[String] =
+    lines(spark, new Path(root, s"manifest/v=$v")).getOrElse(Seq.empty)
 
   /** Per-day row counts of the committed snapshot `v` (`manifest/v=N.counts`,
     * `day<TAB>count` lines) — the metadata that makes the next cycle's
     * Report derivable WITHOUT re-reading the whole log (r10 advisor #2:
     * the post-commit expired/retained counts previously full-scanned the
     * previous manifest every cycle, contradicting the "commit cost ∝
-    * batch + one day" claim). Written with the same tmp+rename discipline,
+    * batch + one day" claim). Written with the same atomic commit,
     * BEFORE the manifest, so a committed version always has its counts.
     * None only for a log written before this format existed. */
-  def dayCounts(spark: SparkSession, root: String, v: Long): Option[Map[String, Long]] = {
-    val p = new Path(root, s"manifest/v=$v.counts")
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
-        .map(_.trim).filter(_.nonEmpty)
-        .map { l => val Array(d, c) = l.split("\t"); d -> c.toLong }.toMap)
-      finally in.close()
-    }
-  }
+  def dayCounts(spark: SparkSession, root: String, v: Long): Option[Map[String, Long]] =
+    lines(spark, new Path(root, s"manifest/v=$v.counts")).map(_.map { l =>
+      val Array(d, c) = l.split("\t"); d -> c.toLong
+    }.toMap)
 
   /** The committed snapshot, with `day` as a partition column (prunable).
     * None when nothing has committed or every day has expired. */
@@ -135,8 +106,7 @@ object PartitionedEventLog {
   def runCycle(spark: SparkSession, root: String, batch: DataFrame,
                cutoff: java.sql.Timestamp,
                targetBytes: Long = 64L * 1024 * 1024): Report = {
-    val rootPath = new Path(root)
-    val f = fs(spark, rootPath)
+    val f = Commit.fs(spark, new Path(root))
     f.mkdirs(new Path(root, "data"))
     f.mkdirs(new Path(root, "manifest"))
     val fromV = currentVersion(spark, root)
@@ -246,18 +216,12 @@ object PartitionedEventLog {
     val newDayCounts: Seq[(String, Long)] =
       untouchedDays.map(d => d -> prevCounts.getOrElse(d, 0L)) ++
         rewritten.map(r => r._2 -> r._3)
-    val cTmp = new Path(root, s"manifest/v=$toV.counts.tmp")
-    val cOut = f.create(cTmp, true)
-    try cOut.write(newDayCounts.sortBy(_._1)
-      .map { case (d, c) => s"$d\t$c" }.mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
-    finally cOut.close()
-    graft.lake.Commit.atomicSwap(spark, cTmp,
-      new Path(root, s"manifest/v=$toV.counts"))
-    graft.lake.Commit.atomicWrite(spark, new Path(root, s"manifest/v=$toV"),
+    Commit.atomicWrite(spark, new Path(root, s"manifest/v=$toV.counts"),
+      newDayCounts.sortBy(_._1)
+        .map { case (d, c) => s"$d\t$c" }.mkString("", "\n", "\n"))
+    Commit.atomicWrite(spark, new Path(root, s"manifest/v=$toV"),
       entries.mkString("\n") + "\n")
-    graft.lake.Commit.atomicWrite(spark, new Path(root, "_current"),
-      toV.toString)
+    Commit.flip(spark, root, toV)
 
     // report from committed METADATA (r10 advisor #2): retained = the new
     // counts file; expired existing = dropped days' prior counts + the
@@ -280,11 +244,8 @@ object PartitionedEventLog {
     * `_current` first and the kept window always includes it. */
   def vacuum(spark: SparkSession, root: String, keepVersions: Int = 2): Seq[String] = {
     val cur = currentVersion(spark, root)
-    val f = fs(spark, new Path(root))
-    val mdir = new Path(root, "manifest")
-    if (!f.exists(mdir)) return Nil
-    val versions = f.listStatus(mdir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("v=\\d+")).map(_.stripPrefix("v=").toLong).sorted
+    val f = Commit.fs(spark, new Path(root))
+    val versions = Commit.versions(spark, s"$root/manifest")
     versions.filter(_ <= cur - keepVersions).foreach { v =>
       f.delete(new Path(root, s"manifest/v=$v"), false)
       f.delete(new Path(root, s"manifest/v=$v.counts"), false)

@@ -39,9 +39,6 @@ import org.apache.spark.sql.SparkSession
   * sizing rule, same as probe-side parallelism. */
 object BucketedTable {
 
-  private def hfs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def location(spark: SparkSession, table: String): Path =
     new Path(spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
@@ -50,7 +47,7 @@ object BucketedTable {
     * small-file metric [[compact]] shrinks (spec-asserted). */
   def fileCount(spark: SparkSession, table: String): Long = {
     val loc = location(spark, table)
-    val f = hfs(spark, loc)
+    val f = Commit.fs(spark, loc)
     if (!f.exists(loc)) 0L
     else {
       val it = f.listFiles(loc, true)
@@ -74,9 +71,8 @@ object BucketedTable {
               sortCols: Seq[String] = Nil): (Long, Long) = {
     val oldLoc = location(spark, table)
     val before = fileCount(spark, table)
-    val next = "^v=(\\d+)$".r
-      .findFirstMatchIn(oldLoc.getName.replace(s"${prefix}_", ""))
-      .map(_.group(1).toInt).getOrElse(1) + 1
+    val next = Commit.versionOf(oldLoc.getName.stripPrefix(s"${prefix}_"))
+      .getOrElse(1L) + 1
     val stagedPath = s"$stagingBase/${prefix}_v=$next"
     val stagedTable = s"${table}__compacting"
     val sort = if (sortCols.nonEmpty) sortCols else Seq(bucketCol)
@@ -101,12 +97,9 @@ object BucketedTable {
     // contract never covered. Keep the superseded copy one cycle: vacuum
     // the copy the PREVIOUS compact left behind (recorded in a marker
     // file), then record this cycle's superseded location for the next.
-    val f = hfs(spark, oldLoc)
+    val f = Commit.fs(spark, oldLoc)
     val marker = new Path(stagingBase, s"${prefix}__superseded")
-    if (f.exists(marker)) {
-      val in = f.open(marker)
-      val prior =
-        try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+    Commit.read(spark, marker).foreach { prior =>
       // the marker body is a QUALIFIED uri (oldLoc.toString, e.g.
       // file:/...) — qualify stagedPath the same way or the staged-path
       // guard can never match (ADVICE r13: an unqualified compare made

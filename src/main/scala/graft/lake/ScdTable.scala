@@ -53,37 +53,21 @@ import graft.Tier.PinOps
   */
 object ScdTable {
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def bucketOf(key: String, nBuckets: Int) =
     pmod(xxhash64(col(key)), lit(nBuckets.toLong)).cast("int")
 
   /** Committed version, 0 when never committed (pointer flips atomically). */
-  def currentVersion(spark: SparkSession, path: String): Long = {
-    val cur = new Path(path, "_current")
-    val f = fs(spark, cur)
-    if (!f.exists(cur)) 0L
-    else {
-      val in = f.open(cur)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-  }
+  def currentVersion(spark: SparkSession, path: String): Long =
+    Commit.pointer(spark, path).getOrElse(0L)
 
   /** Table metadata + bucket→version map of manifest `v`. */
   final case class Manifest(key: String, attrs: Seq[String], nBuckets: Int,
                             buckets: Map[Int, Long])
 
   def manifest(spark: SparkSession, path: String, v: Long): Manifest = {
-    val p = new Path(path, s"manifest/v=$v")
-    val f = fs(spark, p)
-    require(f.exists(p), s"scd-table manifest v=$v missing under $path")
-    val in = f.open(p)
-    val lines =
-      try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
-        .map(_.trim).filter(_.nonEmpty)
-      finally in.close()
+    val body = Commit.read(spark, new Path(path, s"manifest/v=$v"))
+    require(body.isDefined, s"scd-table manifest v=$v missing under $path")
+    val lines = body.get.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
     val meta = lines.filter(_.startsWith("#"))
       .map(_.stripPrefix("#").split("=", 2)).map(a => a(0) -> a(1)).toMap
     val pairs = lines.filterNot(_.startsWith("#"))
@@ -95,28 +79,25 @@ object ScdTable {
 
   private def writeManifest(spark: SparkSession, path: String, toV: Long,
                             m: Manifest): Unit = {
-    val f = fs(spark, new Path(path))
-    f.mkdirs(new Path(path, "manifest"))
+    Commit.fs(spark, new Path(path)).mkdirs(new Path(path, "manifest"))
     val body =
       s"#key=${m.key}\n#attrs=${m.attrs.mkString(",")}\n#buckets=${m.nBuckets}\n" +
         m.buckets.toSeq.sorted.map { case (b, v) => s"$b\t$v" }.mkString("\n") + "\n"
     Commit.atomicWrite(spark, new Path(path, s"manifest/v=$toV"), body)
   }
 
-  private def flipPointer(spark: SparkSession, path: String, toV: Long): Unit =
-    Commit.atomicWrite(spark, new Path(path, "_current"), toV.toString)
-
   /** Delete `> current` data/manifest leftovers from a crashed attempt —
     * shared by every writer path so the recovery rule lives in one place. */
   private def clearOrphans(spark: SparkSession, path: String, cur: Long): Unit = {
-    val f = fs(spark, new Path(path))
-    Seq("current", "history", "manifest").foreach { sub =>
-      val dir = new Path(path, sub)
-      if (f.exists(dir)) f.listStatus(dir).foreach { s =>
-        val n = s.getPath.getName
-        val v = n.stripPrefix("v=").stripPrefix("part_v=")
-        if (v.matches("\\d+") && v.toLong > cur) f.delete(s.getPath, true)
-      }
+    val f = Commit.fs(spark, new Path(path))
+    Seq("current", "manifest").foreach { sub =>
+      Commit.versions(spark, s"$path/$sub").filter(_ > cur)
+        .foreach(v => f.delete(new Path(path, s"$sub/v=$v"), true))
+    }
+    val history = new Path(path, "history") // partition dirs `part_v=N`
+    if (f.exists(history)) f.listStatus(history).foreach { s =>
+      if (Commit.versionOf(s.getPath.getName.stripPrefix("part_")).exists(_ > cur))
+        f.delete(s.getPath, true)
     }
   }
 
@@ -137,7 +118,7 @@ object ScdTable {
       .parquet(s"$path/current/v=$toV")
     writeManifest(spark, path, toV,
       Manifest(key, attrs, nBuckets, (0 until nBuckets).map(_ -> toV).toMap))
-    flipPointer(spark, path, toV)
+    Commit.flip(spark, path, toV)
   }
 
   /** The committed current slice — an explicit-path pruned scan of the
@@ -220,7 +201,7 @@ object ScdTable {
       .parquet(s"$path/current/v=$toV")
     writeManifest(spark, path, toV,
       m.copy(buckets = m.buckets ++ touched.map(_ -> toV)))
-    flipPointer(spark, path, toV)
+    Commit.flip(spark, path, toV)
     AdmitReport(toV, touched, expired.count(), opened.count())
   }
 
@@ -230,11 +211,8 @@ object ScdTable {
     * lineage is the point of type 2. */
   def vacuum(spark: SparkSession, path: String, keepVersions: Int = 2): Seq[String] = {
     val cur = currentVersion(spark, path)
-    val f = fs(spark, new Path(path))
-    val mdir = new Path(path, "manifest")
-    if (!f.exists(mdir)) return Nil
-    val versions = f.listStatus(mdir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("v=\\d+")).map(_.stripPrefix("v=").toLong).sorted
+    val f = Commit.fs(spark, new Path(path))
+    val versions = Commit.versions(spark, s"$path/manifest")
     val kept = versions.filter(v => v > cur - keepVersions && v <= cur)
     versions.filterNot(kept.contains)
       .foreach(v => f.delete(new Path(path, s"manifest/v=$v"), false))
@@ -243,20 +221,14 @@ object ScdTable {
     val referenced: Set[(Long, Int)] = kept.flatMap { v =>
       manifest(spark, path, v).buckets.toSeq.map { case (bk, bv) => (bv, bk) }
     }.toSet
-    val cdir = new Path(path, "current")
-    if (!f.exists(cdir)) return Nil
-    val removed = f.listStatus(cdir).toSeq.filter(_.isDirectory).flatMap { vd =>
-      val vn = vd.getPath.getName
-      if (!vn.matches("v=\\d+")) Nil
-      else {
-        val v = vn.stripPrefix("v=").toLong
-        f.listStatus(vd.getPath).toSeq.filter(_.isDirectory).flatMap { bd =>
+    val removed = Commit.versions(spark, s"$path/current").flatMap { v =>
+      f.listStatus(new Path(path, s"current/v=$v")).toSeq.filter(_.isDirectory)
+        .flatMap { bd =>
           val bn = bd.getPath.getName
           if (!bn.matches("bucket=\\d+")) None
           else if (referenced.contains((v, bn.stripPrefix("bucket=").toInt))) None
-          else { f.delete(bd.getPath, true); Some(s"$vn/$bn") }
+          else { f.delete(bd.getPath, true); Some(s"v=$v/$bn") }
         }
-      }
     }
     removed.sorted
   }

@@ -1,6 +1,7 @@
 package graft.sim
 
 import graft.Tier.PinOps
+import graft.lake.Commit
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -60,9 +61,6 @@ import org.apache.spark.sql.functions._
   */
 object IvfPqIndex {
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The committed version, or 0 when nothing has committed yet. Version
     * directories become visible only through the atomic pointer flip.
     *
@@ -79,23 +77,10 @@ object IvfPqIndex {
     * signal available once the pointer itself is gone, and serving the
     * newest complete build beats serving nothing. */
   def currentVersion(spark: SparkSession, path: String): Long = {
-    val cur = new Path(path, "_current")
-    val f = fs(spark, cur)
-    if (f.exists(cur)) {
-      val in = f.open(cur)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    } else {
-      val root = new Path(path)
-      if (!f.exists(root)) 0L
-      else f.listStatus(root).iterator.collect {
-        case s if s.isDirectory && s.getPath.getName.startsWith("v=") =>
-          s.getPath.getName.stripPrefix("v=")
-      }.flatMap(n => scala.util.Try(n.toLong).toOption)
-        .filter(v => f.exists(
-          new Path(partDir(path, v, "codebooks"), "_SUCCESS")))
-        .foldLeft(0L)(math.max)
-    }
+    val f = Commit.fs(spark, new Path(path))
+    Commit.pointer(spark, path).getOrElse(Commit.versions(spark, path,
+      v => f.exists(new Path(partDir(path, v, "codebooks"), "_SUCCESS")))
+      .lastOption.getOrElse(0L))
   }
 
   private def partDir(path: String, v: Long, part: String): String =
@@ -111,9 +96,8 @@ object IvfPqIndex {
             rounds: Int = 2, kmRounds: Int = 3, dim: Int = 64): Unit = {
     val spark = embeddings.sparkSession
     val next = currentVersion(spark, path) + 1
-    val root = new Path(path)
-    val f = fs(spark, root)
-    f.mkdirs(root)
+    val f = Commit.fs(spark, new Path(path))
+    f.mkdirs(new Path(path))
     // clear the orphan of any crashed prior attempt at this version
     // (invisible to readers, but the writes below must not merge with it)
     f.delete(new Path(path, s"v=$next"), true)
@@ -133,15 +117,14 @@ object IvfPqIndex {
     // the swap is ONE overwrite-rename (graft.lake.Commit — atomic on
     // HDFS and posix), never delete-then-rename: a crash can leave only
     // the old pointer or the new one, not a missing pointer
-    graft.lake.Commit.atomicWrite(spark, new Path(path, "_current"),
-      next.toString)
+    Commit.flip(spark, path, next)
     // the maintenance denominator: how many vectors the quantizers were
     // TRAINED on. Committed AFTER the pointer: a crash between the two
     // leaves a fresh version with a stale (smaller) base, which inflates
     // the admitted fraction and at worst triggers one spurious rebuild —
     // the self-healing failure direction (a too-large base would instead
     // silently mute the drift policy).
-    graft.lake.Commit.atomicWrite(spark, new Path(path, "_base_count"),
+    Commit.atomicWrite(spark, new Path(path, "_base_count"),
       resid.count().toString)
     // retire the superseded version: readers that resolved the pointer
     // just before the flip may still be scanning N−1, so keep one back
@@ -213,28 +196,12 @@ object IvfPqIndex {
   def admitBatch(spark: SparkSession, batch: DataFrame, path: String,
                  batchId: Long, m: Int = 4, dim: Int = 64): Long = {
     val ledger = new Path(path, "_admit_ledger")
-    val f = fs(spark, ledger)
-    val last =
-      if (!f.exists(ledger)) -1L
-      else {
-        val in = f.open(ledger)
-        try new String(in.readAllBytes(), "UTF-8").trim.toLong
-        finally in.close()
-      }
+    val last = Commit.read(spark, ledger).map(_.toLong).getOrElse(-1L)
     if (batchId <= last) 0L
     else {
       val n = admit(spark, batch, path, m, dim)
-      graft.lake.Commit.atomicWrite(spark, ledger, batchId.toString)
+      Commit.atomicWrite(spark, ledger, batchId.toString)
       n
-    }
-  }
-
-  private def readCount(spark: SparkSession, p: Path): Long = {
-    val f = fs(spark, p)
-    if (!f.exists(p)) 0L
-    else {
-      val in = f.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
     }
   }
 
@@ -260,7 +227,8 @@ object IvfPqIndex {
                       rounds: Int = 2, kmRounds: Int = 3,
                       dim: Int = 64): Boolean = {
     val v = currentVersion(spark, path)
-    val base = readCount(spark, new Path(path, "_base_count"))
+    val base = Commit.read(spark, new Path(path, "_base_count"))
+      .map(_.toLong).getOrElse(0L)
     val indexed = spark.read.parquet(partDir(path, v, "codes"))
       .select(col("vec_id")).count()
     val drifted = base <= 0 ||

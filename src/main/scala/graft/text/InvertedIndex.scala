@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.Tier.PinOps
+import graft.lake.Commit
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -35,10 +36,11 @@ import org.apache.spark.sql.functions._
   * dedupAppend exactly-once contract) and roll the stats sidecar one
   * version forward with the batch's exact integer deltas. Cost ∝ batch.
   * Stats versions follow the ComponentsIndex crash rule: each admission
-  * WRITES `v=N+1` and deletes nothing, readers take the highest
-  * `_SUCCESS`-complete version, so a crashed admission leaves either no
-  * new version (invisible) or a complete one (adopted) — never a torn
-  * read. Postings appended before the stats flip may be visible to a
+  * WRITES `v=N+1`, readers take the highest `_SUCCESS`-complete version,
+  * so a crashed admission leaves either no new version (invisible) or a
+  * complete one (adopted) — never a torn read. After the write, complete
+  * versions before `N` are deleted, so two remain however many admits.
+  * Postings appended before the stats flip may be visible to a
   * concurrent probe one stats-version early: BM25 with slightly-stale
   * GLOBAL stats is the standard serving tradeoff (df is always
   * probe-fresh; only n_docs/avgdl lag one admission).
@@ -65,29 +67,20 @@ object InvertedIndex {
       .select(size(TextAnalysis.tokens(col("text"))).cast("bigint").as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
 
-  private def hfs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def statsComplete(spark: SparkSession, statsPath: String)(v: Long) =
+    Commit.fs(spark, new Path(statsPath))
+      .exists(new Path(statsPath, s"v=$v/_SUCCESS"))
 
-  private def versionOf(name: String): Option[Int] =
-    "^v=(\\d+)$".r.findFirstMatchIn(name).map(_.group(1).toInt)
-
-  /** Highest `_SUCCESS`-complete stats version (0 when none) — listed
-    * through the path's Hadoop FileSystem (never `java.io.File`: the
-    * index lives on HDFS/S3 at deployment scale, where a local-file
-    * listing would silently resolve to version 0). */
-  private def currentStatsVersion(spark: SparkSession, statsPath: String): Int = {
-    val p = new Path(statsPath)
-    val f = hfs(spark, p)
-    if (!f.exists(p)) 0
-    else f.listStatus(p)
-      .filter(s => s.isDirectory && f.exists(new Path(s.getPath, "_SUCCESS")))
-      .flatMap(s => versionOf(s.getPath.getName))
-      .sorted.lastOption.getOrElse(0)
-  }
+  /** Highest `_SUCCESS`-complete stats version (0 when none). */
+  private def currentStatsVersion(spark: SparkSession, statsPath: String): Long =
+    Commit.versions(spark, statsPath, statsComplete(spark, statsPath))
+      .lastOption.getOrElse(0L)
 
   private def writeStats(stats: DataFrame, statsPath: String): Unit = {
-    val next = currentStatsVersion(stats.sparkSession, statsPath) + 1
+    val spark = stats.sparkSession
+    val next = currentStatsVersion(spark, statsPath) + 1
     stats.coalesce(1).write.mode("overwrite").parquet(s"$statsPath/v=$next")
+    Commit.retire(spark, statsPath, statsComplete(spark, statsPath))
   }
 
   private def readStats(spark: SparkSession, statsPath: String): DataFrame =

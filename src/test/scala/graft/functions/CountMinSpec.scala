@@ -75,4 +75,36 @@ class CountMinSpec extends SparkSpec {
       ()
     }
   }
+
+  test("standing sketch: each admission retires all but the last two complete versions") {
+    val stage = java.nio.file.Files
+      .createTempDirectory("graft-cms-retire").toFile.getAbsolutePath
+    try {
+      val batches = Seq(Seq("a", "b"), Seq("a"), Seq("c", "a"), Seq("b"), Seq("a", "d"))
+      def versions = new java.io.File(stage).list()
+        .filter(_.startsWith("v=")).sorted.toSeq
+      batches.zipWithIndex.foreach { case (b, i) =>
+        assert(CountMin.admit(spark, b.toDF("term"), "term", stage, batchId = i.toLong))
+      }
+      assert(versions == Seq("v=4", "v=5"), s"versions left: $versions")
+      // a torn directory (no _SUCCESS) is neither read nor retired
+      new java.io.File(s"$stage/v=2").mkdirs()
+      assert(CountMin.admit(spark, Seq("e").toDF("term"), "term", stage, batchId = 5L))
+      assert(versions == Seq("v=2", "v=5", "v=6"), s"versions left: $versions")
+      assert(CountMin.currentVersion(spark, stage) == 6L)
+      assert(!CountMin.admit(spark, Seq("a").toDF("term"), "term", stage, batchId = 4L))
+      val est = CountMin.estimate(
+          CountMin.readStanding(spark, stage),
+          Seq("a", "b", "c", "d", "e").toDF("term"), "term")
+        .as[(String, Long)].collect().toMap
+      // five keys over d=4 rows of w=1024 cells: no collisions, so the
+      // estimates are the exact counts over every admitted batch
+      assert(est == (batches.flatten :+ "e").groupBy(identity)
+          .map { case (k, v) => k -> v.size.toLong },
+        s"standing-sketch estimates drifted: $est")
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(stage)).deleteRecursively()
+      ()
+    }
+  }
 }

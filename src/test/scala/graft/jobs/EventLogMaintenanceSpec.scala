@@ -112,6 +112,21 @@ class EventLogMaintenanceSpec extends SparkSpec {
     assert(EventLogMaintenance.read(spark, root).get.count() > 0)
   }
 
+  test("a stray v=tmp directory is skipped by vacuum and by missing-pointer recovery") {
+    val root = newRoot()
+    (1 to 3).foreach(i =>
+      EventLogMaintenance.runCycle(spark, root, batch(i * 10 to i * 10 + 5, day = 15), cutoff))
+    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stray = new Path(root, "v=tmp")
+    f.mkdirs(stray)
+    f.create(new Path(stray, "part-operator-copy.parquet"), true).close()
+    assert(EventLogMaintenance.vacuum(spark, root, keepVersions = 2) == Seq(1L))
+    f.delete(new Path(root, "_current"), false)
+    assert(EventLogMaintenance.currentVersion(spark, root) == 3L)
+    assert(EventLogMaintenance.read(spark, root).get.count() == 18L)
+    assert(f.exists(new Path(stray, "part-operator-copy.parquet")))
+  }
+
   test("committed layout: single compacted file at test scale, z-clustered rows") {
     val root = newRoot()
     val r = EventLogMaintenance.runCycle(spark, root,

@@ -82,6 +82,27 @@ class InvertedIndexSpec extends SparkSpec {
     }
   }
 
+  test("each stats commit retires all but the last two complete versions; a torn one stays") {
+    val docs = Tables.documents(spark, sf)
+    def part(r: Int) = docs.filter(pmod(col("doc_id"), lit(4)) === r)
+    staged { (table, stage) =>
+      InvertedIndex.build(part(0), table, stage)
+      assert(new java.io.File(s"$stage/stats/v=99").mkdirs())
+      (1 to 3).foreach(r => assert(InvertedIndex.admit(spark, part(r), table, stage) > 0L))
+      val left = new java.io.File(s"$stage/stats").list()
+        .filter(_.startsWith("v=")).sorted.toSeq
+      assert(left == Seq("v=3", "v=4", "v=99"), s"stats versions left: $left")
+      val probe = InvertedIndex.probe(spark, table, stage, terms)
+        .as[(Long, Long, Double)].collect().toSeq
+      staged { (table2, stage2) =>
+        InvertedIndex.build(docs, table2, stage2)
+        val full = InvertedIndex.probe(spark, table2, stage2, terms)
+          .as[(Long, Long, Double)].collect().toSeq
+        assert(probe == full, s"admitted diverged from rebuilt:\n$probe\nvs\n$full")
+      }
+    }
+  }
+
   test("compact: probe-identical, one file per bucket, pruning survives, admits stay flat") {
     val docs = Tables.documents(spark, sf)
     staged { (table, stage) =>
