@@ -119,12 +119,10 @@ object YouTube {
       .withColumn("influence_score", round(col("pagerank"), 6))
       .orderBy(col("influence_score").desc, col("id")).limit(k)
     // k keys prune the videos scan and the join runs on the driver over
-    // ≤k rows — never the full videos table (7.7M rows at reference scale)
-    graft.ops.Joins.enrichWithPrunedDim(top, videos.select(col("id"), col("uploader")), "id")
-      // k-row input by construction — single-task global rank window is intent
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("influence_score").desc, col("id"))).cast("bigint"))
+    // ≤k rows — never the full videos table (7.7M rows at reference
+    // scale); the local result keeps the top-k order, numbered on the driver
+    PageRankOp.numbered(graft.ops.Joins.enrichWithPrunedDim(
+        top, videos.select(col("id"), col("uploader")), "id"))
       .select(col("rank"), col("id").as("ID"), col("influence_score"), col("uploader"))
   }
 

@@ -1,9 +1,10 @@
 package graft.graph
 
 import graft.Tier.PinOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** PageRank — SURVEY.md §2.8 G3 (`PageRank_Spark_v5.py:102`:
   * `g.pageRank(resetProbability=0.15, maxIter=10)`).
@@ -13,28 +14,40 @@ import org.apache.spark.sql.functions._
   * removed upstream, duplicate edges kept (multi-edges weight the walk),
   * GraphFrames/GraphX normalization (scores sum ≈ vertex count, not 1.0).
   *
-  * Execution: edge preparation (out-degree weights, vertex sets, seed
-  * flags) is DataFrame work, so scans stay pruned/pushed; the rounds run
-  * in [[rankFixpoint]]. While the rank state fits the [[Fixpoint]]
-  * broadcast budget it stays on the driver ([[RankKernel]]): the edges are
-  * packed once and each round is one Spark job. Past the budget each round
+  * Execution: every entry point hands [[rankFixpoint]] raw edges (src,
+  * dst, wt — wt ≡ 1.0 for the uniform walk) and a vertex table whose one
+  * hash aggregate also yields each vertex's out-weight Σ wt, so scans
+  * stay pruned/pushed. While the rank state fits the [[Fixpoint]]
+  * broadcast budget it stays on the driver ([[RankKernel]]): the kernel
+  * divides each edge's wt by its source's out-weight, packs the edges
+  * once and runs each round as one Spark job. Past the budget each round
   * is one DataFrame join plus aggregate on the shared [[Fixpoint]]
   * scaffolding, lineage pinned every 3rd round and the last. Ids of any
   * type run unmapped.
   */
 object PageRankOp {
 
-  /** Uniform transition weight 1/outDeg(src) from ONE window count over the
-    * src-partitioned edges (r16, guide §2.4 "share the exchange"): an
-    * outDeg aggregate + equi-join + repartition(src) spent two exchanges
-    * to land in the partitioning the window's single shuffle establishes
-    * — measured 0.44 s vs 1.13 s at sf0.1 (2.4M edges). */
-  private val outShare: Column =
-    lit(1.0) / count(lit(1)).over(Window.partitionBy(col("src")))
-
-  /** Distinct endpoints of an (src, dst) edge list. */
+  /** The vertices of an (src, dst, wt) edge list — its distinct endpoints
+    * — each with its out-weight `outw` = Σ wt over its out-edges (null for
+    * a vertex with none), in ONE hash aggregate. */
   private def endpoints(e: DataFrame): DataFrame =
-    e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
+    e.select(explode(array(
+        struct(col("src").as("id"), col("wt").as("w")),
+        struct(col("dst").as("id"), lit(null).cast("double").as("w")))).as("v"))
+      .groupBy(col("v.id").as("id")).agg(sum(col("v.w")).as("outw"))
+
+  /** An (src, dst) edge list as the uniform walk's raw edges. */
+  private def uniform(e: DataFrame): DataFrame =
+    e.select(col("src"), col("dst"), lit(1.0).as("wt"))
+
+  /** `top`'s ≤k rows, collected in their order, with `rank` 1..k appended:
+    * a local frame, numbered on the driver. */
+  private[graft] def numbered(top: DataFrame): DataFrame = {
+    val rows = top.collect()
+    top.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.indices.map(i => Row.fromSeq(rows(i).toSeq :+ (i + 1L))): _*),
+      top.schema.add(StructField("rank", LongType, nullable = false)))
+  }
 
   /** Core fixpoint: rank'(v) = resetProb + (1−resetProb) ·
     * Σ_{u→v} rank(u)/outDeg(u), `numIter` rounds from rank=1.0 — exactly
@@ -54,9 +67,14 @@ object PageRankOp {
                numIter: Int = 10, resetProb: Double = 0.15,
                init: Option[DataFrame] = None): DataFrame = {
     // `init` (id, rank) warm-starts the fixpoint from prior rank state
-    // (see [[resumeLongIds]])
-    val ew = edges.select(col("src"), col("dst"), outShare.as("w"))
-    fixpointSumToN(vertices, ew, numIter, resetProb, "pagerank", init)
+    // (see [[resumeLongIds]]). The declared ids with their out-degrees,
+    // in one aggregate over them and the edge sources
+    val v = vertices.select(col("id"), lit(null).cast("double").as("wt"), lit(true).as("decl"))
+      .unionByName(edges.select(col("src").cast(vertices.schema("id").dataType).as("id"),
+        lit(1.0).as("wt"), lit(false).as("decl")))
+      .groupBy(col("id")).agg(sum(col("wt")).as("outw"), max(col("decl")).as("decl"))
+      .filter(col("decl")).drop("decl")
+    fixpointSumToN(v, uniform(edges), numIter, resetProb, "pagerank", init)
   }
 
   /** Weighted PageRank: rank'(v) = resetProb + (1−resetProb) ·
@@ -65,8 +83,9 @@ object PageRankOp {
     * edge equally; [[pageRank]] is the w ≡ 1 special case. Same fixpoint
     * scaffolding and sum-to-N normalization; only the transition matrix
     * changes. The gate feeds integer counts carried in doubles, so its
-    * per-source weight sums are exact (order-independent below 2^53) and
-    * both engines divide identical numerators by identical denominators.
+    * per-source weight sums (the vertex aggregate's `outw`) are exact
+    * (order-independent below 2^53) and both engines divide identical
+    * numerators by identical denominators.
     * FRACTIONAL weights are accepted but carry the standard float-sum
     * caveat (ADVICE r16): a partition-local sum over non-integral doubles
     * is accumulation-order-sensitive in the last ulp, and the round(6)
@@ -77,25 +96,15 @@ object PageRankOp {
                        numIter: Int = 10, resetProb: Double = 0.15): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
       col("weight").cast("double").as("wt")).pinTier
-    val verts = endpoints(e)
-    // per-source weight mass via ONE window sum over the src-partitioned
-    // edges (the r16 pageRank ew rule — the join + repartition spent two
-    // exchanges to reach the window's partitioning). Weights are integer
-    // counts in doubles, so the window's partition-local sum equals the
-    // old aggregate's bit-for-bit (exact below 2^53, any order); the
-    // outw > 0 guard survives as a filter for the degenerate all-zero
-    // source a caller could feed (the old inner join dropped it).
-    val ew = e.select(col("src"), col("dst"), col("wt"),
-        sum(col("wt")).over(Window.partitionBy(col("src"))).as("outw"))
-      .filter(col("outw") > 0.0)
-      .select(col("src"), col("dst"), (col("wt") / col("outw")).as("w"))
-    fixpointSumToN(verts, ew, numIter, resetProb, "wpagerank")
+    // the per-source weight mass W_u rides the vertex aggregate; an
+    // all-zero source a caller could feed carries no rank
+    fixpointSumToN(endpoints(e), e, numIter, resetProb, "wpagerank")
   }
 
-  /** The shared rank fixpoint over a prepared transition-weight edge list
-    * `ew` (src, dst, w with Σ_out w = 1 per non-sink source), followed by
-    * the GraphX sum-to-N normalization. Runs eagerly. */
-  private def fixpointSumToN(vertices: DataFrame, ew: DataFrame,
+  /** The shared rank fixpoint over raw edges (src, dst, wt) and the
+    * distinct vertex table `vertices` (id, outw), followed by the GraphX
+    * sum-to-N normalization. Runs eagerly. */
+  private def fixpointSumToN(vertices: DataFrame, edges: DataFrame,
                              numIter: Int, resetProb: Double,
                              tag: String,
                              init0: Option[DataFrame] = None): DataFrame = {
@@ -107,48 +116,60 @@ object PageRankOp {
       s"fixpointSumToN: need numIter >= 0, got numIter=$numIter")
     // A warm start (`init0`) seeds known vertices from prior rank state;
     // vertices the prior state never saw start at the cold 1.0.
-    val ids = vertices.select(col("id")).distinct()
     val init = (init0 match {
-      case Some(r0) => ids
+      case Some(r0) => vertices
         .join(r0.select(col("id"), col("rank").as("__r0")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__r0"), lit(1.0)).as("rank"))
-      case None => ids.select(col("id"), lit(1.0).as("rank"))
+        .select(col("id"), col("outw"), coalesce(col("__r0"), lit(1.0)).as("rank"))
+      case None => vertices.select(col("id"), col("outw"), lit(1.0).as("rank"))
     }).pinTier
-    rankFixpoint(ew, init, numIter, resetProb, lit(resetProb), col("rank"),
+    rankFixpoint(edges, init, numIter, resetProb, lit(resetProb), col("rank"),
       normalize = true, tag) { (edges, ranks0) =>
-      edges.join(ranks0.withColumnRenamed("id", "src"), Seq("src"))
+      // state on the left: on equal size estimates Catalyst builds the
+      // right side, here the cached edges
+      ranks0.withColumnRenamed("id", "src").join(edges, Seq("src"))
         .select(col("dst"), (col("w") * col("rank")).as("wc"))
     }.withColumnRenamed("rank", "pagerank")
   }
 
   /** The rank recurrence [[pageRank]] and [[personalizedPageRank]] share,
-    * over the transition-weight edges `ew` and the pinned vertex state
-    * `init` (id plus the columns `reset` and `rank0` read):
-    * rank_i(v) = reset(v) + (1−resetProb)·contrib_i(v) with
-    * contrib_i(v) = Σ_{u→v} w_uv·rank_{i−1}(u) and rank_0 = `rank0`.
+    * over the raw edges `edges` (src, dst, wt) and the pinned vertex state
+    * `init` (id, the out-weight outw = Σ_out wt, plus the columns `reset`
+    * and `rank0` read): rank_i(v) = reset(v) + (1−resetProb)·contrib_i(v)
+    * with contrib_i(v) = Σ_{u→v} w_uv·rank_{i−1}(u), w_uv = wt_uv / outw(u)
+    * and rank_0 = `rank0`.
     * Returns (id, rank) for every vertex of `init` — rank_0 at numIter = 0
     * — scaled to sum to the vertex count when `normalize` is set (GraphX/
     * GraphFrames normalize so; dangling vertices leak rank mass otherwise,
     * SURVEY.md §2.8: the reference's top score 442.8 ≫ 1 comes from
     * exactly this normalization).
     *
-    * While `init` fits the [[Fixpoint]] budget, the state stays on the
-    * driver: [[RankKernel]] packs the edges once and runs one Spark job per
-    * round, and the result is a local frame, so top-K and enrichment
-    * downstream need no shuffle. Past the budget the rounds are DataFrame
-    * rounds, see [[shuffleRounds]]. */
-  private def rankFixpoint(ew: DataFrame, init: DataFrame, numIter: Int,
+    * While the state fits the [[Fixpoint]] budget, it stays on the
+    * driver: [[RankKernel]] derives the weights from `outw`, packs the
+    * edges once and runs one Spark job per round, and the result is a
+    * local frame, so top-K and enrichment downstream need no shuffle. Past
+    * the budget the rounds are DataFrame rounds, see [[shuffleRounds]],
+    * over weights from ONE window sum over the src-partitioned edges: the
+    * rounds join on src, the partitioning that window's single shuffle
+    * establishes (r16, guide §2.4 "share the exchange"); `srcCols` adds
+    * the source-vertex columns the rounds' `reset` reads to those edges. */
+  private def rankFixpoint(edges: DataFrame, init: DataFrame, numIter: Int,
                            resetProb: Double, reset: Column, rank0: Column,
-                           normalize: Boolean, tag: String)
+                           normalize: Boolean, tag: String,
+                           srcCols: DataFrame => DataFrame = identity)
                           (round1: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     // the count reads init's pinned partitions: near-free
     val nVerts = init.count()
-    if (Fixpoint.fits(init, nVerts, tag))
-      RankKernel.run(ew, init, numIter, resetProb, reset, rank0, normalize)
+    val state = init.drop("outw")
+    if (Fixpoint.fits(state, nVerts, tag))
+      RankKernel.run(edges, init, numIter, resetProb, reset, rank0, normalize)
     else {
       // a null src never matches a vertex: without the filter the rounds'
       // LEFT join would turn its edges into flows of the reset term
-      val ranks = shuffleRounds(ew.filter(col("src").isNotNull).cache(), init,
+      val ew = edges.select(col("src"), col("dst"), col("wt"),
+          sum(col("wt")).over(Window.partitionBy(col("src"))).as("outw"))
+        .filter(col("outw") > 0.0 && col("src").isNotNull)
+        .select(col("src"), col("dst"), (col("wt") / col("outw")).as("w"))
+      val ranks = shuffleRounds(srcCols(ew).cache(), state,
         nVerts, numIter, resetProb, reset, rank0)(round1)
       // rank state lives in localCheckpoints, which the ContextCleaner
       // reclaims once the returned frame is dropped
@@ -196,18 +217,22 @@ object PageRankOp {
 
   /** PageRank over an edge list with numeric ids (vertex set = edge
     * endpoints, mirroring GraphX `Graph.fromEdges`). One aggregate over
-    * the pinned edge list yields the distinct endpoints; the transition
-    * weights come from [[pageRank]]'s window count (r16 — the degree
-    * table this used to pre-aggregate fed only the old ew join). */
+    * the pinned edge list yields the distinct endpoints and their
+    * out-degrees, from which the kernel derives the transition weights. */
   def runLongIds(spark: SparkSession, edges: DataFrame,
-                 numIter: Int = 10, resetProb: Double = 0.15): DataFrame = {
+                 numIter: Int = 10, resetProb: Double = 0.15): DataFrame =
+    runEndpoints(edges, numIter, resetProb, None)
+
+  /** [[runLongIds]] and [[resumeLongIds]]: the uniform walk over the
+    * endpoints of `edges`, optionally warm-started from `init`. */
+  private def runEndpoints(edges: DataFrame, numIter: Int, resetProb: Double,
+                           init: Option[DataFrame]): DataFrame = {
     // pinned, not cached: the edge lineage (often a co-occurrence self-join)
     // must compute exactly once, and the truncated lineage keeps the
     // 10-round plans small
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val e = uniform(edges.select(col("src").cast("long"), col("dst").cast("long")))
       .pinTier
-    val verts = endpoints(e)
-    pageRank(verts, e, numIter, resetProb)
+    fixpointSumToN(endpoints(e), e, numIter, resetProb, "pagerank", init)
   }
 
   /** INCREMENTAL PageRank — the admission path of the standing edge tier
@@ -224,13 +249,9 @@ object PageRankOp {
     * FULL oracle, not a tolerance promise). */
   def resumeLongIds(spark: SparkSession, edges: DataFrame,
                     prevRanks: DataFrame, extraIter: Int = 3,
-                    resetProb: Double = 0.15): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .pinTier
-    val verts = endpoints(e)
-    pageRank(verts, e, extraIter, resetProb,
-      init = Some(prevRanks.select(col("id"), col("pagerank").as("rank"))))
-  }
+                    resetProb: Double = 0.15): DataFrame =
+    runEndpoints(edges, extraIter, resetProb,
+      Some(prevRanks.select(col("id"), col("pagerank").as("rank"))))
 
   /** Personalized PageRank: the teleport mass returns to a SEED SET
     * instead of every vertex — rank'(v) = resetProb·1[v∈S] + (1−resetProb)
@@ -241,41 +262,37 @@ object PageRankOp {
     * vertices, and the raw score IS the seed-affinity). The same rank
     * recurrence as [[pageRank]] ([[rankFixpoint]]); the oracle
     * unrolls the identical recurrence with a seed-conditional reset term.
-    * Returns the top-k by score with a rank column. */
+    * Returns the top-k by score with a rank column, numbered on the driver
+    * ([[numbered]]). */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            numIter: Int = 10, resetProb: Double = 0.15,
                            k: Int = 100): DataFrame = {
     require(numIter >= 1,
       s"personalizedPageRank: need numIter >= 1, got numIter=$numIter")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long")).pinTier
-    // transition weights from the single window count (the r16 pageRank
-    // ew rule), with the SOURCE's seed flag riding the cached edge row —
-    // one broadcast join at prep, so the per-round fold needs no seed
-    // lookup at all
-    val ew = e.select(col("src"), col("dst"), outShare.as("w"))
-      .join(broadcast(seeds.select(col("id").as("src"), lit(1).as("s"))),
-        Seq("src"), "left")
-      .select(col("src"), col("dst"), col("w"),
-        coalesce(col("s"), lit(0)).cast("double").as("seed"))
+    val e = uniform(edges.select(col("src").cast("long"), col("dst").cast("long")))
+      .pinTier
     // seed flag rides the vertex state (one broadcast join, not per-round)
     val init = endpoints(e)
       .join(broadcast(seeds.select(col("id"), lit(1).as("s"))), Seq("id"), "left")
-      .select(col("id"), coalesce(col("s"), lit(0)).cast("double").as("seed"))
+      .select(col("id"), col("outw"), coalesce(col("s"), lit(0)).cast("double").as("seed"))
       .pinTier
-    // rank₀ = 1[v∈S] = the source's seed flag, so a DataFrame round 1
-    // folds straight off the cached edges with no state join at all
-    val ranks = rankFixpoint(ew, init, numIter, resetProb,
-      lit(resetProb) * col("seed"), col("seed"), normalize = false, "ppr") { (edges, _) =>
-      edges.select(col("dst"), (col("w") * col("seed")).as("wc"))
+    // past the budget the SOURCE's seed flag rides the cached edge row —
+    // one broadcast join at prep, so the per-round fold needs no seed
+    // lookup; rank₀ = 1[v∈S] = that flag, so round 1 folds straight off
+    // the cached edges with no state join at all
+    def seedOfSrc(ew: DataFrame) = ew
+      .join(broadcast(seeds.select(col("id").as("src"), lit(1).as("s"))), Seq("src"), "left")
+      .select(col("src"), col("dst"), col("w"),
+        coalesce(col("s"), lit(0)).cast("double").as("seed"))
+    val ranks = rankFixpoint(e, init, numIter, resetProb, lit(resetProb) * col("seed"),
+        col("seed"), normalize = false, "ppr", seedOfSrc) { (ew, _) =>
+      ew.select(col("dst"), (col("w") * col("seed")).as("wc"))
     }
-    val top = ranks
+    numbered(ranks
       .select(col("id"), round(col("rank"), 6).as("ppr"))
       .filter(col("ppr") > 0.0)
       .orderBy(col("ppr").desc, col("id"))
-      .limit(k)
-    top.withColumn("rank",
-        row_number().over(Window
-          .orderBy(col("ppr").desc, col("id"))).cast("bigint"))
+      .limit(k))
       .select(col("rank"), col("id"), col("ppr"))
   }
 
@@ -294,9 +311,8 @@ object PageRankOp {
                       numIter: Int = 10, resetProb: Double = 0.15): DataFrame = {
     val v = vertices.select(col("id")).distinct().pinTier
     // pin the filtered edge list: both semi-joins run once, eagerly, and
-    // pageRank's out-degree window (its single read, cached as the
-    // weighted edges) starts from truncated lineage instead of the
-    // upstream edge pipeline
+    // pageRank's vertex aggregate and edge packing start from truncated
+    // lineage instead of the upstream edge pipeline
     val e = edges
       .join(v.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
       .join(v.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
@@ -318,7 +334,7 @@ object PageRankOp {
     * enrichment `run_pagerank_job.py:124-140`): rank all vertices, take the
     * top K (TakeOrderedAndProject — no global sort), enrich the K-row result
     * against the dimension table (replacing K driver-side point lookups),
-    * and assign dense rank numbers. Enrichment goes through
+    * and number the rows on the driver ([[numbered]]). Enrichment goes through
     * [[graft.ops.Joins.enrichWithPrunedDim]]: the K keys prune the dim
     * scan and the join runs on the driver over O(K) rows — the full dim is
     * never shipped anywhere. Output schema mirrors
@@ -336,12 +352,8 @@ object PageRankOp {
       .withColumn("influence_score", round(col("pagerank"), 6))
       .orderBy(col("influence_score").desc, col("id"))
       .limit(k)
-    graft.ops.Joins.enrichWithPrunedDim(top, dim, "id")
-      // k-row input by construction — the unpartitioned window is a single
-      // task over ≤k rows, which is the intent (a global rank number).
-      .withColumn("rank",
-        row_number().over(Window
-          .orderBy(col("influence_score").desc, col("id"))).cast("bigint"))
+    // the enrichment keeps the top-k's (score desc, id) order
+    numbered(graft.ops.Joins.enrichWithPrunedDim(top, dim, "id"))
       .drop("pagerank")
   }
 }
